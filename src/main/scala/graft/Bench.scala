@@ -121,17 +121,23 @@ object Bench {
     results("extract") = tExtract
     HEADLINE.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
+        // a failing query fails the run under its name: no stand-in value
+        // that the total would silently drop
         results(name) =
           try {
             time { fn(spark, sfDir).count() } // warm-up run (discarded)
             // min of 3: bursty external load only ever adds time
             (1 to 3).map(_ => time { fn(spark, sfDir).count() }).min
-          } catch { case _: Throwable => -1.0 }
+          } catch {
+            case e: Exception =>
+              spark.stop()
+              throw new RuntimeException(s"bench query $name failed", e)
+          }
       }
     }
 
     val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
+    val total = results.values.sum
     println(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"extract_pages":$nPages,"extract_docs_per_sec":$docsPerSec%.1f,"extract_reps_sec":$repsJson,"extract_median_sec":$tExtractMedian%.3f}""")
     spark.stop()

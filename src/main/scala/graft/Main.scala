@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object Main {
   def main(args: Array[String]): Unit = {
     val minArgs =
-      if (args.nonEmpty && Set("profile", "scale", "mat-bench", "explain",
+      if (args.nonEmpty && Set("scale", "explain",
         "compact", "vacuum", "history", "changes", "soak", "tags", "meta",
         "bloomindex", "graph-soak", "mirror-soak", "meta-soak", "doctor").contains(args(0))) 2
       else if (args.nonEmpty && Set("extract-incr", "upsert-stream").contains(args(0))) 4
@@ -35,7 +35,7 @@ object Main {
           "upsert-stream <srcDir> <tableDir> <ckpt> | " +
           "compact <tableDir> | vacuum <tableDir> [minAgeHours] | doctor <tableDir> [--deep] | history <tableDir> | meta <tableDir> [snapshots|files|refs] | rollback <tableDir> <version> | tag <tableDir> <name> [version] | untag <tableDir> <name> | tags <tableDir> | clone <srcDir> <dstDir> [version|tag] | rebucket <tableDir> <newBuckets> | export-hf <curatedDir> <outDir> [shards] | bloomindex <tableDir> | lookup <tableDir> <url> [url...] | branch <tableDir> <create|append|audit|publish|discard|list> [name] [srcDir] | changes <tableDir> <fromV> [toV] | extract-incr <tableDir> <outDir> <stateFile> | " +
           "explain <query> [sfDir] | " +
-          "profile <pagesDir> | scale <pagesDir> [reps] | mat-bench <pagesDir> [reps] | " +
+          "scale <pagesDir> [reps] | " +
           "soak <outBase> [mults] [reps]")
       sys.exit(2)
     }
@@ -103,27 +103,6 @@ object Main {
           val nMd = spark.read.parquet(args(2)).count()
           println(f"serialized $nMd%d pages to markdown in ${(System.nanoTime() - t0) / 1e9}%.2f s -> ${args(2)}")
           return
-        case "profile" =>
-          // stage-by-stage timing against an existing pages table
-          import spark.implicits._
-          val pages = spark.read.schema(Model.PAGES).parquet(args(1)).as[Page]
-          def t(name: String)(f: => Long): Unit = {
-            val t0 = System.nanoTime()
-            val n = f
-            println(f"  $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
-          }
-          t("scan+count")(pages.count())
-          t("scan+decode+tokenize")(pages.flatMap(Extract.toRows).count())
-          t("(again, warm)")(pages.flatMap(Extract.toRows).count())
-          t("+shuffle(url)")(pages.flatMap(Extract.toRows).toDF
-            .repartition(col("url")).count())
-          t("+classify+windows")(Extract.classifiedBlocks(
-            pages.flatMap(Extract.toRows)).count())
-          t("+lines+assemble")(Extract.assembled(Extract.lines(
-            Extract.classifiedBlocks(pages.flatMap(Extract.toRows)))).count())
-          t("full extract (count)")(Extract.extract(pages).count())
-          (1 to 4).foreach(i => t(s"full extract rep$i")(Extract.extract(pages).count()))
-          return
         case "scale" =>
           // scaling-protocol measurement: repeated full-extract counts over
           // an existing pages table; reports each rep + the median docs/sec
@@ -150,29 +129,6 @@ object Main {
           }
           val med = times.sorted.apply(reps / 2)
           println(f"SCALE cpus=$cpus docs=$nDocs median=$med%.2f s throughput=${nDocs / med}%.0f docs/s")
-          return
-        case "mat-bench" =>
-          // head-to-head of the tokenizer-sharing strategies (BENCH.md):
-          // branch (2x tokenize) vs cache vs localCheckpoint (1x tokenize +
-          // full-width materialization)
-          import spark.implicits._
-          val pages = spark.read.schema(Model.PAGES).parquet(args(1)).as[Page]
-          val reps = if (args.length > 2) args(2).toInt else 3
-          Extract.extract(pages).count() // JIT warm-up shared by all modes
-          Extract.extract(pages).count()
-          Seq("none", "cache", "checkpoint").foreach { mode =>
-            val times = (1 to reps).map { _ =>
-              spark.catalog.clearCache()
-              val t0 = System.nanoTime()
-              val n = Extract.extract(pages, mode).count()
-              val dt = (System.nanoTime() - t0) / 1e9
-              (dt, n)
-            }
-            spark.catalog.clearCache()
-            val med = times.map(_._1).sorted.apply(reps / 2)
-            val n = times.head._2
-            println(f"MAT mode=$mode%-10s median=$med%6.2f s  throughput=${n / med}%.0f docs/s  ($n docs x $reps reps)")
-          }
           return
         case "soak" =>
           // heavy-tail scaling soak (VERDICT r3 item 3): stage deterministic

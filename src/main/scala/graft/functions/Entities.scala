@@ -1,8 +1,8 @@
 package graft.functions
 
 /** HTML character-reference decoding — the WHATWG HTML §13.5 subset the
-  * engine supports, fixed and documented so the scalar oracle and the
-  * distributed pipeline share one definition (determinism, BASELINE.json:14).
+  * engine supports, fixed and documented so the production extraction and
+  * its relational twin share one definition (determinism, BASELINE.json:14).
   *
   * Coverage (round 3, expanded from the r2 ~70-name list):
   *

@@ -50,14 +50,14 @@ case class BlockRow(
 
 /** A contiguous region of the final assembled text attributable to one
   * source block (HTML) or one merged line (PDF). Offsets are Unicode
-  * codepoint counts into `ExtractedDoc.text` (what both the scalar oracle
-  * and Spark's `length()` count) — NOT UTF-16 code units.
+  * codepoint counts into `ExtractedDoc.text` (what both ScalarExtract and
+  * Spark's `length()` count) — NOT UTF-16 code units.
   */
 case class Span(lineId: Int, start: Int, end: Int, sourceSeq: Int)
 
 /** Final output record. `text` is the byte-identical invariant (B:14): the
-  * distributed pipeline must produce exactly the same bytes per url as the
-  * sequential scalar oracle, under any partitioning / AQE replan.
+  * production map and its relational twin (operators.Extract) must produce
+  * exactly the same bytes per url, under any partitioning / AQE replan.
   */
 case class ExtractedDoc(
     url: String,

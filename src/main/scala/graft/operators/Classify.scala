@@ -5,8 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 
 /** THE extraction semantics, stated once as pure sequential functions.
   *
-  * This object is the normative spec: the distributed pipeline
-  * ([[graft.operators.Extract]]) re-expresses every rule below as Catalyst
+  * This object is the normative spec. Production runs it directly
+  * ([[graft.operators.ScalarExtract]], mapped per page by
+  * [[graft.operators.Extract.extract]]); the relational twin in
+  * [[graft.operators.Extract]] re-expresses every rule below as Catalyst
   * column expressions / window functions / aggregations, and the golden tests
   * assert byte-identical agreement between the two on every url
   * (BASELINE.json:14 "byte-identical extracted text per url").
@@ -103,7 +105,7 @@ object Classify {
     * ordinal on the PDF branch (PdfRuns header) so multi-page documents never
     * interleave lines across pages. A new line starts at every page boundary
     * and whenever the vertical gap to the PREVIOUS RUN exceeds PDF_LINE_GAP
-    * (previous run, not line start: exactly the distributed pipeline's
+    * (previous run, not line start: exactly the relational twin's
     * `lag(y)` semantics — the two formulations only agree under that choice
     * when y drifts monotonically within a line).
     */

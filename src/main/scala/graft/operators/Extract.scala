@@ -2,35 +2,35 @@ package graft.operators
 
 import graft._
 import graft.functions.Charset
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** The distributed extraction pipeline (SURVEY.md §3.2): scan → per-row
-  * tokenize (typed flatMap, the one legitimately procedural stage) → pure
-  * Catalyst column expressions / window functions / ordered aggregations for
-  * everything else (classification J1/W4/W5, line merge W2/W3/A1, document
-  * assembly A2). The semantics are normatively defined in
-  * [[graft.operators.Classify]]; golden tests assert byte-identical equality
-  * per url between this pipeline and the scalar oracle under any partitioning.
+/** Extraction over Spark (SURVEY.md §3.2), in two formulations of the
+  * semantics stated once in [[graft.operators.Classify]].
   *
-  * Shuffle plan (deliberate, scale-first; pinned by the plan-shape test):
-  * two consumer branches (sentinel metadata / classification+assembly),
-  * each with exactly ONE url-hash Exchange whose input Catalyst has
-  * branch-filtered — sentinels shuffle 1 tiny row/page, classification
-  * shuffles candidate blocks; every window/agg inside a branch reuses that
-  * branch's partitioning, and the final metadata join is co-partitioned.
-  * See the comment in [[extract]] + BASELINE.md for the measured
-  * alternatives (exchange reuse, fused no-join) and why they lost.
+  * Production ([[extract]]) is one typed map of [[ScalarExtract.extract]]:
+  * each page is scanned once, decoded and tokenized once, then classified,
+  * line-merged and assembled in the same task — no Exchange and no join
+  * (pinned by the plan test). Output is independent of the partitioning by
+  * construction. BASELINE.md records the measured trade against B:6's
+  * "UDF-free column expressions where possible".
+  *
+  * The rest of this object is the relational twin: the tokenizer as a
+  * flatMap of block rows ([[toRows]]), then Catalyst column expressions,
+  * window functions and ordered aggregations for classification (J1/W4/W5,
+  * [[classifiedBlocks]]), line merge (W2/W3/A1, [[lines]]) and document
+  * assembly (A2, [[assembled]]). It backs the `ex_classify`/`ex_lines`/
+  * `ex_docs` DuckDB oracles, and GoldenSpec asserts it byte-identical per
+  * url to the production map, so each formulation checks the other.
   * An optional pages-level salted repartition (`saltedPages`) balances
   * tokenizer work when the input file layout is host-skewed (B:14).
   */
 object Extract {
 
-  /** Per-page procedural step: sniff, decode, tokenize/parse. Emits the
-    * candidate block rows plus exactly one sentinel row per page carrying
-    * document metadata (so empty/unsupported docs survive the relational
-    * stages, and nBlocks/nDropped are exact).
+  /** The relational twin's per-page step: sniff, decode, tokenize/parse.
+    * Emits the candidate block rows plus exactly one sentinel row per page
+    * carrying document metadata (nBlocks, and the text of text pages).
     */
   def toRows(p: Page): Iterator[BlockRow] = {
     val kind = Charset.sniffKind(p.html)
@@ -86,8 +86,8 @@ object Extract {
 
   /** The unified reading-order keys (HTML: document order; PDF: page, -y, x,
     * seq), materialized as columns so every downstream window shares one
-    * sort. ONE definition — [[classifyCandidates]] (production) and the
-    * [[lines]] fallback (oracle path) must never drift on row order.
+    * sort: [[classifyCandidates]] adds them and every [[lines]] window
+    * orders by them, so the two can never drift on row order.
     */
   private def withOrdKeys(df: DataFrame): DataFrame = {
     val isPdf = col("kind") === Charset.KIND_PDF
@@ -98,13 +98,13 @@ object Extract {
   }
 
   /** Blocks DataFrame with all classification columns (the SQL-expressible
-    * middle of the pipeline — also materialized for the DuckDB oracle).
+    * middle of the relational twin — also materialized for the DuckDB oracle).
     */
   def classifiedBlocks(rows: Dataset[BlockRow]): DataFrame =
     classifiedFrom(rows.toDF.repartition(col("url")))
 
   /** Classification over a blocks frame with sentinel/boiler rows still
-    * present (oracle path).
+    * present.
     */
   private[graft] def classifiedFrom(parted: DataFrame): DataFrame = {
     val sentinelFlag = (col("flags").bitwiseAND(lit(Model.FLAG_SENTINEL))) =!= 0
@@ -130,8 +130,8 @@ object Extract {
     // `_w` columns per Window node, which defeats ordering reuse — with
     // attribute keys, every reading-order window downstream (smoothing
     // here, line-break + lineId in [[lines]]) is satisfied by ONE sort.
-    // Plan effect: the classify branch runs 2 full-width sorts (parentSeq
-    // scoring + reading order) instead of 5 (pinned by the plan test).
+    // Plan effect: classification runs 2 full-width sorts (parentSeq
+    // scoring + reading order) instead of 5.
     val wSeq = Window.partitionBy("url")
       .orderBy(col("ord0").asc, col("ord1").asc, col("ord2").asc, col("ord3").asc)
 
@@ -184,17 +184,13 @@ object Extract {
     */
   def lines(classified: DataFrame): DataFrame = {
     val isPdf = col("kind") === Charset.KIND_PDF
-    // Reuse the materialized reading-order keys when the input comes from
-    // [[classifyCandidates]] (the production path — keeps every window here
-    // on the ordering its sort already produced); compute them otherwise.
-    val withOrd =
-      if (classified.columns.contains("ord0")) classified
-      else withOrdKeys(classified)
+    // the reading-order keys [[classifyCandidates]] materialized: every
+    // window here rides the ordering its sort already produced
     val wOrd = Window.partitionBy("url")
       .orderBy(col("ord0").asc, col("ord1").asc, col("ord2").asc, col("ord3").asc)
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    withOrd
+    classified
       .filter(col("kept"))
       .withColumn("prevY", lag(col("y"), 1).over(wOrd))
       .withColumn("prevPage", lag(col("ord0"), 1).over(wOrd))
@@ -269,100 +265,11 @@ object Extract {
       .select("url", "atext", "aspans", "keptRows")
   }
 
-  /** Tokenizer output as a DataFrame — either the typed flatMap or the
-    * native Generator ([[graft.functions.ExtractBlocks]]); both are
-    * row-identical (equivalence-tested). The Generator path skips Page
-    * materialization and the output encoder; selectable for benchmarking
-    * via -Dgraft.extract.generator=true.
+  /** Production extraction: Dataset[Page] → Dataset[ExtractedDoc], one
+    * typed map of [[ScalarExtract.extract]] (see the object header).
     */
-  private def blockFrame(pages: Dataset[Page]): DataFrame = {
+  def extract(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
     import pages.sparkSession.implicits._
-    if (sys.props.get("graft.extract.generator").contains("true"))
-      pages.toDF.select(col("url"), col("warc_ts"), col("lang"),
-        graft.functions.ExtractBlocks.expr(col("html")))
-    else pages.flatMap(toRows).toDF
-  }
-
-  /** Full pipeline: Dataset[Page] → Dataset[ExtractedDoc]. */
-  def extract(pages: Dataset[Page]): Dataset[ExtractedDoc] =
-    extract(pages, sys.props.getOrElse("graft.extract.materialize", "none"))
-
-  /** `materialize` selects how the two consumer branches share the tokenizer
-    * output (measured head-to-head by `graft.Main mat-bench`; BENCH.md):
-    *   - "none" (default): branch plan — tokenizer runs once per branch, each
-    *     branch shuffles only its pushed-down column/row subset;
-    *   - "cache": persist the repartitioned blocks (InMemoryRelation keeps
-    *     the url-hash partitioning, so both branches consume one exchange and
-    *     one tokenize pass); caller owns unpersist/clearCache;
-    *   - "checkpoint": localCheckpoint() — same single-pass sharing with the
-    *     lineage cut, at the cost of materializing ALL block columns.
-    * On a real cluster reading object storage the scan+decode+tokenize pass
-    * dominates, which shifts the trade toward the single-pass variants — the
-    * default stays measurement-driven per environment.
-    */
-  def extract(pages: Dataset[Page], materialize: String): Dataset[ExtractedDoc] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-
-    // Two consumers branch off the tokenizer output below: sentinel
-    // metadata, and block classification/assembly. Catalyst pushes each
-    // branch's filter and column set below the repartition, so the two
-    // exchange subtrees differ and the tokenizer runs once PER BRANCH.
-    // This is a measured, deliberate trade (see BASELINE.md):
-    //   - the pushed-down filters mean each branch shuffles only what it
-    //     needs (sentinels: 1 tiny row/page; classify: candidate blocks);
-    //   - a ReuseExchange formulation (non-deterministic barrier column)
-    //     defeats predicate pushdown but not column pruning, so reuse
-    //     still breaks;
-    //   - a fully fused single-exchange/no-join formulation (sentinels as
-    //     lineId=-1 rows + conditional aggregation) was implemented and
-    //     benchmarked ~2x MORE CPU: every row then rides through all four
-    //     window sorts, which costs more than the second tokenizer pass.
-    // The windows/aggs below all derive from one url-hash partitioning, so
-    // within each branch there is exactly one shuffle and the final join is
-    // co-partitioned.
-    val parted0 = blockFrame(pages).repartition(col("url"))
-    val parted = materialize match {
-      case "cache" =>
-        parted0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case "checkpoint" => parted0.localCheckpoint()
-      case _            => parted0
-    }
-
-    val sentinelFlag = (col("flags").bitwiseAND(lit(Model.FLAG_SENTINEL))) =!= 0
-    val sentinels = parted
-      .filter(sentinelFlag)
-      .select("url", "warc_ts", "lang", "kind", "nBlocks", "fullText")
-
-    val docsAssembled = assembled(lines(classifiedFrom(parted)))
-
-    val isTextKind = col("kind") === Charset.KIND_TEXT
-    val isDocKind = col("kind").isin(Charset.KIND_HTML, Charset.KIND_PDF)
-
-    sentinels
-      .join(docsAssembled, Seq("url"), "left_outer")
-      .select(
-        col("url"),
-        col("warc_ts"),
-        col("lang"),
-        when(isTextKind, col("fullText"))
-          .when(isDocKind, coalesce(col("atext"), lit("")))
-          .otherwise(lit(""))
-          .as("text"),
-        when(isTextKind && length(col("fullText")) > 0,
-          array(struct(lit(1).as("lineId"), lit(0).as("start"),
-            length(col("fullText")).as("end"), lit(0).as("sourceSeq"))))
-          .when(isDocKind,
-            coalesce(col("aspans"),
-              array().cast("array<struct<lineId:int,start:int,end:int,sourceSeq:int>>")))
-          .otherwise(array().cast("array<struct<lineId:int,start:int,end:int,sourceSeq:int>>"))
-          .as("spans"),
-        col("nBlocks"),
-        when(isDocKind, col("nBlocks") - coalesce(col("keptRows"), lit(0L)).cast("int"))
-          .otherwise(lit(0))
-          .as("nDropped"),
-        col("kind").as("contentKind")
-      )
-      .as[ExtractedDoc]
+    pages.map(ScalarExtract.extract)
   }
 }

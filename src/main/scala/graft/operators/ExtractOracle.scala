@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-oracle surface for the extraction pipeline itself (SURVEY.md §5.4):
-  * the Spark side runs the PRODUCTION operators ([[Extract.classifiedBlocks]],
-  * [[Extract.lines]], [[Extract.assembled]]) over the materialized blocks
-  * table; the DuckDB side re-implements the same semantics in independent
-  * ANSI SQL over the identical parquet. A mismatch in any classification
+  * the Spark side runs the relational twin of production extraction
+  * ([[Extract.classifiedBlocks]], [[Extract.lines]], [[Extract.assembled]])
+  * over the materialized blocks table; the DuckDB side re-implements the
+  * same semantics in independent ANSI SQL over the identical parquet.
+  * GoldenSpec ties the twin byte-for-byte to the production map. A mismatch in any classification
   * threshold, window frame, ordering tie-break, or join would surface here.
   *
   * The tokenizer itself (blocks ← raw bytes) is procedural and non-SQL; it is

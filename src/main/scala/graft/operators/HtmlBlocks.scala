@@ -5,9 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 
 /** A candidate block before doc-level classification: the shared output of
   * the HTML tokenizer (this file) and the PDF run parser. Pure, per-document,
-  * deterministic — used identically by the sequential scalar oracle and the
-  * distributed flatMap stage, so the two can only differ in the relational
-  * stages (which is exactly what the golden tests pin down).
+  * deterministic — used identically by the production extraction
+  * (ScalarExtract) and the relational twin's flatMap stage (Extract.toRows),
+  * so the two can only differ in the relational stages (which is exactly
+  * what the golden tests pin down).
   */
 case class RawBlock(
     seq: Int,

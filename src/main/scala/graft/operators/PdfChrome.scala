@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: the parse is the production per-row procedural step; the
   * rule is two hash aggregations (line assembly keyed (url, page, y) —
   * partial-aggs map-side; chrome count keyed (url, band, tpl)) plus a
-  * broadcast-sized per-doc page count. All url-local — co-partitions with
-  * the extraction pipeline's url exchange at 100 TB.
+  * broadcast-sized per-doc page count. All url-local, so every exchange is
+  * keyed on url.
   */
 object PdfChrome {
 

