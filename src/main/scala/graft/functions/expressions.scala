@@ -3,9 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst scalar expressions (SURVEY.md §2.10 U1) — the only
@@ -25,6 +26,7 @@ object exprs {
   def decodeEntities(c: Column): Column = column(DecodeEntities(expression(c)))
   def nfcNormalize(c: Column): Column = column(NfcNormalize(expression(c)))
   def deflateLen(c: Column): Column = column(DeflateLen(expression(c)))
+  def gopherSignals(c: Column): Column = column(GopherSignals(expression(c)))
 }
 
 /** binary payload → 'html' | 'pdf' | 'text' | 'empty' (F1 payload sniff). */
@@ -144,6 +146,95 @@ object DeflateLen {
     var n = 0L
     while (!d.finished()) n += d.deflate(buf)
     n
+  }
+}
+
+/** The five Gopher repetition signals of a document
+  * ([[graft.operators.TextAnalysis.withGopherSignals]]) as one struct:
+  * n_lines, dup_line_frac_x1000, dup_char_frac_x1000, top_bigram_n,
+  * top_bigram_frac_x1000. Lines are the non-empty LF-separated segments,
+  * tokens the non-empty space-separated segments of a line, bigrams two
+  * adjacent tokens of one line joined by a space, lengths are codepoints,
+  * and the top bigram is the greatest by (count, UTF-8 byte order — the
+  * order of `UTF8String.compareTo`). Fractions are integer x1000 (`div`).
+  * One walk over the bytes counts lines and bigrams in hash tables. It is
+  * a native kernel because Spark has no codegen for higher-order
+  * functions: as filter/transform/aggregate/array_sort lambdas the same
+  * signals run interpreted per row.
+  */
+case class GopherSignals(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = GopherSignals.schema
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(input: Any): Any =
+    GopherSignals.signals(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.GopherSignals.signals($c)")
+  override protected def withNewChildInternal(newChild: Expression): GopherSignals =
+    copy(child = newChild)
+  override def prettyName: String = "gopher_signals"
+}
+
+object GopherSignals {
+  val schema: StructType = StructType(Seq("n_lines", "dup_line_frac_x1000",
+    "dup_char_frac_x1000", "top_bigram_n", "top_bigram_frac_x1000")
+    .map(StructField(_, LongType, nullable = false)))
+
+  private val space = UTF8String.fromString(" ")
+
+  /** Codegen target: UTF8String → the five signals. Invalid UTF-8 is first
+    * repaired the way Spark's `split` repairs it (a `String` round trip). */
+  def signals(text: UTF8String): InternalRow = {
+    val u = if (text.isValid) text else UTF8String.fromString(text.toString)
+    val base = u.getBaseObject
+    val off = u.getBaseOffset
+    val n = u.numBytes
+    // lines and tokens are views of the text's bytes; only bigrams are copied
+    def slice(from: Int, to: Int) = UTF8String.fromAddress(base, off + from, to - from)
+    val lines = new java.util.HashSet[UTF8String]
+    val bigrams = new java.util.HashMap[UTF8String, Integer]
+    var nLines, lineChars, uniqChars = 0L
+    var topN = 0
+    var top: UTF8String = null // greatest (count, bigram) so far
+    var lineStart = 0
+    var tokStart = -1
+    var prev: UTF8String = null // the token before, on this line
+    var i = 0
+    while (i <= n) {
+      val c = if (i < n) Platform.getByte(base, off + i) else '\n'.toByte
+      if (c == ' ' || c == '\n') {
+        if (tokStart >= 0) {
+          val tok = slice(tokStart, i)
+          if (prev != null) {
+            val bg = UTF8String.concat(prev, space, tok)
+            val cnt = bigrams.getOrDefault(bg, 0) + 1
+            bigrams.put(bg, cnt)
+            if (cnt > topN || (cnt == topN && bg.compareTo(top) > 0)) {
+              topN = cnt
+              top = bg
+            }
+          }
+          prev = tok
+          tokStart = -1
+        }
+        if (c == '\n') {
+          if (i > lineStart) {
+            val line = slice(lineStart, i)
+            val chars = line.numChars
+            nLines += 1
+            lineChars += chars
+            if (lines.add(line)) uniqChars += chars
+          }
+          lineStart = i + 1
+          prev = null
+        }
+      } else if (tokStart < 0) tokStart = i
+      i += 1
+    }
+    val lineDiv = math.max(lineChars, 1L)
+    val topChars = if (top == null) 0L else top.numChars.toLong
+    InternalRow(nLines, 1000L * (nLines - lines.size) / math.max(nLines, 1L),
+      1000L * (lineChars - uniqChars) / lineDiv, topN.toLong,
+      1000L * topN * topChars / lineDiv)
   }
 }
 

@@ -903,12 +903,12 @@ object Dedup {
         col("url"),
         size(filter(col("la"), l => l =!= lit(""))).cast("long").as("n_lines"),
         coalesce(size(col("kept_pos")).cast("long"), lit(0L)).as("n_kept"),
-        (size(filter(col("la"), l => l =!= lit(""))).cast("long") -
-          coalesce(size(col("kept_pos")).cast("long"), lit(0L))).as("n_dropped"),
         coalesce(
           concat_ws("\n",
             transform(col("kept_pos"), p => element_at(col("la"), p + lit(1)))),
           lit("")).as("text_dedup"))
+      .select(col("url"), col("n_lines"), col("n_kept"),
+        (col("n_lines") - col("n_kept")).as("n_dropped"), col("text_dedup"))
   }
 
   val lineDedupSql: String = {

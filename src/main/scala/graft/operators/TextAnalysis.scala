@@ -413,17 +413,15 @@ object TextAnalysis {
     * repetition filters, Rae et al. 2021 §A1.1): duplicate-line fraction,
     * duplicate-line character fraction, and top-bigram character coverage.
     *
-    * Scale shape: the ENTIRE operator is per-row column expressions over the
-    * line/token arrays — no exchange at any size; it composes with the scan
-    * into one WholeStageCodegen map stage, the ideal 100 TB quality-scorer
-    * plan. The distinct-bigram count scan is O(distinct·total) per doc,
-    * bounded by document length (docs here ≤ tens of lines; for multi-MB
-    * outliers the block/line caps upstream in Extract bound it already).
+    * Scale shape: one native expression per row
+    * ([[graft.functions.GopherSignals]]), a single walk over the document's
+    * UTF-8 bytes — no exchange at any size; it composes with the scan into
+    * one WholeStageCodegen map stage.
     *
     * All fractions are integer x1000 (`div`), so the DuckDB twin is
-    * bit-exact. Runs over the extracted corpus docs (multi-line text);
-    * `top.c/top.bg` tie-breaks are the (count, bigram) struct order, which
-    * Spark `array_max` and DuckDB `list_max` share (field-order lexicographic).
+    * bit-exact. Runs over the extracted corpus docs (multi-line text). The
+    * top bigram is the greatest by (count, bigram), bigrams compared in
+    * UTF-8 byte order — DuckDB's `list_max` over (c, bg) structs agrees.
     */
   def gopher(spark: SparkSession, sfDir: String): DataFrame =
     gopherSignals(graft.sources.OracleCorpus.docs(spark)).orderBy("url")
@@ -438,82 +436,26 @@ object TextAnalysis {
         col("dup_char_frac_x1000"), col("top_bigram_n"),
         col("top_bigram_frac_x1000"))
 
-  /** [[gopherSignals]] as APPENDED columns: every signal is a per-row
-    * expression, so a consumer that already holds the text (the curate
-    * verdict pass) gets the signals in place — no url-keyed self-join that
-    * would shuffle the full corpus text to attach columns derivable from
-    * the row itself. Appends n_lines, dup_line_frac_x1000,
-    * dup_char_frac_x1000, top_bigram_n, top_bigram_frac_x1000.
+  /** [[gopherSignals]] as APPENDED columns: every signal comes from the row
+    * itself, so a consumer that already holds the text (the curate verdict
+    * pass) gets the signals in place — no url-keyed self-join that would
+    * shuffle the full corpus text to attach them. Appends n_lines,
+    * dup_line_frac_x1000, dup_char_frac_x1000, top_bigram_n,
+    * top_bigram_frac_x1000; the kernel runs once per row (its struct
+    * column is read five times, so CollapseProject keeps it in its own
+    * projection). NULL text gives NULL line signals and zero bigram signals.
     */
   private[graft] def withGopherSignals(d: DataFrame): DataFrame = {
-    // guard scratch AND output names: withColumn would silently replace an
-    // existing column of the same name instead of failing
-    val reserved = Seq("lines", "uniq_lines", "line_chars", "uniq_chars",
-      "bgs", "top", "n_lines", "dup_line_frac_x1000", "dup_char_frac_x1000",
-      "top_bigram_n", "top_bigram_frac_x1000")
+    // withColumn would silently replace an existing column of the same name
+    val reserved = "gopher" +: graft.functions.GopherSignals.schema.fieldNames.toSeq
     require(!d.columns.exists(reserved.contains),
       s"withGopherSignals column clash: ${d.columns.toSeq}")
-    // NB: explicit `functions.split` — the local `split` method (ta_split)
-    // shadows the SQL function inside this object
-    val fsplit = org.apache.spark.sql.functions.split(_: Column, _: String)
-    val toksOf = (l: Column) => filter(fsplit(l, " "), t => t =!= lit(""))
-    val bigramsOf = (l: Column) => {
-      val t = toksOf(l)
-      when(
-        size(t) >= 2,
-        transform(sequence(lit(1), size(t) - 1),
-          i => concat_ws(" ", element_at(t, i), element_at(t, i + 1)))
-      ).otherwise(array().cast("array<string>"))
-    }
-    d.withColumn("lines", filter(fsplit(col("text"), "\n"), l => l =!= lit("")))
-      .withColumn("n_lines", size(col("lines")).cast("long"))
-      .withColumn("uniq_lines", size(array_distinct(col("lines"))).cast("long"))
-      .withColumn("line_chars",
-        aggregate(col("lines"), lit(0L), (a, x) => a + length(x)))
-      .withColumn("uniq_chars",
-        aggregate(array_distinct(col("lines")), lit(0L), (a, x) => a + length(x)))
-      .withColumn("bgs", flatten(transform(col("lines"), bigramsOf)))
-      .withColumn(
-        "top", {
-          // top bigram via sort + linear run-length fold — O(B log B) per
-          // doc. (The transparent array_distinct × filter formulation is
-          // O(B²): at ~150 bigrams/extracted doc it dominated the curate
-          // pipeline.) Ascending iteration + `>=`-style close condition
-          // reproduces array_max's (count, then bigram) tie-break exactly;
-          // an empty bigram list yields (0, "") which the consumers below
-          // treat identically to the old NULL (coalesce/length-0).
-          val sorted = array_sort(col("bgs"))
-          aggregate(
-            sorted,
-            struct(lit(0L).as("bc"), lit("").as("bb"),
-              lit(0L).as("cc"), lit("").as("cb")),
-            (acc, x) => {
-              val same = acc("cb") === x && acc("cc") > 0
-              val close = !same &&
-                (acc("cc") > acc("bc") ||
-                  (acc("cc") === acc("bc") && acc("cb") > acc("bb")))
-              struct(
-                when(close, acc("cc")).otherwise(acc("bc")).as("bc"),
-                when(close, acc("cb")).otherwise(acc("bb")).as("bb"),
-                when(same, acc("cc") + 1).otherwise(lit(1L)).as("cc"),
-                x.as("cb"))
-            },
-            acc => {
-              val close = acc("cc") > acc("bc") ||
-                (acc("cc") === acc("bc") && acc("cb") > acc("bb"))
-              struct(
-                when(close, acc("cc")).otherwise(acc("bc")).as("c"),
-                when(close, acc("cb")).otherwise(acc("bb")).as("bg"))
-            })
-        })
-      .withColumn("dup_line_frac_x1000",
-        expr("(1000 * (n_lines - uniq_lines)) div greatest(n_lines, 1)"))
-      .withColumn("dup_char_frac_x1000",
-        expr("(1000 * (line_chars - uniq_chars)) div greatest(line_chars, 1)"))
-      .withColumn("top_bigram_n", expr("coalesce(top.c, 0L)"))
-      .withColumn("top_bigram_frac_x1000",
-        expr("(1000 * coalesce(top.c, 0L) * coalesce(length(top.bg), 0)) div greatest(line_chars, 1)"))
-      .drop("lines", "uniq_lines", "line_chars", "uniq_chars", "bgs", "top")
+    d.withColumn("gopher", graft.functions.exprs.gopherSignals(col("text")))
+      .select(col("*"), col("gopher.n_lines"), col("gopher.dup_line_frac_x1000"),
+        col("gopher.dup_char_frac_x1000"),
+        coalesce(col("gopher.top_bigram_n"), lit(0L)).as("top_bigram_n"),
+        coalesce(col("gopher.top_bigram_frac_x1000"), lit(0L)).as("top_bigram_frac_x1000"))
+      .drop("gopher")
   }
 
   val gopherSql: String = {

@@ -1143,6 +1143,104 @@ class TrainingOpsSpec extends AnyFunSuite {
       spark.read.parquet(s"$SF/documents.parquet")
         .selectExpr("CAST(doc_id AS STRING) AS url", "text"))
     assert(!onParquet.queryExecution.executedPlan.toString.contains("Exchange"))
+    // and a native one: no interpreted lambda, and the kernel evaluated once
+    // per row (its struct is read five times; CollapseProject must not
+    // inline it into each read) — over parquet and in curate's verdict pass
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def nativeOnce(plan: SparkPlan, what: String): Unit = {
+      assert(!plan.toString.contains("lambdafunction"), s"$what:\n$plan")
+      val kernels = Plans.flatMap(plan)(_.expressions.flatMap(_.collect {
+        case k: graft.functions.GopherSignals => k }))
+      assert(kernels.size == 1, s"$what: one gopher_signals expected:\n$plan")
+    }
+    nativeOnce(onParquet.queryExecution.executedPlan, "gopherSignals over parquet")
+    val written = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("gopher_signals")) written.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val verdict = try {
+      Curate.run(spark, graft.sources.Corpus.pages(spark, 60),
+        java.nio.file.Files.createTempDirectory("curate-plan").toString)
+      written.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(verdict != null, "no curate write evaluated gopher_signals")
+    nativeOnce(verdict, "curate verdict pass")
+  }
+
+  test("gopher signals: bigram ties, CR, space runs, empty lines, null text") {
+    import spark.implicits._
+    val docs = Seq(
+      // two-way tie at count 2: UTF-8 order puts "x 😀" (F0 ..) above
+      // "x ＡＡ" (EF ..), UTF-16 order the reverse; the winners cover 3 vs 4
+      // codepoints, so a String-order kernel reads 571 instead of 428
+      ("tie", "x 😀\nx ＡＡ\nx 😀\nx ＡＡ"),
+      // CR is line content: lines "a b\r", "a b\r", "c" (4 + 4 + 1 chars)
+      ("cr", "a b\r\na b\r\nc"),
+      ("cr_only", "a b\rc d"),
+      // tokens are the non-empty space-separated segments; line_chars counts
+      // the spaces: "  p   q  r " (11) + " p q" (4)
+      ("spaces", "  p   q  r \n p q"),
+      ("edges", "\n\na a\n\n"),
+      ("blank", "\n\n\n"),
+      ("empty", ""),
+      ("null", null))
+    val got = TextAnalysis.gopherSignals(docs.toDF("url", "text")).collect()
+      .map(r => r.getString(0) -> (1 to 5).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i))))
+      .toMap
+    def s(xs: Long*) = xs.map(Some(_))
+    assert(got("tie") == s(4, 500, 500, 2, 428))
+    assert(got("cr") == s(3, 333, 444, 2, 888))
+    assert(got("cr_only") == s(1, 0, 0, 1, 714))
+    assert(got("spaces") == s(2, 0, 0, 2, 400))
+    assert(got("edges") == s(1, 0, 0, 1, 1000))
+    assert(got("blank") == s(0, 0, 0, 0, 0))
+    assert(got("empty") == s(0, 0, 0, 0, 0))
+    assert(got("null") == Seq(None, None, None, Some(0L), Some(0L)))
+  }
+
+  test("gopher signals equal a plain-collections reference on random docs (property)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // the spec: lines are the non-empty LF-separated segments, tokens the
+    // non-empty space-separated ones, lengths in codepoints, the top bigram
+    // is the max by (count, UTF-8 bytes)
+    def reference(text: String): Seq[Long] = {
+      def cps(s: String) = s.codePointCount(0, s.length).toLong
+      val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
+      val lineChars = lines.map(cps).sum
+      val bigrams = lines.flatMap { l =>
+        val t = l.split(" ", -1).toSeq.filter(_.nonEmpty)
+        t.zip(t.drop(1)).map { case (a, b) => s"$a $b" }
+      }
+      val utf8 = Ordering.comparatorToOrdering(
+        (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b))
+      val (topN, topBg) =
+        if (bigrams.isEmpty) (0L, "")
+        else bigrams.groupBy(identity).toSeq.map { case (b, xs) => (xs.size.toLong, b) }
+          .maxBy { case (n, b) => (n, b.getBytes("UTF-8")) }(Ordering.Tuple2(Ordering.Long, utf8))
+      Seq(lines.size.toLong,
+        1000 * (lines.size - lines.distinct.size) / math.max(lines.size, 1),
+        1000 * (lineChars - lines.distinct.map(cps).sum) / math.max(lineChars, 1),
+        topN,
+        1000 * topN * cps(topBg) / math.max(lineChars, 1))
+    }
+    // a small alphabet forces repeated lines and bigram ties; supplementary
+    // (😀), CJK, full-width and combining characters put UTF-8 and UTF-16
+    // order at odds; CR and tab are token content
+    val tok = Gen.oneOf("a", "b", "ab", "é", "é", "中", "😀", "ＡＡ", "x\r", "\t", "𝔸b")
+    val line = Gen.choose(0, 7).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(tok, Gen.oneOf(" ", " ", "  ", ""))).map(_.map(p => p._1 + p._2).mkString))
+    val doc = Gen.choose(0, 9).flatMap(n => Gen.listOfN(n, line)).map(_.mkString("\n"))
+    val docs = Gen.listOfN(400, doc).apply(Gen.Parameters.default, Seed(20261017L)).get
+      .zipWithIndex.map { case (t, i) => (f"d$i%03d", t) }
+    val got = TextAnalysis.gopherSignals(docs.toDF("url", "text").repartition(3)).collect()
+      .map(r => r.getString(0) -> (1 to 5).map(r.getLong)).toMap
+    docs.foreach { case (u, t) => assert(got(u) == reference(t), s"$u: ${t.replace("\n", "\\n")}") }
   }
 
   test("exact-substring spans: planted shared passage found, islands merge, plan is two exchanges") {
