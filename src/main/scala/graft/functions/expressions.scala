@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.Platform
@@ -27,6 +28,8 @@ object exprs {
   def nfcNormalize(c: Column): Column = column(NfcNormalize(expression(c)))
   def deflateLen(c: Column): Column = column(DeflateLen(expression(c)))
   def gopherSignals(c: Column): Column = column(GopherSignals(expression(c)))
+  def keptLines(text: Column, keptPos: Column): Column =
+    column(KeptLines(expression(text), expression(keptPos)))
 }
 
 /** binary payload → 'html' | 'pdf' | 'text' | 'empty' (F1 payload sniff). */
@@ -235,6 +238,72 @@ object GopherSignals {
     InternalRow(nLines, 1000L * (nLines - lines.size) / math.max(nLines, 1L),
       1000L * (lineChars - uniqChars) / lineDiv, topN.toLong,
       1000L * topN * topChars / lineDiv)
+  }
+}
+
+/** A document rebuilt from the lines that line dedup keeps
+  * ([[graft.operators.Dedup.lineDedupOver]]), as the struct n_lines,
+  * n_kept, text_dedup. Lines are the LF-separated segments of the text,
+  * numbered from 0 the way `split(text, '\n')` numbers them; n_lines counts
+  * the non-empty ones, and text_dedup joins with LF the n_kept non-empty
+  * lines whose number is in `kept_pos` (ascending, repeats allowed). One
+  * walk over the UTF-8 bytes copies the kept lines; when every byte is
+  * kept the text itself is returned. Invalid UTF-8 is first repaired the
+  * way `split` repairs it. It is a native kernel because the
+  * filter/transform lambdas it replaces run interpreted per row.
+  */
+case class KeptLines(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = KeptLines.schema
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(text: Any, keptPos: Any): Any =
+    KeptLines.kept(text.asInstanceOf[UTF8String], keptPos.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, p) => s"graft.functions.KeptLines.kept($t, $p)")
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): KeptLines =
+    copy(left = newLeft, right = newRight)
+  override def prettyName: String = "kept_lines"
+}
+
+object KeptLines {
+  val schema: StructType = StructType(Seq(
+    StructField("n_lines", LongType, nullable = false),
+    StructField("n_kept", LongType, nullable = false),
+    StructField("text_dedup", StringType, nullable = false)))
+
+  /** Codegen target: (text, ascending kept line numbers) → the struct. */
+  def kept(text: UTF8String, keptPos: ArrayData): InternalRow = {
+    val u = if (text.isValid) text else UTF8String.fromString(text.toString)
+    val base = u.getBaseObject
+    val off = u.getBaseOffset
+    val n = u.numBytes
+    // k kept lines and their k - 1 separators never exceed the text
+    val out = new Array[Byte](n)
+    var len = 0
+    var nLines, nKept = 0L
+    var line = 0 // number of the current segment
+    var p = 0 // first unread entry of keptPos
+    var start = 0
+    var i = 0
+    while (i <= n) {
+      if (i == n || Platform.getByte(base, off + i) == '\n') {
+        if (i > start) {
+          nLines += 1
+          while (p < keptPos.numElements && keptPos.getInt(p) < line) p += 1
+          if (p < keptPos.numElements && keptPos.getInt(p) == line) {
+            if (nKept > 0) { out(len) = '\n'.toByte; len += 1 }
+            Platform.copyMemory(base, off + start, out, Platform.BYTE_ARRAY_OFFSET + len, i - start)
+            len += i - start
+            nKept += 1
+          }
+        }
+        line += 1
+        start = i + 1
+      }
+      i += 1
+    }
+    // the kept bytes are a subsequence of the text: all of them is the text
+    InternalRow(nLines, nKept, if (len == n) u else UTF8String.fromBytes(out, 0, len))
   }
 }
 

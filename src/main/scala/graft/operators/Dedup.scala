@@ -849,15 +849,15 @@ object Dedup {
     * never shuffles for it. The keeper per key is `min(struct(url, pos))`,
     * a PARTIAL-AGG-friendly aggregate, so the hottest boilerplate line
     * combines map-side and the key exchange carries at most one row per
-    * distinct line per map partition. For the join back, Catalyst folds the
-    * `struct(url,pos) === first_occ` keep filter INTO the join as a second
-    * equi key, so the physical join keys are ((url,pos), lk) — unique on
-    * BOTH sides: the probe-side shuffle of a line occurring millions of
-    * times spreads uniformly over reducers by its (url,pos), i.e. the
-    * hot-line skew a `row_number() OVER (PARTITION BY line)` formulation
-    * would pile onto one reducer never exists in this plan. Kept POSITIONS
-    * aggregate to one int array per doc; the text crosses the wire exactly
-    * once, in the url-keyed rebuild join (collision envelope documented in
+    * distinct line per map partition. Every keeper is itself a kept
+    * (url, pos), so the keepers go straight to their document: a second
+    * partial-agg'd aggregate groups them by url into one sorted int array
+    * of kept positions per document. No row per line occurrence outlives
+    * the key aggregate, so there is no line-keyed join for a hot line to
+    * skew. The text crosses the wire exactly once, in the one url-keyed
+    * join that attaches the kept positions, and the native `kept_lines`
+    * kernel ([[graft.functions.KeptLines]]) rebuilds each document in one
+    * walk over its bytes (collision envelope documented in
     * [[lineDedupOver]]).
     */
   def lineDedup(spark: SparkSession, sfDir: String): DataFrame =
@@ -867,48 +867,38 @@ object Dedup {
     lineDedupOver(graft.sources.OracleCorpus.docs(spark).select("url", "text"))
       .orderBy("url")
 
-  /** Core of [[lineDedup]] over any (url, text) frame — unit-testable. */
+  /** Core of [[lineDedup]] over any frame with `url` and `text` columns —
+    * unit-testable, and the form [[Curate]] runs. The result leads with
+    * url, n_lines, n_kept, n_dropped, text_dedup and passes every other
+    * input column through, one row per input row. A url repeated with the
+    * same text keeps each line once and every copy gets the same
+    * text_dedup, as in the SQL oracle; copies of a url with different
+    * texts share (url, pos) line names, so their lines are not told apart.
+    */
   private[graft] def lineDedupOver(d: DataFrame): DataFrame = {
-    // The dedup DECISION shuffles 16-byte line keys, never line text: the
-    // old formulation shuffled the full line text three times (keeper
-    // groupBy + keeper join, both keyed BY the line string, then kept-line
-    // reassembly by url) — ~3x the corpus through the wire. Here the keeper
-    // election and its join carry (url, pos, key) marker rows, the kept
-    // POSITIONS aggregate to one int array per doc (tiny), and the text
-    // crosses the wire exactly once, in the final url-keyed join that
-    // rebuilds text_dedup by O(1) position lookups into the split array.
     // Key = (length, murmur3-32, xxhash64): independent hash families plus
     // the length discriminator, ~96 collision bits — a cross-family
     // collision (P ≈ n²/2^97; ~0.006 even at 3x10^13 corpus lines) costs
     // one wrongly-dropped duplicate line, never a crash. The SQL oracle
     // deduplicates by the line string itself, so the correctness gate also
     // re-checks the no-collision envelope at test scale.
-    val lines = d
+    val keptPos = d
       .select(col("url"), posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
       .filter(col("line") =!= "")
-    val marks = lines.select(col("url"), col("pos"),
-      struct(length(col("line")).as("len"), hash(col("line")).as("h32"),
+      .groupBy(struct(length(col("line")).as("len"), hash(col("line")).as("h32"),
         xxhash64(col("line")).as("h64")).as("lk"))
-    val keeper = marks
-      .groupBy("lk")
-      .agg(min(struct(col("url"), col("pos"))).as("first_occ"))
-    val keptPos = marks
-      .join(keeper, Seq("lk"))
-      .filter(struct(col("url"), col("pos")) === col("first_occ"))
-      .groupBy("url")
-      .agg(sort_array(collect_list(col("pos"))).as("kept_pos"))
-    d.withColumn("la", split(col("text"), "\n"))
-      .join(keptPos, Seq("url"), "left")
-      .select(
-        col("url"),
-        size(filter(col("la"), l => l =!= lit(""))).cast("long").as("n_lines"),
-        coalesce(size(col("kept_pos")).cast("long"), lit(0L)).as("n_kept"),
-        coalesce(
-          concat_ws("\n",
-            transform(col("kept_pos"), p => element_at(col("la"), p + lit(1)))),
-          lit("")).as("text_dedup"))
-      .select(col("url"), col("n_lines"), col("n_kept"),
-        (col("n_lines") - col("n_kept")).as("n_dropped"), col("text_dedup"))
+      .agg(min(struct(col("url"), col("pos"))).as("keeper"))
+      .groupBy(col("keeper.url").as("url"))
+      .agg(sort_array(collect_list(col("keeper.pos"))).as("kept_pos"))
+    val rest = d.columns.filterNot(Set("url", "text")).map(col).toSeq
+    d.join(keptPos, Seq("url"), "left")
+      .select(col("url") +: graft.functions.exprs.keptLines(col("text"),
+        coalesce(col("kept_pos"), typedLit(Seq.empty[Int]))).as("kept") +: rest: _*)
+      // NULL text: n_lines and n_dropped NULL, nothing kept
+      .select(Seq(col("url"), col("kept.n_lines"),
+        coalesce(col("kept.n_kept"), lit(0L)).as("n_kept"),
+        (col("kept.n_lines") - col("kept.n_kept")).as("n_dropped"),
+        coalesce(col("kept.text_dedup"), lit("")).as("text_dedup")) ++ rest: _*)
   }
 
   val lineDedupSql: String = {

@@ -1129,6 +1129,111 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(r7.toSeq == r.toSeq)
   }
 
+  test("line dedup: a repeated url keeps each line once, as the SQL oracle does") {
+    import spark.implicits._
+    // the lineDedupSql values for this frame; a url fan-out would give each
+    // "a" row n_kept 4, n_dropped -2 and its lines twice
+    val d = Seq(("a", "x\ny"), ("a", "x\ny"), ("b", "y\nz")).toDF("url", "text")
+    val r = Dedup.lineDedupOver(d.repartition(3)).collect()
+      .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3), x.getString(4)))
+      .sortBy(_._1)
+    assert(r.toSeq == Seq(
+      ("a", 2L, 2L, 0L, "x\ny"),
+      ("a", 2L, 2L, 0L, "x\ny"),
+      ("b", 2L, 1L, 1L, "z")))
+  }
+
+  test("curate: repeated urls neither fan out nor lose their lines at the gate") {
+    val pages = graft.sources.Corpus.pages(spark, 300)
+    val repeated = pages.limit(40).cache()
+    val urls = repeated.collect().map(_.url).toSet
+    val out = java.nio.file.Files.createTempDirectory("curate-repeat").toString
+    val rep = Curate.run(spark, pages.union(repeated), out)
+    repeated.unpersist()
+    assert(rep.extracted == 340L)
+    assert(rep.nonEmpty <= rep.extracted, rep.toString)
+    val kept = spark.read.parquet(out).select("url").collect().map(_.getString(0))
+    assert(kept.length == kept.distinct.length, "a repeated url survived exact dedup twice")
+    assert(kept.exists(urls), "no repeated url reached the corpus")
+  }
+
+  test("kept_lines: CR, trailing LF, empty lines, supplementary chars, invalid UTF-8, null") {
+    import spark.implicits._
+    // text as bytes so that invalid UTF-8 reaches the kernel unrepaired
+    val cases = Seq(
+      ("cr", "a\r\nb\r\nc", Seq(0, 2), (3L, 2L, "a\r\nc")),
+      ("trailing", "a\nb\n", Seq(0, 1), (2L, 2L, "a\nb")),
+      ("trailing1", "a\nb\n", Seq(1), (2L, 1L, "b")),
+      // numbers count empty segments; an empty segment is never kept
+      ("leading", "\n\na\n\nb", Seq(1, 2, 4), (2L, 2L, "a\nb")),
+      ("blank", "\n\n\n", Seq(0, 1, 2, 3), (0L, 0L, "")),
+      ("empty", "", Seq(0), (0L, 0L, "")),
+      ("supp", "\ud83d\ude00x\n\ud835\udd38\n\ud83d\ude00x", Seq(0, 1), (3L, 2L, "\ud83d\ude00x\n\ud835\udd38")),
+      ("repeats", "x\ny", Seq(0, 0, 1, 1, 7), (2L, 2L, "x\ny")),
+      ("none", "x\ny", Seq(), (2L, 0L, "")))
+    val invalid = Array[Byte]('a', 0xff.toByte, '\n', 'b', 0xe2.toByte, '\n', 0xe2.toByte, 0x82.toByte)
+    val rows = cases.map(c => (c._1, c._2.getBytes("UTF-8"), c._3)) :+
+      (("invalid", invalid, Seq(0, 2))) :+ (("null", null: Array[Byte], Seq(0)))
+    val df = rows.toDF("id", "b", "pos")
+      .select(col("id"), col("b").cast("string").as("text"), col("pos"))
+    // text_dedup as its UTF-8 bytes: reading a string back repairs it
+    def run(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("id"), graft.functions.exprs.keptLines(col("text"), col("pos")).as("k"))
+        .select(col("id"), col("k.n_lines"), col("k.n_kept"), hex(col("k.text_dedup"))).collect()
+        .map(r => r.getString(0) ->
+          (if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2), r.getString(3)))))
+        .toMap
+    def utf8(s: String) = s.getBytes("UTF-8").map(b => f"$b%02X").mkString
+    val interpreted = run(df) // a LocalRelation projection is folded, not codegen'd
+    val generated = run(df.repartition(2))
+    assert(interpreted == generated)
+    cases.foreach { case (id, _, _, (n, k, t)) => assert(interpreted(id) == Some((n, k, utf8(t))), id) }
+    // repaired as split repairs it: a lone 0xff and a truncated sequence
+    // each become U+FFFD; the kept lines are the repaired ones
+    assert(interpreted("invalid") == Some((3L, 2L, utf8("a\ufffd\n\ufffd"))))
+    val viaSplit = df.filter(col("id") === "invalid")
+      .select(hex(concat_ws("\n", element_at(split(col("text"), "\n"), 1),
+        element_at(split(col("text"), "\n"), 3)))).as[String].head()
+    assert(viaSplit == utf8("a\ufffd\n\ufffd"))
+    assert(interpreted("null").isEmpty)
+    // through lineDedupOver a NULL text keeps its old output
+    val n = Dedup.lineDedupOver(Seq(("n", null: String), ("a", "x")).toDF("url", "text"))
+      .filter(col("url") === "n").collect().head
+    assert(n.isNullAt(1) && n.getLong(2) == 0L && n.isNullAt(3) && n.getString(4) == "")
+  }
+
+  test("line dedup plan: no lambda, one kept_lines, one join; curate's dedup write has one join") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def joins(plan: SparkPlan) = Plans.collect(plan) { case j: BaseJoinExec => j }.size
+    val onParquet = Dedup.lineDedupOver(
+      spark.read.parquet(s"$SF/documents.parquet")
+        .selectExpr("CAST(doc_id AS STRING) AS url", "text"))
+    onParquet.write.format("noop").mode("overwrite").save()
+    // the AQE final plan, now that the query has run
+    val plan = onParquet.queryExecution.executedPlan
+    assert(!plan.toString.contains("lambdafunction"), plan.toString)
+    val kernels = Plans.flatMap(plan)(_.expressions.flatMap(_.collect {
+      case k: graft.functions.KeptLines => k }))
+    assert(kernels.size == 1, s"one kept_lines expected:\n$plan")
+    assert(joins(plan) == 1, s"one join expected:\n$plan")
+    val written = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("kept_lines")) written.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val dedupWrite = try {
+      Curate.run(spark, graft.sources.Corpus.pages(spark, 60),
+        java.nio.file.Files.createTempDirectory("curate-dedup-plan").toString)
+      written.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(dedupWrite != null, "no curate write evaluated kept_lines")
+    assert(joins(dedupWrite) == 1, s"curate line-dedup write:\n$dedupWrite")
+  }
+
   test("gopher repetition signals: exact values on a crafted doc; signal core is exchange-free") {
     import spark.implicits._
     // lines [p q, p q, r]: dup_line 1/3, line_chars 7, uniq_chars 4,
