@@ -1,7 +1,6 @@
 package graft.functions
 
-import java.nio.charset.{Charset => JCharset, CodingErrorAction}
-import java.nio.ByteBuffer
+import java.nio.charset.{Charset => JCharset, StandardCharsets}
 
 /** Payload sniffing (F1) and deterministic charset decoding (F2).
   *
@@ -20,6 +19,14 @@ import java.nio.ByteBuffer
   * Malformed sequences decode to U+FFFD (REPLACE) — deterministic. The list
   * is FIXED (not `JCharset.isSupported`-driven) so output never depends on
   * the JRE's installed charset providers.
+  *
+  * Both sniffs read the payload bytes in place: the HTML markers and
+  * `charset=` are matched against the first 1024 bytes with ASCII case
+  * folding (a non-ASCII byte matches no marker byte), and only the short
+  * label is materialized. The decode is `new String(bytes, off, len, cs)`
+  * over a charset resolved once per label; the JDK specifies that this
+  * constructor replaces malformed and unmappable input with the charset's
+  * default replacement, which is the REPLACE/REPLACE decoder policy above.
   */
 object Charset {
 
@@ -47,18 +54,30 @@ object Charset {
     "euc-jp" -> "EUC-JP",
     "euc-kr" -> "EUC-KR", "ks_c_5601-1987" -> "EUC-KR"
   )
+  /** The charsets of [[LABELS]], each resolved once. */
+  private val LABEL_CS: Map[String, JCharset] =
+    LABELS.map { case (label, name) => label -> JCharset.forName(name) }
+
   val KIND_HTML = "html"
   val KIND_PDF = "pdf"
   val KIND_TEXT = "text"
   val KIND_EMPTY = "empty"
 
   private val PDF_MAGIC = "%PDF-".getBytes("US-ASCII")
+  /** Bytes of the head that are sniffed for markers and `charset=`. */
+  private final val HEAD = 1024
+  private val HTML_MARKERS =
+    Array("<!doctype", "<html", "<head", "<body").map(_.getBytes("US-ASCII"))
+  private val CHARSET_EQ = "charset=".getBytes("US-ASCII")
 
   /** UTF-16 BOM detection: 2 = LE (FF FE), 1 = BE (FE FF), 0 = none. */
   private def utf16Bom(bytes: Array[Byte]): Int =
     if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xfe) 2
     else if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xfe && (bytes(1) & 0xff) == 0xff) 1
     else 0
+
+  private def utf8Bom(bytes: Array[Byte]): Boolean =
+    bytes.length >= 3 && (bytes(0) & 0xff) == 0xef && (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf
 
   /** Classify raw payload bytes: empty | pdf | html | text. A UTF-16 BOM
     * switches the head sniff to UTF-16 decoding — otherwise `<html` is
@@ -67,37 +86,34 @@ object Charset {
   def sniffKind(bytes: Array[Byte]): String = {
     if (bytes == null || bytes.isEmpty) return KIND_EMPTY
     if (startsWith(bytes, PDF_MAGIC)) return KIND_PDF
-    val head =
+    val html =
       if (utf16Bom(bytes) != 0) {
         val cs = if (utf16Bom(bytes) == 2) "UTF-16LE" else "UTF-16BE"
         val n = math.min(bytes.length, 2048)
-        new String(bytes, 2, n - 2, cs).toLowerCase
-      } else asciiLowerHead(bytes, 1024)
-    if (head.contains("<!doctype") || head.contains("<html") || head.contains("<head") || head.contains("<body"))
-      KIND_HTML
-    else KIND_TEXT
+        val head = new String(bytes, 2, n - 2, cs).toLowerCase
+        head.contains("<!doctype") || head.contains("<html") || head.contains("<head") || head.contains("<body")
+      } else {
+        val m = math.min(bytes.length, HEAD)
+        var found = false
+        var i = 0
+        while (!found && i < m) {
+          if (bytes(i) == '<') {
+            var k = 0
+            while (!found && k < HTML_MARKERS.length) {
+              found = matchesFolded(bytes, m, i, HTML_MARKERS(k))
+              k += 1
+            }
+          }
+          i += 1
+        }
+        found
+      }
+    if (html) KIND_HTML else KIND_TEXT
   }
 
   /** Sniff the charset name per the policy above. */
-  def sniffCharset(bytes: Array[Byte]): String = {
-    if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef && (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf)
-      return "utf-8"
-    val head = asciiLowerHead(bytes, 1024)
-    val i = head.indexOf("charset=")
-    if (i >= 0) {
-      var j = i + 8
-      // optional quote
-      if (j < head.length && (head.charAt(j) == '"' || head.charAt(j) == '\'')) j += 1
-      val start = j
-      while (
-        j < head.length && {
-          val c = head.charAt(j)
-          (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '-' || c == '_'
-        }
-      ) j += 1
-      LABELS.getOrElse(head.substring(start, j), "UTF-8")
-    } else "UTF-8"
-  }
+  def sniffCharset(bytes: Array[Byte]): String =
+    if (utf8Bom(bytes)) "utf-8" else LABELS.getOrElse(headLabel(bytes), "UTF-8")
 
   /** Decode bytes to a String under the fixed policy (UTF-16 BOMs beat the
     * meta label exactly like the UTF-8 BOM does).
@@ -105,18 +121,10 @@ object Charset {
   def decode(bytes: Array[Byte]): String = {
     if (bytes == null || bytes.isEmpty) return ""
     val u16 = utf16Bom(bytes)
-    val hasBom8 =
-      bytes.length >= 3 && (bytes(0) & 0xff) == 0xef && (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf
-    val (name, off) =
-      if (u16 == 2) ("UTF-16LE", 2)
-      else if (u16 == 1) ("UTF-16BE", 2)
-      else if (hasBom8) ("UTF-8", 3)
-      else (sniffCharset(bytes), 0)
-    val dec = JCharset.forName(name)
-      .newDecoder()
-      .onMalformedInput(CodingErrorAction.REPLACE)
-      .onUnmappableCharacter(CodingErrorAction.REPLACE)
-    dec.decode(ByteBuffer.wrap(bytes, off, bytes.length - off)).toString
+    if (u16 == 2) new String(bytes, 2, bytes.length - 2, StandardCharsets.UTF_16LE)
+    else if (u16 == 1) new String(bytes, 2, bytes.length - 2, StandardCharsets.UTF_16BE)
+    else if (utf8Bom(bytes)) new String(bytes, 3, bytes.length - 3, StandardCharsets.UTF_8)
+    else new String(bytes, LABEL_CS.getOrElse(headLabel(bytes), StandardCharsets.UTF_8))
   }
 
   private def startsWith(b: Array[Byte], prefix: Array[Byte]): Boolean = {
@@ -126,20 +134,46 @@ object Charset {
     true
   }
 
-  /** First `n` bytes viewed as lowercase ASCII (non-ASCII -> '?'). */
-  private def asciiLowerHead(b: Array[Byte], n: Int): String = {
-    val m = math.min(b.length, n)
-    val sb = new java.lang.StringBuilder(m)
+  /** ASCII lowercase of one byte; a non-ASCII byte stays >= 0x80, so it
+    * matches no byte of an ASCII pattern.
+    */
+  private def fold(b: Byte): Int = {
+    val c = b & 0xff
+    if (c >= 'A' && c <= 'Z') c + 32 else c
+  }
+
+  /** Does lowercase ASCII `pat` occur at `at`, wholly inside the first `m`
+    * bytes of `b`, under ASCII case folding?
+    */
+  private def matchesFolded(b: Array[Byte], m: Int, at: Int, pat: Array[Byte]): Boolean = {
+    if (at + pat.length > m) return false
+    var k = 0
+    while (k < pat.length && fold(b(at + k)) == pat(k)) k += 1
+    k == pat.length
+  }
+
+  /** The label after the first `charset=` in the head, ASCII-lowercased:
+    * an optional quote, then the run of `[a-z0-9_-]` (case-folded) that
+    * ends inside the head; "" when the head has no `charset=`.
+    */
+  private def headLabel(b: Array[Byte]): String = {
+    val m = math.min(b.length, HEAD)
     var i = 0
-    while (i < m) {
-      val c = b(i) & 0xff
-      if (c < 0x80) {
-        val ch = c.toChar
-        sb.append(if (ch >= 'A' && ch <= 'Z') (ch + 32).toChar else ch)
-      } else sb.append('?')
-      i += 1
-    }
-    sb.toString
+    while (i < m && !(fold(b(i)) == 'c' && matchesFolded(b, m, i, CHARSET_EQ))) i += 1
+    if (i >= m) return ""
+    var j = i + CHARSET_EQ.length
+    if (j < m && (b(j) == '"' || b(j) == '\'')) j += 1
+    val start = j
+    while (
+      j < m && {
+        val c = fold(b(j))
+        (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '-' || c == '_'
+      }
+    ) j += 1
+    val label = new Array[Char](j - start)
+    var k = 0
+    while (k < label.length) { label(k) = fold(b(start + k)).toChar; k += 1 }
+    new String(label)
   }
 
   /** Canonical whitespace normalization shared by every text-producing path:

@@ -85,9 +85,10 @@ object Curate {
     *                  the survivors) over the EXTRACTED text (pre line-dedup
     *                  — see the stage comment for why), min-label-propagation
     *                  connected components, keep the lexicographically-least
-    *                  url per cluster. The drop set
-    *                  joins into the SAME fused verdict pass on the url key
-    *                  the signals join already shuffles on. Off by default:
+    *                  url per cluster. The fused verdict pass left-joins
+    *                  the drop set on url; that join is the only one the
+    *                  pass has (the Gopher signals are per-row columns, not
+    *                  a join). Off by default:
     *                  the component loop is a multi-job iteration, and the
     *                  committed funnel measurements are the default path.
     */
@@ -150,23 +151,19 @@ object Curate {
 
     // optional EXACTSUBSTR span cut: corpus-wide duplicated spans removed,
     // document remainders kept (the cut text then faces the quality gate).
-    // The cut result lands as a parquet artifact like the extract stage:
-    // the verdict pass consumes withText twice (signals + judged), and
+    // The cut passes the other columns through, one row per line-deduped
+    // row, so no join puts them back. The result lands as a parquet
+    // artifact like the extract stage: near-dedup reads the text again, and
     // without the artifact each consumer would re-run the gram pipeline
-    // AND the line-dedup join chain
     val withText =
       if (!cutSpans) withText0
       else {
         val cutDir = s"$outDir-cut"
-        timed("cut-spans") {
-          val cut = Dedup.substrCutOver(
-            withText0.select(col("url").as("doc_id"), col("text")))
-            .select(col("doc_id").as("url"), col("text_cut").as("text"))
-          withText0.drop("text")
-            .join(cut, Seq("url"))
-            .write.mode("overwrite").parquet(cutDir)
-        }
-        spark.read.parquet(cutDir)
+        val cutFrame = Dedup.substrCutOver(withText0.withColumnRenamed("url", "doc_id"))
+          .select(col("doc_id").as("url"), col("warc_ts"), col("lang"),
+            col("contentKind"), col("text_cut").as("text"))
+        timed("cut-spans")(cutFrame.write.mode("overwrite").parquet(cutDir))
+        spark.read.schema(cutFrame.schema).parquet(cutDir)
       }
 
     // optional MinHash near-dedup: candidates from >= 2 shared LSH bands,
@@ -177,8 +174,8 @@ object Curate {
     // original's earlier occurrence) and die at the gate mislabeled
     // "low quality" instead of "duplicate" — the distinction a curation
     // audit needs. Reads the column-pruned extract artifact; the drop set
-    // lands as a tiny (url)-only table the fused pass joins on the url key
-    // it already shuffles on.
+    // lands as a tiny (url)-only table that the fused pass left-joins on
+    // url, the one join that pass has.
     val nearDrop =
       if (!nearDedup) None
       else Some(timed("near-dedup") {

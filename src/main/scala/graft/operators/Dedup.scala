@@ -1206,10 +1206,11 @@ object Dedup {
     * (start gap <= L) merge into maximal spans (gaps-and-islands).
     *
     * Scale shape (100 TB): exactly TWO exchanges of the gram table — one on
-    * the md5 gram key (the corpus-frequency count window; partition = one
-    * gram's postings, counting only, no pairwise join so a hot boilerplate
-    * gram costs O(df) not O(df²)), then one on doc_id (island merge + span
-    * aggregation ride the same exchange). No join back to the documents
+    * the md5 gram key (the location window: least and greatest
+    * (doc_id, pos) per gram; partition = one gram's postings, no pairwise
+    * join so a hot boilerplate gram costs O(df) not O(df²)), then one on
+    * doc_id (island merge + span aggregation ride the same exchange). No
+    * join back to the documents
     * table; gram payload is (doc_id, pos, 16-byte key). The suffix-array
     * formulation this replaces needs a global sort of every suffix — the
     * gram-hash form shuffles fixed-size records and never materializes
@@ -1221,7 +1222,8 @@ object Dedup {
 
   /** Core of [[substr]] over any (doc_id, text) frame — unit-testable; the
     * pipeline form omits the global sort (a curation pass consumes spans
-    * unordered).
+    * unordered). A doc_id repeated with the same text gets the spans of one
+    * copy; its `n_dup_grams` counts the grams of every copy.
     */
   private[graft] def substrOver(d: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1235,9 +1237,14 @@ object Dedup {
           transform(
             sequence(lit(0), size(col("t")) - L),
             i => md5(concat_ws(" ", slice(col("t"), i + 1, lit(L)))))).as(Seq("pos", "h")))
+    // duplicated = the gram's locations span more than one (doc_id, pos):
+    // copies of a repeated doc_id share their locations, so a document
+    // repeated in the input does not cut itself away
+    val wh = Window.partitionBy("h")
+    val loc = struct(col("doc_id"), col("pos"))
     val dup = grams
-      .withColumn("c", count(lit(1)).over(Window.partitionBy("h")))
-      .filter(col("c") > 1)
+      .select(col("*"), min(loc).over(wh).as("lo"), max(loc).over(wh).as("hi"))
+      .filter(col("lo") =!= col("hi"))
     val wd = Window.partitionBy("doc_id").orderBy("pos")
     dup
       .withColumn("brk",
@@ -1304,17 +1311,20 @@ object Dedup {
         md5(col("text_cut").cast("binary")).as("clean_md5"))
       .orderBy("doc_id")
 
-  /** Core of [[substrCut]] over any (doc_id, text) frame (doc_id of any
-    * type — [[Curate]] keys by url): returns the CLEANED text plus token
-    * accounting. Tokens are space-split, so newlines embedded in tokens
+  /** Core of [[substrCut]] over any frame with `doc_id` and `text` columns
+    * (doc_id of any type — [[Curate]] keys by url): returns the CLEANED
+    * text plus token accounting, leading with doc_id, n_tok, n_kept, n_cut,
+    * text_cut and passing every other input column through, one row per
+    * input row. Tokens are space-split, so newlines embedded in tokens
     * survive reassembly byte-identically.
     */
   private[graft] def substrCutOver(d: DataFrame): DataFrame = {
     val spans = substrOver(d)
       .groupBy("doc_id")
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("sp"))
+    val rest = d.columns.filterNot(Set("doc_id", "text")).map(col).toSeq
     d
-      .select(col("doc_id"), Toks.tokens(col("text")).as("t"))
+      .select(col("doc_id") +: Toks.tokens(col("text")).as("t") +: rest: _*)
       .join(spans, Seq("doc_id"), "left")
       .withColumn("sp",
         coalesce(col("sp"),
@@ -1323,12 +1333,12 @@ object Dedup {
         filter(col("t"), (_, i) =>
           !exists(col("sp"),
             s => i.cast("long") >= s("span_start") && i.cast("long") < s("span_end"))))
-      .select(
+      .select(Seq(
         col("doc_id"),
         size(col("t")).cast("long").as("n_tok"),
         size(col("kept")).cast("long").as("n_kept"),
         (size(col("t")) - size(col("kept"))).cast("long").as("n_cut"),
-        array_join(col("kept"), " ").as("text_cut"))
+        array_join(col("kept"), " ").as("text_cut")) ++ rest: _*)
   }
 
   val substrCutSql: String = {

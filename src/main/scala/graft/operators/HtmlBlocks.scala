@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.functions.{Charset, Entities}
-import scala.collection.mutable.ArrayBuffer
 
 /** A candidate block before doc-level classification: the shared output of
   * the HTML tokenizer (this file) and the PDF run parser. Pure, per-document,
@@ -42,6 +41,16 @@ case class RawBlock(
   *   - flags bit0 set when any ancestor is nav/aside/footer/header/form or
   *     carries a stop-listed class/id token.
   *   - Never throws on arbitrary input (property-tested).
+  *
+  * The scan runs over the page's char array. A tag name is ASCII-folded
+  * and looked up once in a table that gives its canonical name and its
+  * flag bits (void, raw text, dropped, boilerplate, container, block, link)
+  * — tag names are ASCII by construction, so the result never depends on
+  * the JVM default locale. Attribute names are compared in place, ASCII
+  * case-insensitively; only `class` and `id` values are materialized, and
+  * they fold with `Locale.ROOT`. Text between markup is appended as whole
+  * runs into one char buffer: whitespace and NBSP collapse to one space as
+  * they arrive, and the word count is kept as the spaces are written.
   */
 object HtmlBlocks {
 
@@ -73,10 +82,6 @@ object HtmlBlocks {
   )
   // class/id token stop-list (token equals)
   private val STOP_EQ = Set("ad", "ads")
-
-  // hoisted: String.split(regex) compiles a Pattern per call, and this runs
-  // once per classed tag (~millions/sec in the tokenizer hot loop)
-  private val WS_RE = java.util.regex.Pattern.compile("\\s+")
   // class/id token stop-list (token contains)
   private val STOP_SUB = Array(
     "comment", "sidebar", "foot", "nav", "menu", "banner", "advert",
@@ -87,313 +92,398 @@ object HtmlBlocks {
   def isStopToken(t: String): Boolean =
     STOP_EQ.contains(t) || STOP_SUB.exists(t.contains(_))
 
-  private case class Open(
-      tag: String,
-      nodeId: Int,
-      drop: Boolean,
-      boiler: Boolean,
-      link: Boolean,
-      container: Boolean
-  )
+  // flag bits of the tag table
+  private final val F_VOID = 1
+  private final val F_RAWTEXT = 2
+  private final val F_DROP = 4
+  private final val F_BOILER = 8
+  private final val F_CONTAINER = 16
+  private final val F_BLOCK = 32
+  private final val F_LINK = 64
+
+  /** Open-addressed table over every tag name that carries a flag: the
+    * canonical lowercase name and its flag bits, found by the ASCII-folded
+    * hash of the name's chars.
+    */
+  private final val TAB_MASK = 255
+  private val TAB_NAME = new Array[String](TAB_MASK + 1)
+  private val TAB_FLAGS = new Array[Int](TAB_MASK + 1)
+  locally {
+    (VOID ++ RAWTEXT ++ DROP ++ BOILER ++ CONTAINER ++ BLOCK + "a").foreach { t =>
+      val f =
+        (if (VOID(t)) F_VOID else 0) | (if (RAWTEXT(t)) F_RAWTEXT else 0) |
+          (if (DROP(t)) F_DROP else 0) | (if (BOILER(t)) F_BOILER else 0) |
+          (if (CONTAINER(t)) F_CONTAINER else 0) | (if (BLOCK(t)) F_BLOCK else 0) |
+          (if (t == "a") F_LINK else 0)
+      var h = foldedHash(t.toCharArray, 0, t.length) & TAB_MASK
+      while (TAB_NAME(h) != null) h = (h + 1) & TAB_MASK
+      TAB_NAME(h) = t
+      TAB_FLAGS(h) = f
+    }
+  }
+
+  private def lower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  private def foldedHash(a: Array[Char], from: Int, to: Int): Int = {
+    var h = 0
+    var k = from
+    while (k < to) { h = 31 * h + lower(a(k)); k += 1 }
+    h ^ (h >>> 7)
+  }
+
+  /** Table slot of the tag name `a[from, to)` under ASCII folding; -1 when
+    * the name carries no flag.
+    */
+  private def slotOf(a: Array[Char], from: Int, to: Int): Int = {
+    var h = foldedHash(a, from, to) & TAB_MASK
+    while (TAB_NAME(h) != null) {
+      if (eqFolded(a, from, to - from, TAB_NAME(h))) return h
+      h = (h + 1) & TAB_MASK
+    }
+    -1
+  }
+
+  /** `a[from, from + len)` equals lowercase ASCII `lit` under ASCII folding. */
+  private def eqFolded(a: Array[Char], from: Int, len: Int, lit: String): Boolean =
+    len == lit.length && {
+      var k = 0
+      while (k < len && lower(a(from + k)) == lit.charAt(k)) k += 1
+      k == len
+    }
 
   /** Tokenize decoded HTML into candidate blocks, in document order. */
-  def blocks(html: String): Vector[RawBlock] = {
-    val out = ArrayBuffer.empty[RawBlock]
-    val s = html
-    val n = s.length
+  def blocks(html: String): Vector[RawBlock] = new Tokenizer(html).run()
 
-    // Current block's text, normalized ONLINE (single pass, no per-run
-    // String allocations): whitespace collapses as chars arrive. This is
-    // equivalent to the earlier run-buffer formulation because every
-    // dropDepth/linkDepth change happens at a tag boundary, where the old
-    // code flushed its pending run — so each char sees the same depth state
-    // either way (goldens pin the equivalence).
-    val sbBlock = new java.lang.StringBuilder
-    var linkChars = 0
-    var pendingSpace = false
+  /** `Character.isWhitespace`, with the ASCII range answered inline. */
+  private def isWs(c: Char): Boolean =
+    if (c <= ' ') c == ' ' || (c >= '\t' && c <= '\r') || c >= '\u001c'
+    else c >= '\u0080' && Character.isWhitespace(c)
 
-    val stack = ArrayBuffer.empty[Open]
-    var dropDepth = 0
-    var boilerDepth = 0
-    var linkDepth = 0
-    val containerIds = ArrayBuffer.empty[Int]
-    var nodeCounter = 0
-    var blockCounter = 0
+  /** The text separators: whitespace plus NBSP (from `&nbsp;`), which
+    * `Character.isWhitespace` does not cover.
+    */
+  private def isSep(c: Char): Boolean = isWs(c) || c == '\u00a0'
 
-    def appendChar(c: Char): Unit = {
+  /** `\s` of `java.util.regex`: the separators of class tokens. */
+  private def isClassSep(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Does any whitespace-separated token of `cls` hit the stop-list? */
+  private def stopClassed(cls: String): Boolean = {
+    val n = cls.length
+    var k = 0
+    while (k < n) {
+      while (k < n && isClassSep(cls.charAt(k))) k += 1
+      val ts = k
+      while (k < n && !isClassSep(cls.charAt(k))) k += 1
+      if (k > ts && isStopToken(if (ts == 0 && k == n) cls else cls.substring(ts, k)))
+        return true
+    }
+    false
+  }
+
+  /** One page's tokenizer state. The open-element stack is two parallel
+    * arrays (tag, flags); `cIds` holds the nodeIds of the open containers.
+    */
+  private final class Tokenizer(s: String) {
+    private val a = s.toCharArray
+    private val n = a.length
+    private val out = Vector.newBuilder[RawBlock]
+
+    // the current block's normalized text
+    private var buf = new Array[Char](64)
+    private var blen = 0
+    private var words = 1
+    private var linkChars = 0
+    private var pendingSpace = false
+
+    private var stTag = new Array[String](16)
+    private var stFlags = new Array[Int](16)
+    private var sp = 0
+    private var cIds = new Array[Int](16)
+    private var cp = 0
+    private var dropDepth = 0
+    private var boilerDepth = 0
+    private var linkDepth = 0
+    private var nodeCounter = 0
+    private var blockCounter = 0
+
+    /** Append `src[from, to)`, text with no markup in it, to the current
+      * block: each run between separators is copied whole.
+      */
+    private def appendRun(src: Array[Char], from: Int, to: Int): Unit =
       if (dropDepth == 0) {
-        // ' ' (nbsp, from &nbsp;) collapses like whitespace — Java's
-        // isWhitespace does NOT cover it
-        if (Character.isWhitespace(c) || c == '\u00a0') {
-          if (sbBlock.length > 0) pendingSpace = true
-        } else {
-          val isLink = linkDepth > 0
-          if (pendingSpace) {
-            sbBlock.append(' ')
-            if (isLink) linkChars += 1
-            pendingSpace = false
+        var k = from
+        while (k < to) {
+          if (isSep(src(k))) {
+            if (blen > 0) pendingSpace = true
+            k += 1
+          } else {
+            var e = k + 1
+            while (e < to && !isSep(src(e))) e += 1
+            if (blen + e - k + 1 > buf.length)
+              buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, blen + e - k + 1))
+            if (pendingSpace) {
+              buf(blen) = ' '
+              blen += 1
+              words += 1
+              if (linkDepth > 0) linkChars += 1
+              pendingSpace = false
+            }
+            System.arraycopy(src, k, buf, blen, e - k)
+            blen += e - k
+            if (linkDepth > 0) linkChars += e - k
+            k = e
           }
-          sbBlock.append(c)
-          if (isLink) linkChars += 1
         }
       }
-    }
 
-    def appendStr(d: String): Unit = {
-      var i = 0
-      while (i < d.length) { appendChar(d.charAt(i)); i += 1 }
-    }
-
-    def currentBlockTag(): String = {
-      var i = stack.length - 1
+    private def currentBlockTag(): String = {
+      var i = sp - 1
       while (i >= 0) {
-        val t = stack(i).tag
-        if (BLOCK.contains(t)) return t
+        if ((stFlags(i) & F_BLOCK) != 0) return stTag(i)
         i -= 1
       }
       "body"
     }
 
-    def emitBlock(): Unit = {
-      if (sbBlock.length == 0) {
-        linkChars = 0
-        pendingSpace = false
-        return
+    private def emitBlock(): Unit = {
+      if (blen > 0) {
+        out += RawBlock(
+          seq = blockCounter,
+          tag = currentBlockTag(),
+          depth = sp,
+          text = new String(buf, 0, blen),
+          textLen = blen,
+          linkChars = linkChars,
+          wordCount = words,
+          parentSeq = if (cp > 0) cIds(cp - 1) else 0,
+          flags = if (boilerDepth > 0) graft.Model.FLAG_BOILER else 0
+        )
+        blockCounter += 1
+        blen = 0
+        words = 1
       }
-      val text = sbBlock.toString
-      val blockLinkChars = linkChars
-      sbBlock.setLength(0)
       linkChars = 0
       pendingSpace = false
-      var words = 1
-      var i = 0
-      while (i < text.length) { if (text.charAt(i) == ' ') words += 1; i += 1 }
-      out += RawBlock(
-        seq = blockCounter,
-        tag = currentBlockTag(),
-        depth = stack.length,
-        text = text,
-        textLen = text.length,
-        linkChars = blockLinkChars,
-        wordCount = words,
-        parentSeq = if (containerIds.nonEmpty) containerIds.last else 0,
-        flags = if (boilerDepth > 0) graft.Model.FLAG_BOILER else 0
-      )
-      blockCounter += 1
     }
 
-    def pop(): Unit = {
-      if (stack.isEmpty) return
-      val e = stack.remove(stack.length - 1)
-      if (e.drop) dropDepth -= 1
-      if (e.boiler) boilerDepth -= 1
-      if (e.link) linkDepth -= 1
-      if (e.container && containerIds.nonEmpty)
-        containerIds.remove(containerIds.length - 1)
+    private def push(tag: String, flags: Int): Unit = {
+      if (sp == stTag.length) {
+        stTag = java.util.Arrays.copyOf(stTag, sp * 2)
+        stFlags = java.util.Arrays.copyOf(stFlags, sp * 2)
+      }
+      nodeCounter += 1
+      stTag(sp) = tag
+      stFlags(sp) = flags
+      sp += 1
+      if ((flags & F_DROP) != 0) dropDepth += 1
+      if ((flags & F_BOILER) != 0) boilerDepth += 1
+      if ((flags & F_LINK) != 0) linkDepth += 1
+      if ((flags & F_CONTAINER) != 0) {
+        if (cp == cIds.length) cIds = java.util.Arrays.copyOf(cIds, cp * 2)
+        cIds(cp) = nodeCounter
+        cp += 1
+      }
     }
+
+    private def pop(): Unit =
+      if (sp > 0) {
+        sp -= 1
+        val f = stFlags(sp)
+        stTag(sp) = null
+        if ((f & F_DROP) != 0) dropDepth -= 1
+        if ((f & F_BOILER) != 0) boilerDepth -= 1
+        if ((f & F_LINK) != 0) linkDepth -= 1
+        if ((f & F_CONTAINER) != 0 && cp > 0) cp -= 1
+      }
 
     /** Pop until tag found (inclusive); no-op if absent. */
-    def popTo(tag: String): Unit = {
-      var i = stack.length - 1
-      while (i >= 0 && stack(i).tag != tag) i -= 1
-      if (i < 0) return
-      while (stack.length > i) pop()
+    private def popTo(tag: String): Unit = {
+      var i = sp - 1
+      while (i >= 0 && stTag(i) != tag) i -= 1
+      if (i >= 0) while (sp > i) pop()
+    }
+
+    /** Pop down to the nearest open `t1`/`t2` above the nearest `stop1`/`stop2`. */
+    private def closeAbove(t1: String, t2: String, stop1: String, stop2: String): Unit = {
+      var i = sp - 1
+      while (i >= 0 && stTag(i) != stop1 && stTag(i) != stop2) {
+        if (stTag(i) == t1 || stTag(i) == t2) { while (sp > i) pop(); i = -1 }
+        else i -= 1
+      }
     }
 
     /** Implied end tags before opening `tag`. */
-    def impliedEnds(tag: String): Unit = {
-      def topIs(ts: Set[String]): Boolean =
-        stack.nonEmpty && ts.contains(stack.last.tag)
-      if (BLOCK.contains(tag)) {
-        while (topIs(Set("p"))) pop()
-      }
+    private def impliedEnds(tag: String, flags: Int): Unit = {
+      if ((flags & F_BLOCK) != 0) while (sp > 0 && stTag(sp - 1) == "p") pop()
       tag match {
-        case "li" =>
-          // close an open li above the nearest list boundary
-          var i = stack.length - 1
-          while (i >= 0 && stack(i).tag != "ul" && stack(i).tag != "ol") {
-            if (stack(i).tag == "li") { while (stack.length > i) pop(); i = -1 }
-            else i -= 1
-          }
-        case "td" | "th" =>
-          var i = stack.length - 1
-          while (i >= 0 && stack(i).tag != "tr" && stack(i).tag != "table") {
-            if (stack(i).tag == "td" || stack(i).tag == "th") {
-              while (stack.length > i) pop(); i = -1
-            } else i -= 1
-          }
-        case "tr" =>
-          var i = stack.length - 1
-          while (i >= 0 && stack(i).tag != "table") {
-            if (stack(i).tag == "tr") { while (stack.length > i) pop(); i = -1 }
-            else i -= 1
-          }
-        case "dd" | "dt" =>
-          var i = stack.length - 1
-          while (i >= 0 && stack(i).tag != "dl") {
-            if (stack(i).tag == "dd" || stack(i).tag == "dt") {
-              while (stack.length > i) pop(); i = -1
-            } else i -= 1
-          }
+        // close an open li above the nearest list boundary
+        case "li" => closeAbove("li", "li", "ul", "ol")
+        case "td" | "th" => closeAbove("td", "th", "tr", "table")
+        case "tr" => closeAbove("tr", "tr", "table", "table")
+        case "dd" | "dt" => closeAbove("dd", "dt", "dl", "dl")
         case _ => ()
       }
     }
 
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '<' && i + 1 < n) {
-        val c1 = s.charAt(i + 1)
-        if (c1 == '!') {
-          if (s.startsWith("<!--", i)) {
-            val e = s.indexOf("-->", i + 4)
-            i = if (e < 0) n else e + 3
-          } else if (s.regionMatches(true, i, "<![CDATA[", 0, 9)) {
-            val e = s.indexOf("]]>", i + 9)
-            i = if (e < 0) n else e + 3
-          } else { // doctype / bogus markup decl
+    /** The tag name `a[from, to)`: its canonical name from the table, or
+      * its lowercase copy (name chars are ASCII, so `Locale.ROOT` folds
+      * ASCII-only); the flags are `TAB_FLAGS` of `slot`.
+      */
+    private def tagName(from: Int, to: Int, slot: Int): String =
+      if (slot >= 0) TAB_NAME(slot)
+      else new String(a, from, to - from).toLowerCase(java.util.Locale.ROOT)
+
+    /** Index of the first `</tag` at or after `from`, the tag compared as
+      * `String.regionMatches` ignoring case does; -1 if none.
+      */
+    private def closeTagAt(tag: String, from: Int): Int = {
+      var k = from
+      while (k + 1 < n) {
+        if (a(k) == '<' && a(k + 1) == '/' && s.regionMatches(true, k + 2, tag, 0, tag.length))
+          return k
+        k += 1
+      }
+      -1
+    }
+
+    def run(): Vector[RawBlock] = {
+      var i = 0
+      while (i < n) {
+        val c = a(i)
+        if (c == '<' && i + 1 < n) {
+          val c1 = a(i + 1)
+          if (c1 == '!') {
+            if (s.startsWith("<!--", i)) {
+              val e = s.indexOf("-->", i + 4)
+              i = if (e < 0) n else e + 3
+            } else if (s.regionMatches(true, i, "<![CDATA[", 0, 9)) {
+              val e = s.indexOf("]]>", i + 9)
+              i = if (e < 0) n else e + 3
+            } else { // doctype / bogus markup decl
+              val e = s.indexOf('>', i + 2)
+              i = if (e < 0) n else e + 1
+            }
+          } else if (c1 == '?') {
             val e = s.indexOf('>', i + 2)
             i = if (e < 0) n else e + 1
-          }
-        } else if (c1 == '?') {
-          val e = s.indexOf('>', i + 2)
-          i = if (e < 0) n else e + 1
-        } else if (c1 == '/') {
-          // end tag
-          var j = i + 2
-          val start = j
-          while (j < n && isNameChar(s.charAt(j))) j += 1
-          if (j == start) {
-            // "</" not followed by name: literal text
-            appendChar(c); i += 1
+          } else if (c1 == '/') {
+            // end tag
+            var j = i + 2
+            val start = j
+            while (j < n && isNameChar(a(j))) j += 1
+            if (j == start) {
+              // "</" not followed by name: literal text
+              appendRun(a, i, i + 1); i += 1
+            } else {
+              val slot = slotOf(a, start, j)
+              val tag = tagName(start, j, slot)
+              // skip to '>'
+              while (j < n && a(j) != '>') j += 1
+              i = if (j < n) j + 1 else n
+              if (slot >= 0 && (TAB_FLAGS(slot) & F_BLOCK) != 0) emitBlock()
+              popTo(tag)
+            }
+          } else if (isNameStart(c1)) {
+            i = startTag(i)
           } else {
-            val tag = s.substring(start, j).toLowerCase
-            // skip to '>'
-            while (j < n && s.charAt(j) != '>') j += 1
-            i = if (j < n) j + 1 else n
-            if (BLOCK.contains(tag)) emitBlock()
-            popTo(tag)
+            // '<' followed by junk: literal
+            appendRun(a, i, i + 1)
+            i += 1
           }
-        } else if (isNameStart(c1)) {
-          // start tag
-          var j = i + 1
-          val start = j
-          while (j < n && isNameChar(s.charAt(j))) j += 1
-          val tag = s.substring(start, j).toLowerCase
-          // parse attributes
-          var classAttr = ""
-          var idAttr = ""
-          var selfClosing = false
-          var done = false
-          while (!done && j < n) {
-            // skip ws
-            while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-            if (j >= n) done = true
-            else {
-              val ch = s.charAt(j)
-              if (ch == '>') { j += 1; done = true }
-              else if (ch == '/') {
-                if (j + 1 < n && s.charAt(j + 1) == '>') {
-                  selfClosing = true; j += 2; done = true
-                } else j += 1
-              } else {
-                // attr name
-                val as = j
-                while (
-                  j < n && {
-                    val a = s.charAt(j)
-                    a != '=' && a != '>' && a != '/' && !Character.isWhitespace(a)
-                  }
-                ) j += 1
-                val aname = s.substring(as, j).toLowerCase
-                while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-                var avalue = ""
-                if (j < n && s.charAt(j) == '=') {
-                  j += 1
-                  while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-                  if (j < n && (s.charAt(j) == '"' || s.charAt(j) == '\'')) {
-                    val q = s.charAt(j)
-                    val vs = j + 1
-                    var k = vs
-                    while (k < n && s.charAt(k) != q) k += 1
-                    avalue = s.substring(vs, math.min(k, n))
-                    j = if (k < n) k + 1 else n
-                  } else {
-                    val vs = j
-                    while (
-                      j < n && {
-                        val a = s.charAt(j)
-                        a != '>' && !Character.isWhitespace(a)
-                      }
-                    ) j += 1
-                    avalue = s.substring(vs, j)
-                  }
-                }
-                if (aname == "class") classAttr = avalue.toLowerCase
-                else if (aname == "id") idAttr = avalue.toLowerCase
-              }
-            }
-          }
-          i = j
-          if (BLOCK.contains(tag)) emitBlock()
-          val isVoid = VOID.contains(tag) || selfClosing
-          if (!isVoid) {
-            impliedEnds(tag)
-            nodeCounter += 1
-            val stopClassed = {
-              var hit = false
-              if (idAttr.nonEmpty && isStopToken(idAttr)) hit = true
-              if (!hit && classAttr.nonEmpty) {
-                val toks = WS_RE.split(classAttr)
-                var t = 0
-                while (!hit && t < toks.length) {
-                  if (toks(t).nonEmpty && isStopToken(toks(t))) hit = true
-                  t += 1
-                }
-              }
-              hit
-            }
-            val e = Open(
-              tag = tag,
-              nodeId = nodeCounter,
-              drop = DROP.contains(tag),
-              boiler = BOILER.contains(tag) || stopClassed,
-              link = tag == "a",
-              container = CONTAINER.contains(tag)
-            )
-            stack += e
-            if (e.drop) dropDepth += 1
-            if (e.boiler) boilerDepth += 1
-            if (e.link) linkDepth += 1
-            if (e.container) containerIds += e.nodeId
-            if (RAWTEXT.contains(tag)) {
-              // skip to matching close tag, content dropped entirely
-              val closeAt = indexOfIgnoreCase(s, "</" + tag, i)
-              if (closeAt < 0) { i = n }
-              else {
-                var k = closeAt + 2 + tag.length
-                while (k < n && s.charAt(k) != '>') k += 1
-                i = if (k < n) k + 1 else n
-              }
-              pop()
-            }
-          }
+        } else if (c == '&') {
+          val (d, ni) = Entities.decodeAt(s, i)
+          appendRun(d.toCharArray, 0, d.length)
+          i = ni
         } else {
-          // '<' followed by junk: literal
-          appendChar(c)
-          i += 1
+          var e = i + 1
+          while (e < n && a(e) != '<' && a(e) != '&') e += 1
+          appendRun(a, i, e)
+          i = e
         }
-      } else if (c == '&') {
-        val (d, ni) = Entities.decodeAt(s, i)
-        appendStr(d)
-        i = ni
-      } else {
-        appendChar(c)
-        i += 1
       }
+      emitBlock()
+      out.result()
     }
-    emitBlock()
-    out.toVector
+
+    /** A start tag at `i` (`<` then a name start): returns the index after it. */
+    private def startTag(i: Int): Int = {
+      var j = i + 1
+      val start = j
+      while (j < n && isNameChar(a(j))) j += 1
+      val slot = slotOf(a, start, j)
+      val tag = tagName(start, j, slot)
+      val tagFlags = if (slot >= 0) TAB_FLAGS(slot) else 0
+      // parse attributes
+      var classAttr = ""
+      var idAttr = ""
+      var selfClosing = false
+      var done = false
+      while (!done && j < n) {
+        // skip ws
+        while (j < n && isWs(a(j))) j += 1
+        if (j >= n) done = true
+        else {
+          val ch = a(j)
+          if (ch == '>') { j += 1; done = true }
+          else if (ch == '/') {
+            if (j + 1 < n && a(j + 1) == '>') {
+              selfClosing = true; j += 2; done = true
+            } else j += 1
+          } else {
+            // attr name: 1 = class, 2 = id, 0 = any other
+            val as = j
+            while (j < n && { val x = a(j); x != '=' && x != '>' && x != '/' && !isWs(x) }) j += 1
+            val which =
+              if (eqFolded(a, as, j - as, "class")) 1 else if (eqFolded(a, as, j - as, "id")) 2 else 0
+            while (j < n && isWs(a(j))) j += 1
+            var vs = j
+            var ve = j
+            if (j < n && a(j) == '=') {
+              j += 1
+              while (j < n && isWs(a(j))) j += 1
+              if (j < n && (a(j) == '"' || a(j) == '\'')) {
+                val q = a(j)
+                vs = j + 1
+                var k = vs
+                while (k < n && a(k) != q) k += 1
+                ve = k
+                j = if (k < n) k + 1 else n
+              } else {
+                vs = j
+                while (j < n && { val x = a(j); x != '>' && !isWs(x) }) j += 1
+                ve = j
+              }
+            }
+            if (which != 0) {
+              val v = new String(a, vs, ve - vs).toLowerCase(java.util.Locale.ROOT)
+              if (which == 1) classAttr = v else idAttr = v
+            }
+          }
+        }
+      }
+      var next = j
+      if ((tagFlags & F_BLOCK) != 0) emitBlock()
+      if ((tagFlags & F_VOID) == 0 && !selfClosing) {
+        impliedEnds(tag, tagFlags)
+        val stop =
+          (idAttr.nonEmpty && isStopToken(idAttr)) || (classAttr.nonEmpty && stopClassed(classAttr))
+        push(tag, if (stop) tagFlags | F_BOILER else tagFlags)
+        if ((tagFlags & F_RAWTEXT) != 0) {
+          // skip to matching close tag, content dropped entirely
+          val closeAt = closeTagAt(tag, next)
+          if (closeAt < 0) next = n
+          else {
+            var k = closeAt + 2 + tag.length
+            while (k < n && a(k) != '>') k += 1
+            next = if (k < n) k + 1 else n
+          }
+          pop()
+        }
+      }
+      next
+    }
   }
 
   private def isNameStart(c: Char): Boolean =

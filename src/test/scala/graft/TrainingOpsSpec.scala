@@ -1157,6 +1157,46 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(kept.exists(urls), "no repeated url reached the corpus")
   }
 
+  test("curate span cut: repeated urls neither fan out nor cut themselves away") {
+    val pages = graft.sources.Corpus.pages(spark, 300)
+    val repeated = pages.limit(40).cache()
+    val urls = repeated.collect().map(_.url).toSet
+    val out = java.nio.file.Files.createTempDirectory("curate-cut-repeat").toString
+    val rep = Curate.run(spark, pages.union(repeated), out, cutSpans = true)
+    repeated.unpersist()
+    assert(rep.extracted == 340L)
+    assert(rep.nonEmpty <= rep.extracted, rep.toString)
+    // one cut row per line-deduped row, with the passed-through columns
+    val cut = spark.read.parquet(s"$out-cut")
+    assert(cut.count() == spark.read.parquet(s"$out-linededup").count())
+    assert(cut.columns.toSeq == Seq("url", "warc_ts", "lang", "contentKind", "text"))
+    val kept = spark.read.parquet(out).select("url").collect().map(_.getString(0))
+    assert(kept.length == kept.distinct.length, "a repeated url survived exact dedup twice")
+    assert(kept.exists(urls), "no repeated url reached the corpus")
+  }
+
+  test("substring cut passes the other columns through; a repeated doc keeps one copy's spans") {
+    import spark.implicits._
+    val passage = (1 to 12).map(i => s"dup$i").mkString(" ")
+    val a = s"one two three four five six seven eight nine $passage tail1 tail2"
+    val d = Seq(
+      (1L, a, "x"),
+      (2L, s"$passage alpha beta gamma delta epsilon zeta eta theta", "y"),
+      (3L, "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10 u11 u12 u13 u14", "z")
+    ).toDF("doc_id", "text", "tag")
+    def cuts(f: org.apache.spark.sql.DataFrame) = Dedup.substrCutOver(f)
+      .select("doc_id", "n_tok", "n_kept", "n_cut", "text_cut", "tag").orderBy("doc_id", "tag")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4), r.getString(5)))
+      .toSeq
+    val once = cuts(d)
+    assert(Dedup.substrCutOver(d).columns.toSeq == Seq("doc_id", "n_tok", "n_kept", "n_cut", "text_cut", "tag"))
+    assert(once.map(_._4) == Seq(12L, 12L, 0L))
+    // doc 3 repeated: its copies share (doc_id, pos) locations, so nothing
+    // is cut from it, and each copy keeps its own row
+    val twice = cuts(d.union(d.filter(col("doc_id") === 3L)))
+    assert(twice == once :+ once(2))
+  }
+
   test("kept_lines: CR, trailing LF, empty lines, supplementary chars, invalid UTF-8, null") {
     import spark.implicits._
     // text as bytes so that invalid UTF-8 reaches the kernel unrepaired
