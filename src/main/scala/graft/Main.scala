@@ -5,38 +5,69 @@ import graft.sources.Corpus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** User-facing driver entry (also the spark-submit entry on a real cluster):
-  *
-  *   extract <nPages> <outDir> [seed]    synthesize corpus, extract, write parquet
-  *   extract-dir <pagesDir> <outDir>     extract from an existing pages table
-  *   write-pages <nPages> <tableDir> [seed] [buckets]
-  *                                       synthesize + write the bucketed pages table
-  *   run <tableDir> <outDir> <manifestDir> [maxBuckets]
-  *                                       resumable production run (per-bucket
-  *                                       lineage; re-run to resume after a kill)
+/** User-facing driver entry (also the spark-submit entry on a real cluster).
+  * One line of [[Main.Commands]] per command; `Main` with no arguments
+  * prints them all.
   *
   * Local run: sbt "runMain graft.Main extract 1000 /tmp/out"
   */
 object Main {
+
+  /** Every command's usage line: `<arg>` is required, `[arg]` optional, and
+    * a bare word after the command name selects a subcommand. The arity
+    * check and the usage text are both derived from this list.
+    */
+  private[graft] val Commands: Seq[String] = Seq(
+    "extract <nPages> <outDir> [seed]",
+    "extract-dir <pagesDir> <outDir>",
+    "markdown-dir <pagesDir> <outDir>",
+    "write-pages <nPages> <tableDir> [seed] [buckets]",
+    "append-pages <fromIdx> <toIdx> <tableDir> [seed]",
+    "run <tableDir> <outDir> <manifestDir> [maxBuckets]",
+    "curate <nPages> <outDir> [seed] [cut-spans] [scrub-pii] [zratio-gate] [near-dedup] [robots-gate]",
+    "curate-dir <pagesDir> <outDir> [cut-spans] [scrub-pii] [zratio-gate] [near-dedup] [robots-gate]",
+    "curate-stream <pagesDir> <outDir>",
+    "upsert-stream <srcDir> <tableDir> <ckpt>",
+    "extract-incr <tableDir> <outDir> <stateFile>",
+    "compact <tableDir> [--zorder [d1,d2] [maxRecordsPerFile]]",
+    "vacuum <tableDir> [minAgeHours]",
+    "doctor <tableDir> [--deep]",
+    "history <tableDir>",
+    "meta <tableDir> [snapshots|files|refs|partitions]",
+    "changes <tableDir> [fromV] [toV]",
+    "rollback <tableDir> <version>",
+    "tag <tableDir> <name> [version]",
+    "untag <tableDir> <name>",
+    "tags <tableDir>",
+    "clone <srcDir> <dstDir> [version|tag]",
+    "rebucket <tableDir> <newBuckets>",
+    "export-hf <curatedDir> <outDir> [shards]",
+    "bloomindex <tableDir>",
+    "lookup <tableDir> <url> [url...]",
+    "branch <tableDir> create <name>",
+    "branch <tableDir> append <name> <srcDir>",
+    "branch <tableDir> audit <name>",
+    "branch <tableDir> publish <name>",
+    "branch <tableDir> discard <name>",
+    "branch <tableDir> list",
+    "explain <query> [sfDir]"
+  )
+
+  private[graft] val Usage: String = Commands.mkString("usage: graft.Main\n  ", "\n  ", "")
+
+  /** Whether `args` name a command and give at least its required
+    * arguments (every word of its usage line before the first `[`).
+    */
+  private[graft] def argsOk(args: Array[String]): Boolean =
+    Commands.exists { line =>
+      val req = line.split(' ').takeWhile(!_.startsWith("["))
+      args.length >= req.length &&
+        req.indices.forall(i => req(i).startsWith("<") || req(i) == args(i))
+    }
+
   def main(args: Array[String]): Unit = {
-    val minArgs =
-      if (args.nonEmpty && Set("scale", "explain",
-        "compact", "vacuum", "history", "changes", "soak", "tags", "meta",
-        "bloomindex", "graph-soak", "mirror-soak", "meta-soak", "doctor").contains(args(0))) 2
-      else if (args.nonEmpty && Set("extract-incr", "upsert-stream").contains(args(0))) 4
-      else 3
-    if (args.length < minArgs) {
-      System.err.println(
-        "usage: graft.Main extract <nPages> <outDir> [seed] | extract-dir <pagesDir> <outDir> | " +
-          "markdown-dir <pagesDir> <outDir> | " +
-          "write-pages <n> <dir> | append-pages <from> <to> <dir> | run <dir> <out> <manifest> | " +
-          "curate <n|pagesDir> <outDir> [cut-spans] [scrub-pii] [zratio-gate] [near-dedup] | " +
-          "curate-stream <pagesDir> <outDir> <ckpt> <fpDir> | " +
-          "upsert-stream <srcDir> <tableDir> <ckpt> | " +
-          "compact <tableDir> | vacuum <tableDir> [minAgeHours] | doctor <tableDir> [--deep] | history <tableDir> | meta <tableDir> [snapshots|files|refs] | rollback <tableDir> <version> | tag <tableDir> <name> [version] | untag <tableDir> <name> | tags <tableDir> | clone <srcDir> <dstDir> [version|tag] | rebucket <tableDir> <newBuckets> | export-hf <curatedDir> <outDir> [shards] | bloomindex <tableDir> | lookup <tableDir> <url> [url...] | branch <tableDir> <create|append|audit|publish|discard|list> [name] [srcDir] | changes <tableDir> <fromV> [toV] | extract-incr <tableDir> <outDir> <stateFile> | " +
-          "explain <query> [sfDir] | " +
-          "scale <pagesDir> [reps] | " +
-          "soak <outBase> [mults] [reps]")
+    if (!argsOk(args)) {
+      System.err.println(Usage)
       sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
@@ -51,25 +82,7 @@ object Main {
         .config("spark.executor.extraClassPath", "/root/repo/target/scala-2.13/classes")
         .config("spark.executor.memory", sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "6g"))
       else builder0
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString) // 4x cores; AQE coalesces small stages
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
-      // keep every phase wider than the core count: small-file scans split
-      // finer than the 128 MB default, and AQE may not coalesce the block
-      // shuffle below ~4 partitions/core (the tokenizer output is compute-
-      // heavy per byte, so partition-size heuristics undercount its cost)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      // force the sort-based shuffle writer (what a real >200-reducer
-      // cluster job uses): the bypass-merge writer's per-reducer files +
-      // transferTo/mmap concat storms serialize on mmap locks at 32 threads
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.file.transferTo", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(builder, cpus.toInt)
     try {
       args(0) match {
         case "write-pages" =>
@@ -102,80 +115,6 @@ object Main {
             .write.mode("overwrite").parquet(args(2))
           val nMd = spark.read.parquet(args(2)).count()
           println(f"serialized $nMd%d pages to markdown in ${(System.nanoTime() - t0) / 1e9}%.2f s -> ${args(2)}")
-          return
-        case "scale" =>
-          // scaling-protocol measurement: repeated full-extract counts over
-          // an existing pages table; reports each rep + the median docs/sec
-          import spark.implicits._
-          val pages = spark.read.schema(Model.PAGES).parquet(args(1)).as[Page]
-          val reps = if (args.length > 2) args(2).toInt else 5
-          val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-            .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-          import scala.jdk.CollectionConverters._
-          def gcMs: Long = java.lang.management.ManagementFactory
-            .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-          def jitMs: Long = java.lang.management.ManagementFactory
-            .getCompilationMXBean.getTotalCompilationTime
-          val nDocs = Extract.extract(pages).count() // warm-up (discarded)
-          val times = (1 to reps).map { i =>
-            val (c0, g0, j0) = (osBean.getProcessCpuTime, gcMs, jitMs)
-            val t0 = System.nanoTime()
-            Extract.extract(pages).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            val cpuS = (osBean.getProcessCpuTime - c0) / 1e9
-            println(f"  rep$i: $dt%.2f s (${nDocs / dt}%.0f docs/s, cpu=$cpuS%.1f core-s, " +
-              f"gc=${(gcMs - g0) / 1000.0}%.1f s, jit=${(jitMs - j0) / 1000.0}%.1f s)")
-            dt
-          }
-          val med = times.sorted.apply(reps / 2)
-          println(f"SCALE cpus=$cpus docs=$nDocs median=$med%.2f s throughput=${nDocs / med}%.0f docs/s")
-          return
-        case "soak" =>
-          // heavy-tail scaling soak (VERDICT r3 item 3): stage deterministic
-          // documents/embeddings tables at several multiples of the sf0.1
-          // row counts, run the iterative/quadratic-risk queries at each,
-          // and report wall times + the fitted scaling exponent between
-          // consecutive scale points (t ~ n^e  =>  e = ln(t2/t1)/ln(n2/n1)).
-          //   soak <outBase> [mults=1,3,10] [reps=2] [queriesCsv]
-          val outBase = args(1)
-          val mults = (if (args.length > 2) args(2) else "1,3,10")
-            .split(',').map(_.toDouble).sorted
-          val soakReps = if (args.length > 3) args(3).toInt else 2
-          val heavy =
-            if (args.length > 4) args(4).split(',').toSeq
-            else Seq("dd_allpairs", "dd_substr", "dd_components",
-              "q_pagerank", "ta_bpe", "dd_semantic")
-          val dirs = mults.map { m =>
-            val d = s"$outBase/x$m"
-            val (nd, nv) = graft.sources.SoakData.stage(spark, d, m)
-            println(s"staged $d: $nd docs, $nv vectors")
-            (m, d)
-          }
-          val times = collection.mutable.Map.empty[(String, Double), Double]
-          heavy.foreach { q =>
-            val fn = SparkEntry.queries(q)
-            fn(spark, dirs.head._2).count() // JIT warm-up at the smallest scale
-            dirs.foreach { case (m, d) =>
-              val best = (1 to soakReps).map { _ =>
-                val t0 = System.nanoTime()
-                val n = fn(spark, d).count()
-                val dt = (System.nanoTime() - t0) / 1e9
-                println(f"  $q%-14s x$m%-5.1f $dt%7.2f s  ($n rows)")
-                dt
-              }.min
-              times((q, m)) = best
-            }
-          }
-          println(f"${"query"}%-14s " + mults.map(m => f"x$m%-8.1f").mkString +
-            mults.sliding(2).map(p => f"${f"e(${p(0)}%.0f->${p(1)}%.0f)"}%-10s").mkString)
-          heavy.foreach { q =>
-            val row = mults.map(m => f"${times((q, m))}%-8.2f").mkString
-            val exps = mults.sliding(2).map { p =>
-              val e = math.log(times((q, p(1))) / times((q, p(0)))) / math.log(p(1) / p(0))
-              f"$e%-10.2f"
-            }.mkString
-            println(f"$q%-14s $row$exps")
-          }
           return
         case "compact" =>
           // compact <tableDir> [--zorder d1,d2 [maxRecordsPerFile]]
@@ -288,125 +227,6 @@ object Main {
           }
           val (v, n) = graft.sources.Clone.run(spark, args(1), args(2), ver, tagRef)
           println(s"cloned ${args(1)} v$v -> ${args(2)} ($n files linked)")
-          return
-        case "graph-soak" =>
-          // graph-soak <n> [reps] — time the graph-analytics family on a
-          // DISTRIBUTED synthetic host graph of n nodes (heap-child edges
-          // for full BFS coverage + an affine mix + quadratic hubs for
-          // non-uniform in-degree). No driver-side materialization: the
-          // edge list is a spark.range expression, checkpointed once.
-          val n = args(1).toLong
-          val reps = if (args.length > 2) args(2).toInt else 2
-          import spark.implicits._
-          def h(c: org.apache.spark.sql.Column) = concat(lit("g"), c, lit(".example.org"))
-          val ids = spark.range(n)
-          val edges = ids.select(h(col("id")).as("src"), h((col("id") * 2 + 1) % n).as("dst"))
-            .unionByName(ids.select(h(col("id")).as("src"), h((col("id") * 2 + 2) % n).as("dst")))
-            .unionByName(ids.select(h(col("id")).as("src"), h((col("id") * 7 + 3) % n).as("dst")))
-            .unionByName(ids.filter(col("id") % 3 === 0)
-              .select(h(col("id")).as("src"), h((col("id") * col("id") + 13) % n).as("dst")))
-            .filter(col("src") =!= col("dst"))
-            .localCheckpoint()
-          val ne = edges.count()
-          val seeds = Seq("g0.example.org", "g1.example.org")
-          val depthCap = 2 + (64 - java.lang.Long.numberOfLeadingZeros(n)).toLong
-          def timeMin(f: => Long): (Double, Long) = {
-            var best = Double.MaxValue; var rows = 0L
-            (1 to reps).foreach { _ =>
-              val t0 = System.nanoTime(); rows = f
-              best = math.min(best, (System.nanoTime() - t0) / 1e9)
-            }
-            (best, rows)
-          }
-          val (tb, rb) = timeMin(graft.operators.CrawlOps
-            .seeddepthOver(edges, seeds, depthCap).count())
-          println(f"GRAPH n=$n edges=$ne seeddepth(depth<=$depthCap): $tb%.2f s ($rb reached)")
-          val (tt, rt) = timeMin(graft.operators.CrawlOps
-            .trustrankOver(edges, seeds).count())
-          println(f"GRAPH n=$n edges=$ne trustrank(4 iters): $tt%.2f s ($rt nodes)")
-          val (tc, rc) = timeMin(graft.operators.CrawlOps.cociteOver(edges).count())
-          println(f"GRAPH n=$n edges=$ne cocite(cap=${graft.operators.CrawlOps.COCITE_CAP}): $tc%.2f s ($rc pairs)")
-          val (tl, rl) = timeMin(graft.operators.CrawlOps
-            .communitiesOver(edges).select("label").distinct().count())
-          println(f"GRAPH n=$n edges=$ne communities(4 rounds): $tl%.2f s ($rl labels)")
-          return
-        case "meta-soak" =>
-          // meta-soak <baseDir> [nFiles] — inflate a fresh table to nFiles
-          // committed data files and time every distributed metadata path
-          // at that scale ($files BatchScan, $partitions, doctor audit,
-          // vacuum live-set diff, clone): the 10^5-file wall VERDICT_r04
-          // named, exercised for real instead of argued about
-          val base = args(1)
-          val nf = if (args.length > 2) args(2).toInt else 100000
-          val dir = s"$base/pages"
-          graft.sources.PageTable.write(Corpus.pages(spark, 200L), dir, 16)
-          val dataDir = new java.io.File(dir, "data")
-          val src0 = graft.sources.Snapshots.walkData(dataDir).head
-          val bytes = java.nio.file.Files.readAllBytes(src0.toPath)
-          val bucketDirs = dataDir.listFiles.filter(f =>
-            f.isDirectory && f.getName.startsWith("bucket=")).sortBy(_.getName)
-          var i = 0
-          while (i < nf) {
-            val leaf = new java.io.File(bucketDirs(i % bucketDirs.length),
-              f"day=2031-${1 + i % 12}%02d-${1 + i % 28}%02d")
-            leaf.mkdirs()
-            java.nio.file.Files.write(
-              new java.io.File(leaf, f"part-syn-$i%06d.parquet").toPath, bytes)
-            i += 1
-          }
-          graft.sources.Snapshots.record(dir)
-          graft.sources.PageTable.register(spark, "msoak", base)
-          def t[A](what: String)(f: => A): A = {
-            val t0 = System.nanoTime(); val r = f
-            println(f"META-SOAK $what%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s  -> $r")
-            r
-          }
-          t("$files")(spark.sql(
-            "SELECT count(*) FROM msoak.`pages$files`").collect()(0).getLong(0))
-          t("$snapshots")(spark.sql(
-            "SELECT max(n_files), max(n_missing) FROM msoak.`pages$snapshots`")
-            .collect()(0).toString)
-          t("$partitions")(spark.sql(
-            "SELECT count(*), sum(n_files) FROM msoak.`pages$partitions`")
-            .collect()(0).toString)
-          t("doctor")(graft.sources.Doctor.audit(dir, Some(spark)).map(_.code).mkString(","))
-          t("vacuum")(graft.sources.Compact.vacuum(spark, dir, 0L).toString)
-          t("clone")(graft.sources.Clone.run(spark, dir, s"$base/clone", None, None)._2)
-          return
-        case "mirror-soak" =>
-          // mirror-soak <hosts> [docsPerHost] [reps] — dd_mirror's core on a
-          // DISTRIBUTED synthetic host corpus: every 10th host pair mirrors
-          // (full copy), every 10th+2 pair shares half; docs are pure
-          // spark.range expressions, never driver-side. Expected pairs =
-          // hosts/10 full + hosts/10 half mirrors.
-          val nh = args(1).toLong
-          val dph = if (args.length > 2) args(2).toInt else 51
-          // the boundary-mirror plant copies exactly 2/3 of dph docs, and
-          // 3*(2/3*dph) == 2*dph (J exactly 1/2) only when 3 | dph
-          require(dph % 3 == 0, s"docsPerHost must be divisible by 3, got $dph")
-          val mreps = if (args.length > 3) args(3).toInt else 2
-          import spark.implicits._
-          val docs = spark.range(nh * dph).select(
-            (col("id") / dph).cast("long").as("h"),
-            (col("id") % dph).as("d"))
-            // owner host: full mirrors (h%10==1 copies h-1, J=1); boundary
-            // mirrors (h%10==3 copies 2/3 of h-1: J = (2/3)/(4/3) = 1/2
-            // exactly — the >= rule must keep them)
-            .withColumn("owner", when(col("h") % 10 === 1, col("h") - 1)
-              .when(col("h") % 10 === 3 && col("d") % 3 =!= 0, col("h") - 1)
-              .otherwise(col("h")))
-            .select(concat(lit("mh"), col("h"), lit(".example.org")).as("host"),
-              concat(lit("doc "), col("owner"), lit(" "), col("d")).as("text"))
-            .localCheckpoint()
-          val nd = docs.count()
-          var best = Double.MaxValue; var pairs = 0L
-          (1 to mreps).foreach { _ =>
-            val t0 = System.nanoTime()
-            pairs = graft.operators.CrawlOps.mirrorOver(docs).count()
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          println(f"MIRROR hosts=$nh docs=$nd pairs=$pairs: $best%.2f s " +
-            f"(expect ${nh / 10} full + ${nh / 10} boundary = ${2 * (nh / 10)})")
           return
         case "bloomindex" =>
           // bloomindex <tableDir> — (re)build per-file url bloom sidecars
@@ -628,8 +448,7 @@ object Main {
             .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
           (spark.read.schema(Model.PAGES).parquet(args(1))
             .filter(Extract.processable(langs)).as[Page], args(2))
-        case other =>
-          System.err.println(s"unknown command: $other"); sys.exit(2); null
+        case other => sys.error(s"no handler for command $other")
       }
       val t0 = System.nanoTime()
       val docs = Extract.extract(pages)
@@ -644,5 +463,31 @@ object Main {
       stats.foreach(r => println(f"  ${r.getString(0)}%-16s ${r.getLong(1)}%8d docs  ${if (r.isNullAt(2)) 0L else r.getLong(2)}%12d chars"))
       println(f"extracted $total%d docs in $dt%.2f s (${total / dt}%.0f docs/s) -> $outDir")
     } finally spark.stop()
+  }
+
+  /** The tuned session Main and Bench share; each caller picks the master
+    * and app name on `builder`.
+    */
+  private[graft] def session(builder: SparkSession.Builder, cpus: Int): SparkSession = {
+    val spark = builder
+      .config("spark.sql.shuffle.partitions", (cpus * 4).toString) // 4x cores; AQE coalesces small stages
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
+      // keep every phase wider than the core count: small-file scans split
+      // finer than the 128 MB default, and AQE may not coalesce the block
+      // shuffle below ~4 partitions/core (the tokenizer output is compute-
+      // heavy per byte, so partition-size heuristics undercount its cost)
+      .config("spark.sql.files.maxPartitionBytes", "16m")
+      // force the sort-based shuffle writer (what a real >200-reducer
+      // cluster job uses): the bypass-merge writer's per-reducer files +
+      // transferTo/mmap concat storms serialize on mmap locks at 32 threads
+      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
+      .config("spark.file.transferTo", "false")
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

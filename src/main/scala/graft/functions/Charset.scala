@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.nio.charset.{Charset => JCharset, StandardCharsets}
+import java.util.Locale
 
 /** Payload sniffing (F1) and deterministic charset decoding (F2).
   *
@@ -90,7 +91,7 @@ object Charset {
       if (utf16Bom(bytes) != 0) {
         val cs = if (utf16Bom(bytes) == 2) "UTF-16LE" else "UTF-16BE"
         val n = math.min(bytes.length, 2048)
-        val head = new String(bytes, 2, n - 2, cs).toLowerCase
+        val head = new String(bytes, 2, n - 2, cs).toLowerCase(Locale.ROOT)
         head.contains("<!doctype") || head.contains("<html") || head.contains("<head") || head.contains("<body")
       } else {
         val m = math.min(bytes.length, HEAD)

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.Locale
+
 /** HTML character-reference decoding — the WHATWG HTML §13.5 subset the
   * engine supports, fixed and documented so the production extraction and
   * its relational twin share one definition (determinism, BASELINE.json:14).
@@ -64,7 +66,7 @@ object Entities {
       base + off
     }
     val upper = names.zipWithIndex.map { case (n, i) => n -> cp(0x391, i).toChar.toString }
-    val lower = names.zipWithIndex.map { case (n, i) => n.toLowerCase -> cp(0x3b1, i).toChar.toString }
+    val lower = names.zipWithIndex.map { case (n, i) => n.toLowerCase(Locale.ROOT) -> cp(0x3b1, i).toChar.toString }
     (upper ++ lower).toMap ++ Map(
       "sigmaf" -> "ς", "thetasym" -> "ϑ", "upsih" -> "ϒ", "piv" -> "ϖ")
   }

@@ -585,7 +585,7 @@ object CrawlOps {
   def exSeeddepth(spark: SparkSession, sfDir: String): DataFrame =
     seeddepthOver(StructuredCorpus.hostedges(spark), SEED_HOSTS).orderBy("host")
 
-  /** Pipeline form over any (src, dst) edge list (the graph-soak entry). */
+  /** Pipeline form over any (src, dst) edge list. */
   private[graft] def seeddepthOver(edgesIn: DataFrame, seeds: Seq[String],
       maxDepth: Long = MAX_DEPTH): DataFrame = {
     val spark = edgesIn.sparkSession
@@ -700,7 +700,7 @@ object CrawlOps {
   def exCocite(spark: SparkSession, sfDir: String): DataFrame =
     cociteOver(StructuredCorpus.hostedges(spark)).orderBy("host_a", "host_b")
 
-  /** Pipeline form over any (src, dst) edge list (the graph-soak entry). */
+  /** Pipeline form over any (src, dst) edge list. */
   private[graft] def cociteOver(e: DataFrame): DataFrame = {
     val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
     // materialize the capped edge set ONCE: without this both self-join
@@ -819,7 +819,7 @@ object CrawlOps {
   def exTrustrank(spark: SparkSession, sfDir: String): DataFrame =
     trustrankOver(StructuredCorpus.hostedges(spark), SEED_HOSTS).orderBy("host")
 
-  /** Pipeline form over any (src, dst) edge list (the graph-soak entry). */
+  /** Pipeline form over any (src, dst) edge list. */
   private[graft] def trustrankOver(edgesIn: DataFrame, seedList: Seq[String]): DataFrame = {
     val e = edgesIn.localCheckpoint()
     val odeg = e.groupBy("src").agg(count(lit(1)).as("odeg"))
@@ -1135,8 +1135,8 @@ object CrawlOps {
   def ddMirror(spark: SparkSession, sfDir: String): DataFrame =
     mirrorOver(StructuredCorpus.mirrordocs(spark))
 
-  /** The parameterized core over any (host, text) frame — shared by the
-    * staged-corpus query and `Main mirror-soak`'s scale harness.
+  /** The parameterized core over any (host, text) frame, behind the
+    * staged-corpus query.
     */
   def mirrorOver(docs: DataFrame): DataFrame = {
     val fps = docs
@@ -1198,8 +1198,7 @@ object CrawlOps {
     * identical cost shape to ex_trustrank/ex_hits.
     */
   /** The parameterized core: sync LPA over any directed edge DF (symmetrized
-    * here), `rounds` fixed iterations — shared by the staged-corpus query
-    * and `Main graph-soak`'s scale harness.
+    * here), `rounds` fixed iterations, behind the staged-corpus query.
     */
   def communitiesOver(e0: DataFrame, rounds: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window

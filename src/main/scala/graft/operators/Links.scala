@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.Entities
 import scala.collection.mutable.ArrayBuffer
+import java.util.Locale
 
 /** Anchor/link extraction — the link-graph construction stage of a web
   * pipeline (outlink edges feed frontier scheduling, host graphs, PageRank).
@@ -83,7 +84,7 @@ object Links {
           while (j < n && isNameChar(s.charAt(j))) j += 1
           if (j == start) { appendChar(c); i += 1 }
           else {
-            val tag = s.substring(start, j).toLowerCase
+            val tag = s.substring(start, j).toLowerCase(Locale.ROOT)
             while (j < n && s.charAt(j) != '>') j += 1
             i = if (j < n) j + 1 else n
             if (tag == "a") flush()
@@ -92,7 +93,7 @@ object Links {
           var j = i + 1
           val start = j
           while (j < n && isNameChar(s.charAt(j))) j += 1
-          val tag = s.substring(start, j).toLowerCase
+          val tag = s.substring(start, j).toLowerCase(Locale.ROOT)
           var hrefAttr = ""
           var done = false
           while (!done && j < n) {
@@ -110,7 +111,7 @@ object Links {
                     a != '=' && a != '>' && a != '/' && !Character.isWhitespace(a)
                   }
                 ) j += 1
-                val aname = s.substring(as, j).toLowerCase
+                val aname = s.substring(as, j).toLowerCase(Locale.ROOT)
                 while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
                 var avalue = ""
                 if (j < n && s.charAt(j) == '=') {

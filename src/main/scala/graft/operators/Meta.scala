@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{Charset, Entities}
+import java.util.Locale
 
 /** Page-metadata extraction — the head-section fields every crawl index
   * keeps alongside the extracted text: `<title>` content (RCDATA: entities
@@ -47,7 +48,7 @@ object Meta {
           var j = i + 1
           val start = j
           while (j < n && isNameChar(s.charAt(j))) j += 1
-          val tag = s.substring(start, j).toLowerCase
+          val tag = s.substring(start, j).toLowerCase(Locale.ROOT)
           // parse attributes into a small list
           var attrs = List.empty[(String, String)]
           var done = false
@@ -66,7 +67,7 @@ object Meta {
                     a != '=' && a != '>' && a != '/' && !Character.isWhitespace(a)
                   }
                 ) j += 1
-                val aname = s.substring(as, j).toLowerCase
+                val aname = s.substring(as, j).toLowerCase(Locale.ROOT)
                 while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
                 var avalue = ""
                 if (j < n && s.charAt(j) == '=') {
@@ -103,10 +104,10 @@ object Meta {
             case "meta" if !csDone =>
               val m = attrs.reverse.toMap
               m.get("charset") match {
-                case Some(v) if v.nonEmpty => cs = v.toLowerCase; csDone = true
+                case Some(v) if v.nonEmpty => cs = v.toLowerCase(Locale.ROOT); csDone = true
                 case _ =>
                   if (m.get("http-equiv").exists(_.equalsIgnoreCase("content-type"))) {
-                    val content = m.getOrElse("content", "").toLowerCase
+                    val content = m.getOrElse("content", "").toLowerCase(Locale.ROOT)
                     val at = content.indexOf("charset=")
                     if (at >= 0) {
                       var k = at + 8

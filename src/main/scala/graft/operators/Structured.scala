@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
+import java.util.Locale
 
 /** Structured-data extraction — the two page-embedded data surfaces a
   * web-extraction pipeline harvests beyond running text:
@@ -54,7 +55,7 @@ object Structured {
               a != '=' && a != '>' && a != '/' && !Character.isWhitespace(a)
             }
           ) j += 1
-          val aname = s.substring(as, j).toLowerCase
+          val aname = s.substring(as, j).toLowerCase(Locale.ROOT)
           while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
           var avalue = ""
           if (j < n && s.charAt(j) == '=') {
@@ -136,7 +137,7 @@ object Structured {
         (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
         val (attrs, bodyStart) = parseAttrs(s, lt + 7)
         val (bodyEnd, past) = findClose(s, bodyStart, "script")
-        val typ = attrs.collectFirst { case ("type", v) => v.trim.toLowerCase }.getOrElse("")
+        val typ = attrs.collectFirst { case ("type", v) => v.trim.toLowerCase(Locale.ROOT) }.getOrElse("")
         if (typ == "application/ld+json") out += s.substring(bodyStart, bodyEnd)
         i = past
       } else i = lt + 1
@@ -313,7 +314,7 @@ object Structured {
         val (attrs, past) = parseAttrs(s, lt + 5)
         val rel = attrs.collectFirst { case ("rel", v) => v }.getOrElse("")
         val href = attrs.collectFirst { case ("href", v) => v }.getOrElse("")
-        if (rel.toLowerCase.split("\\s+").contains("canonical") && href.nonEmpty)
+        if (rel.toLowerCase(Locale.ROOT).split("\\s+").contains("canonical") && href.nonEmpty)
           return href
         i = past
       } else if (lt + 8 <= n && s.regionMatches(true, lt + 1, "/head", 0, 5)) {
@@ -434,7 +435,7 @@ object Structured {
         var j = lt + 1
         val ts = j
         while (j < n && (Character.isLetterOrDigit(s.charAt(j)) || s.charAt(j) == '-')) j += 1
-        val tag = s.substring(ts, j).toLowerCase
+        val tag = s.substring(ts, j).toLowerCase(Locale.ROOT)
         val (attrs, past) = parseAttrs(s, j)
         out += ((tag, attrs))
         i = if (tag == "title" || tag == "script" || tag == "style")
@@ -461,8 +462,8 @@ object Structured {
     var ogTitle = ""; var ogType = ""; var ogImage = ""; var ogUrl = ""; var tw = ""
     headElems(html).foreach { case (tag, attrs) =>
       if (tag == "meta") {
-        val prop = attr(attrs, "property").toLowerCase
-        val nm = attr(attrs, "name").toLowerCase
+        val prop = attr(attrs, "property").toLowerCase(Locale.ROOT)
+        val nm = attr(attrs, "name").toLowerCase(Locale.ROOT)
         val c = attr(attrs, "content")
         prop match {
           case "og:title" => if (ogTitle.isEmpty) ogTitle = c
@@ -516,7 +517,7 @@ object Structured {
   def hreflangAlts(html: String): Vector[(String, String)] =
     headElems(html).collect {
       case ("link", attrs)
-        if attr(attrs, "rel").toLowerCase.split("\\s+").contains("alternate") &&
+        if attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("alternate") &&
           attr(attrs, "hreflang").nonEmpty =>
         (attr(attrs, "hreflang"), attr(attrs, "href"))
     }
@@ -791,7 +792,7 @@ object Structured {
         val body = s.substring(inner, fEnd)
         // caption first (applies to every img in this figure)
         var figcap = ""
-        val fc = body.toLowerCase.indexOf("<figcaption")
+        val fc = body.toLowerCase(Locale.ROOT).indexOf("<figcaption")
         if (fc >= 0) {
           val (_, capStart) = parseAttrs(body, fc + 11)
           val (capEnd, _) = findClose(body, capStart, "figcaption")
@@ -800,7 +801,7 @@ object Structured {
         }
         var j = 0
         while (j < body.length) {
-          val im = body.toLowerCase.indexOf("<img", j)
+          val im = body.toLowerCase(Locale.ROOT).indexOf("<img", j)
           if (im < 0 || im + 4 < body.length && Character.isLetterOrDigit(body.charAt(im + 4)))
             j = if (im < 0) body.length else im + 4
           else {
@@ -867,7 +868,7 @@ object Structured {
     headElems(html).collectFirst {
       case ("meta", attrs) if attr(attrs, "name").equalsIgnoreCase("robots") =>
         val c = attr(attrs, "content")
-        (c, c.split(',').map(_.trim.toLowerCase).filter(_.nonEmpty).toSet)
+        (c, c.split(',').map(_.trim.toLowerCase(Locale.ROOT)).filter(_.nonEmpty).toSet)
     }.getOrElse(("", Set.empty))
 
   def exMetarobots(spark: SparkSession, sfDir: String): DataFrame = {
@@ -916,7 +917,7 @@ object Structured {
       else {
         val d = c.substring(0, semi).trim
         val rest = c.substring(semi + 1).trim
-        val eq = rest.toLowerCase.indexOf("url=")
+        val eq = rest.toLowerCase(Locale.ROOT).indexOf("url=")
         if (d.nonEmpty && d.forall(_.isDigit) && eq >= 0)
           Some((d.toLong, rest.substring(eq + 4).trim))
         else None
@@ -955,7 +956,7 @@ object Structured {
   def ampHref(html: String): String =
     headElems(html).collectFirst {
       case ("link", attrs)
-        if attr(attrs, "rel").toLowerCase.split("\\s+").contains("amphtml") &&
+        if attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("amphtml") &&
           attr(attrs, "href").nonEmpty =>
         attr(attrs, "href")
     }.getOrElse("")
@@ -1107,7 +1108,7 @@ object Structured {
       } else if (lt + 3 <= n &&
         (s.regionMatches(true, lt + 1, "ul", 0, 2) || s.regionMatches(true, lt + 1, "ol", 0, 2)) &&
         (lt + 3 == n || !Character.isLetterOrDigit(s.charAt(lt + 3)))) {
-        val kind = s.substring(lt + 1, lt + 3).toLowerCase
+        val kind = s.substring(lt + 1, lt + 3).toLowerCase(Locale.ROOT)
         val (_, inner) = parseAttrs(s, lt + 3)
         val (lEnd, past) = findClose(s, inner, kind)
         val body = s.substring(inner, lEnd)
@@ -1188,14 +1189,14 @@ object Structured {
       } else if (lt + 5 <= n && s.regionMatches(true, lt + 1, "link", 0, 4) &&
         (lt + 5 == n || !Character.isLetterOrDigit(s.charAt(lt + 5)))) {
         val (attrs, past) = parseAttrs(s, lt + 5)
-        if (attr(attrs, "rel").toLowerCase.split("\\s+").contains("license") &&
+        if (attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("license") &&
           attr(attrs, "href").nonEmpty)
           return ("link", attr(attrs, "href"))
         i = past
       } else if (lt + 2 <= n && s.regionMatches(true, lt + 1, "a", 0, 1) &&
         (lt + 2 == n || !Character.isLetterOrDigit(s.charAt(lt + 2)))) {
         val (attrs, past) = parseAttrs(s, lt + 2)
-        if (attr(attrs, "rel").toLowerCase.split("\\s+").contains("license") &&
+        if (attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("license") &&
           attr(attrs, "href").nonEmpty)
           return ("a", attr(attrs, "href"))
         i = past
@@ -1266,7 +1267,7 @@ object Structured {
   def nextHref(html: String): Option[String] =
     headElems(html).collectFirst {
       case ("link", attrs)
-        if attr(attrs, "rel").toLowerCase.split("\\s+").contains("next") &&
+        if attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("next") &&
           attr(attrs, "href").nonEmpty =>
         attr(attrs, "href")
     }
@@ -1631,7 +1632,7 @@ object Structured {
       } else if (lt + 3 <= n &&
         (s.regionMatches(true, lt + 1, "ul", 0, 2) || s.regionMatches(true, lt + 1, "ol", 0, 2)) &&
         (lt + 3 == n || !Character.isLetterOrDigit(s.charAt(lt + 3)))) {
-        val kind = s.substring(lt + 1, lt + 3).toLowerCase
+        val kind = s.substring(lt + 1, lt + 3).toLowerCase(Locale.ROOT)
         val (_, inner) = parseAttrs(s, lt + 3)
         val (lEnd, past) = findClose(s, inner, kind)
         val body = s.substring(inner, lEnd)

@@ -3,6 +3,7 @@ package graft.sources
 import graft.Model
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.Locale
 
 /** Write-Audit-Publish branches on the pages table (SURVEY.md §2.20 S20) —
   * the Iceberg WAP pattern: a crawl drop is staged on a named BRANCH, audited
@@ -105,8 +106,8 @@ object Branches {
     require(exists(tableDir, name), s"no branch '$name' at $tableDir (create it first)")
     val missing = Model.PAGES.fieldNames.filterNot(drop.columns.contains)
     require(missing.isEmpty, s"branch append missing columns: ${missing.mkString(",")}")
-    val known = PagesTable.fullFor(tableDir).fieldNames.map(_.toLowerCase).toSet
-    val unknown = drop.columns.filterNot(c => known.contains(c.toLowerCase))
+    val known = PagesTable.fullFor(tableDir).fieldNames.map(_.toLowerCase(Locale.ROOT)).toSet
+    val unknown = drop.columns.filterNot(c => known.contains(c.toLowerCase(Locale.ROOT)))
     require(unknown.isEmpty,
       s"branch append has columns not in the table schema: ${unknown.mkString(",")}")
     val numBuckets = PageTable.readBucketMeta(tableDir)

@@ -3,6 +3,7 @@ package graft.sources
 import graft.Page
 import graft.functions.Rng
 import java.sql.Timestamp
+import java.util.Locale
 
 /** Deterministic synthetic Common-Crawl-style corpus (SURVEY.md §2.1 S2,
   * FIXTURES.md §1). Every page is a pure function of (seed, index) — no
@@ -70,7 +71,7 @@ object Corpus {
     }
     if (lang == "zh") sb.append('。') else sb.append('.')
     val s = sb.toString
-    if (lang == "zh") s else s.substring(0, 1).toUpperCase + s.substring(1)
+    if (lang == "zh") s else s.substring(0, 1).toUpperCase(Locale.ROOT) + s.substring(1)
   }
 
   def paragraph(seed: Long, i: Long, lang: String, pIdx: Int): String = {

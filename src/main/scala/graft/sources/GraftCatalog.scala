@@ -17,6 +17,7 @@ import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util
+import java.util.Locale
 
 /** DataSource-v2 catalog for pages tables (SURVEY.md §1.2: the promise that
   * `spark.read.table("pages")` works and a real Iceberg catalog later drops
@@ -189,7 +190,7 @@ class GraftCatalog extends TableCatalog {
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val dir = tableDir(ident).toString
-    val fixed = PagesTable.FULL.fieldNames.map(_.toLowerCase).toSet
+    val fixed = PagesTable.FULL.fieldNames.map(_.toLowerCase(Locale.ROOT)).toSet
     val updated = changes.foldLeft(PageTable.readSchemaMeta(dir)) { (acc, ch) =>
       ch match {
         case add: TableChange.AddColumn =>
@@ -199,7 +200,7 @@ class GraftCatalog extends TableCatalog {
           val n = add.fieldNames.head
           require(add.position() == null,
             s"pages tables: ADD COLUMN $n supports only appending (no FIRST/AFTER)")
-          require(!fixed.contains(n.toLowerCase),
+          require(!fixed.contains(n.toLowerCase(Locale.ROOT)),
             s"column $n is part of the fixed contract/layout schema (B:15)")
           require(!acc.fieldNames.exists(_.equalsIgnoreCase(n)),
             s"column $n already exists")

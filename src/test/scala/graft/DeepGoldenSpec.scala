@@ -1,36 +1,26 @@
 package graft
 
-import graft.operators.{Extract, ScalarExtract}
 import graft.sources.Corpus
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Opt-in deep golden sweep: byte-identity over a much larger slice of the
-  * corpus space than GoldenSpec's 600 docs, to shake out rare
-  * template × charset × lang × page-count interactions. Off by default
-  * (adds minutes); enable with:
+/** Opt-in deep sweep over a much larger slice of the corpus space than
+  * GoldenSpec's 600 docs, to shake out rare template × charset × lang ×
+  * page-count interactions. Production is checked against two independent
+  * formulations: the relational twin (per url) and the string-walking
+  * reference kernels for sniff, decode and tokenize (per page). Off by
+  * default (adds minutes); enable with:
   *
   *   GRAFT_DEEP=20000 sbt "testOnly graft.DeepGoldenSpec"
   */
 class DeepGoldenSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
+  private val n = sys.env.get("GRAFT_DEEP").map(_.toLong).getOrElse(0L)
+  private val seed = Corpus.DEFAULT_SEED
 
-  test("deep sweep: distributed == scalar oracle over GRAFT_DEEP docs") {
-    val n = sys.env.get("GRAFT_DEEP").map(_.toLong).getOrElse(0L)
+  test("deep sweep: production == relational twin and reference kernels over GRAFT_DEEP docs") {
     assume(n > 0, "set GRAFT_DEEP=<nDocs> to run the deep sweep")
-    val seed = Corpus.DEFAULT_SEED
-    val docs = Extract.extract(Corpus.pages(spark, n, seed)).collect()
-    assert(docs.length == n)
-    var checked = 0
-    docs.foreach { d =>
-      // recompute the scalar truth lazily per url (id is the url suffix)
-      val id = d.url.substring(d.url.lastIndexOf('-') + 1).toLong
-      val g = ScalarExtract.extract(Corpus.page(seed, id))
-      assert(g.url == d.url, s"id derivation broke for ${d.url}")
-      assert(d.text == g.text, s"text mismatch ${d.url} (kind=${d.contentKind})")
-      assert(d.spans == g.spans, s"spans mismatch ${d.url}")
-      assert(d.nBlocks == g.nBlocks && d.nDropped == g.nDropped, s"counts ${d.url}")
-      checked += 1
-    }
-    info(s"deep sweep: $checked docs byte-identical")
+    GoldenSpec.checkTwin(spark, n, seed, info(_))
+    val html = (0L until n).count(i => ExtractKernelSpec.checkPage(Corpus.page(seed, i)))
+    info(s"deep sweep: $n docs, $html html pages through the reference kernels")
   }
 }

@@ -16,27 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * sampled under fixed seeds, as in [[PropertySpec]].
   */
 class ExtractKernelSpec extends AnyFunSuite {
+  import ExtractKernelSpec._
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
-
-  /** Run `f` under `loc` as the JVM default locale. */
-  private def withLocale[A](loc: Locale)(f: => A): A = {
-    val saved = Locale.getDefault
-    Locale.setDefault(loc)
-    try f
-    finally Locale.setDefault(saved)
-  }
-
-  /** The reference folds with the default locale: compare under ROOT. */
-  private def assertSameBlocks(html: String, what: String): Unit = {
-    val (got, want) = withLocale(Locale.ROOT)((HtmlBlocks.blocks(html), HtmlBlocksReference.blocks(html)))
-    if (got != want) {
-      val at = got.zip(want).indexWhere { case (g, w) => g != w }
-      fail(s"$what: ${got.length} vs ${want.length} blocks, first difference at $at: " +
-        s"${got.lift(at)} vs ${want.lift(at)}; input head ${html.take(200)}")
-    }
-  }
 
   /** PropertySpec's tag soup, extended with mixed-case tags and attribute
     * names, unquoted and unterminated attributes, NBSP and other
@@ -79,19 +62,7 @@ class ExtractKernelSpec extends AnyFunSuite {
   }
 
   test("kernel: tokenizer, sniff and decode equal the reference on every corpus page") {
-    val pages = Corpus.pages(SparkFixture.spark, 2000).collect()
-    var html = 0
-    pages.foreach { p =>
-      val b = p.html
-      if (b != null) {
-        val kind = Charset.sniffKind(b)
-        assert(kind == CharsetReference.sniffKind(b), p.url)
-        assert(Charset.sniffCharset(b) == CharsetReference.sniffCharset(b), p.url)
-        val text = Charset.decode(b)
-        assert(text == CharsetReference.decode(b), p.url)
-        if (kind == Charset.KIND_HTML) { html += 1; assertSameBlocks(text, p.url) }
-      }
-    }
+    val html = Corpus.pages(SparkFixture.spark, 2000).collect().count(checkPage)
     assert(html > 1000, s"only $html HTML pages")
   }
 
@@ -196,6 +167,43 @@ class ExtractKernelSpec extends AnyFunSuite {
       val b = ("." * (end - m.length) + m + " more").getBytes("US-ASCII")
       assert(Charset.sniffKind(b) == CharsetReference.sniffKind(b), s"$m ending at $end")
       assert(Charset.sniffCharset(b) == CharsetReference.sniffCharset(b), s"$m ending at $end")
+    }
+  }
+}
+
+object ExtractKernelSpec {
+  import org.scalatest.Assertions._
+
+  /** Run `f` under `loc` as the JVM default locale. */
+  def withLocale[A](loc: Locale)(f: => A): A = {
+    val saved = Locale.getDefault
+    Locale.setDefault(loc)
+    try f
+    finally Locale.setDefault(saved)
+  }
+
+  /** The reference folds with the default locale: compare under ROOT. */
+  private def assertSameBlocks(html: String, what: String): Unit = {
+    val (got, want) = withLocale(Locale.ROOT)((HtmlBlocks.blocks(html), HtmlBlocksReference.blocks(html)))
+    if (got != want) {
+      val at = got.zip(want).indexWhere { case (g, w) => g != w }
+      fail(s"$what: ${got.length} vs ${want.length} blocks, first difference at $at: " +
+        s"${got.lift(at)} vs ${want.lift(at)}; input head ${html.take(200)}")
+    }
+  }
+
+  /** Sniff, decode and (for HTML) tokenize one page with the production
+    * kernel and with the reference; true when the page is HTML.
+    */
+  def checkPage(p: Page): Boolean = {
+    val b = p.html
+    b != null && {
+      val kind = Charset.sniffKind(b)
+      assert(kind == CharsetReference.sniffKind(b), p.url)
+      assert(Charset.sniffCharset(b) == CharsetReference.sniffCharset(b), p.url)
+      val text = Charset.decode(b)
+      assert(text == CharsetReference.decode(b), p.url)
+      kind == Charset.KIND_HTML && { assertSameBlocks(text, p.url); true }
     }
   }
 }

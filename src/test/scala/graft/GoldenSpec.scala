@@ -3,6 +3,7 @@ package graft
 import graft.functions.Charset
 import graft.operators.{Extract, ScalarExtract}
 import graft.sources.Corpus
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's central invariant (BASELINE.json:14): byte-identical
@@ -24,43 +25,8 @@ class GoldenSpec extends AnyFunSuite {
       p.url -> ScalarExtract.extract(p)
     }.toMap
 
-  /** The relational twin — tokenizer rows → window classification → line
-    * merge → assembly, the formulation behind the ex_* DuckDB oracles —
-    * against the scalar function on every url. The twin holds one row per
-    * html/pdf doc with at least one kept block.
-    */
   test("distributed pipeline is byte-identical to the scalar oracle") {
-    // every contentKind is actually exercised by the corpus
-    val kinds = scalarByUrl.values.map(_.contentKind).toSet
-    assert(Model.CONTENT_KINDS.toSet.subsetOf(kinds), s"kinds seen: $kinds")
-    val twin = Extract.assembled(Extract.lines(Extract.classifiedBlocks(
-      Corpus.pages(spark, N, seed).flatMap(Extract.toRows))))
-      .as[(String, String, Seq[Span], Long)].collect()
-      .map(r => r._1 -> r).toMap
-    assert(twin.keySet.subsetOf(scalarByUrl.keySet))
-    val docKinds = Set(Charset.KIND_HTML, Charset.KIND_PDF)
-    var mismatches = 0
-    scalarByUrl.values.foreach { g =>
-      twin.get(g.url) match {
-        case Some((url, atext, aspans, keptRows)) =>
-          assert(docKinds(g.contentKind), s"twin row for a ${g.contentKind} doc $url")
-          if (atext != g.text) {
-            mismatches += 1
-            if (mismatches <= 3) {
-              info(s"TEXT MISMATCH url=$url kind=${g.contentKind}")
-              info(s"  twin:   ${atext.take(300).replace("\n", "\\n")}")
-              info(s"  scalar: ${g.text.take(300).replace("\n", "\\n")}")
-            }
-          }
-          assert(aspans == g.spans, s"spans mismatch $url twin=${aspans.take(5)} scalar=${g.spans.take(5)}")
-          assert(keptRows == g.nBlocks - g.nDropped,
-            s"kept rows $url: $keptRows vs ${g.nBlocks} - ${g.nDropped}")
-        case None if docKinds(g.contentKind) =>
-          assert(g.text.isEmpty && g.nBlocks == g.nDropped, s"${g.url} kept blocks but has no twin row")
-        case None => ()
-      }
-    }
-    assert(mismatches == 0, s"$mismatches/${twin.size} docs with text mismatch")
+    GoldenSpec.checkTwin(spark, N, seed, info(_))
   }
 
   test("output invariant under repartitioning (1, 3, 16 partitions)") {
@@ -106,5 +72,51 @@ class GoldenSpec extends AnyFunSuite {
         (col("content").isNotNull &&
           (col("mybytes").isNull || col("content") =!= col("mybytes")))).count()
     assert(bad == 0, s"$bad golden files differ (regenerate deliberately via Test/runMain graft.GoldenFiles)")
+  }
+}
+
+object GoldenSpec {
+  import org.scalatest.Assertions._
+
+  /** The relational twin — tokenizer rows → window classification → line
+    * merge → assembly, the formulation behind the ex_* DuckDB oracles —
+    * against the scalar function on every url of the first `n` corpus
+    * pages; the first mismatching texts go to `note`. The twin holds one
+    * row per html/pdf doc with at least one kept block.
+    */
+  def checkTwin(spark: SparkSession, n: Long, seed: Long, note: String => Unit): Unit = {
+    import spark.implicits._
+    val scalar = (0L until n).map(i => ScalarExtract.extract(Corpus.page(seed, i)))
+    // every contentKind is actually exercised by the corpus
+    val kinds = scalar.map(_.contentKind).toSet
+    assert(Model.CONTENT_KINDS.toSet.subsetOf(kinds), s"kinds seen: $kinds")
+    val twin = Extract.assembled(Extract.lines(Extract.classifiedBlocks(
+      Corpus.pages(spark, n, seed).flatMap(Extract.toRows))))
+      .as[(String, String, Seq[Span], Long)].collect()
+      .map(r => r._1 -> r).toMap
+    assert(twin.keySet.subsetOf(scalar.map(_.url).toSet))
+    val docKinds = Set(Charset.KIND_HTML, Charset.KIND_PDF)
+    var mismatches = 0
+    scalar.foreach { g =>
+      twin.get(g.url) match {
+        case Some((url, atext, aspans, keptRows)) =>
+          assert(docKinds(g.contentKind), s"twin row for a ${g.contentKind} doc $url")
+          if (atext != g.text) {
+            mismatches += 1
+            if (mismatches <= 3) {
+              note(s"TEXT MISMATCH url=$url kind=${g.contentKind}")
+              note(s"  twin:   ${atext.take(300).replace("\n", "\\n")}")
+              note(s"  scalar: ${g.text.take(300).replace("\n", "\\n")}")
+            }
+          }
+          assert(aspans == g.spans, s"spans mismatch $url twin=${aspans.take(5)} scalar=${g.spans.take(5)}")
+          assert(keptRows == g.nBlocks - g.nDropped,
+            s"kept rows $url: $keptRows vs ${g.nBlocks} - ${g.nDropped}")
+        case None if docKinds(g.contentKind) =>
+          assert(g.text.isEmpty && g.nBlocks == g.nDropped, s"${g.url} kept blocks but has no twin row")
+        case None => ()
+      }
+    }
+    assert(mismatches == 0, s"$mismatches/${twin.size} docs with text mismatch")
   }
 }
