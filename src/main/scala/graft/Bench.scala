@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * Times the headline relational / dedup / similarity queries at
   * `SPARK_GRAFT_SF_DIR`: one warm-up run, then the minimum of three, each
   * terminated by `count()` as the contract defines. Prints ONE JSON line;
-  * a failing query fails the run under its name.
+  * a failing query fails the run under its name, and a headline name
+  * missing from [[SparkEntry.queries]] fails it before the session starts.
   *
   * Extraction throughput is not measured here: `perfbench/run.py` times
   * full parquet-to-parquet reps and checks every output column, and
@@ -30,7 +31,7 @@ object Bench {
     * the stateful streaming rate limiter (flatMapGroupsWithState + event-
     * time timeout over a two-batch split — the state-store cost shape).
     */
-  private val HEADLINE = Seq(
+  private[graft] val HEADLINE = Seq(
     "q1_agg", "q3_join", "q_window", "q_range_join", "q_distinct",
     "q_topk_per_key", "q_sessionize", "q_interval_join",
     "dd_exact", "dd_ngram_jaccard", "dd_allpairs", "dd_minhash_lsh", "dd_simhash", "dd_contam",
@@ -48,6 +49,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // every headline name resolves before the session starts: a renamed
+    // query fails the run under its name, never drops out of the total
+    val headline = HEADLINE.map(name => name -> SparkEntry.queries.getOrElse(name,
+      throw new NoSuchElementException(s"bench headline query $name is not in SparkEntry.queries")))
     val spark = Main.session(SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
 
     def time(f: => Unit): Double = {
@@ -55,21 +60,19 @@ object Bench {
     }
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    HEADLINE.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        // a failing query fails the run under its name: no stand-in value
-        // that the total would silently drop
-        results(name) =
-          try {
-            time { fn(spark, sfDir).count() } // warm-up run (discarded)
-            // min of 3: bursty external load only ever adds time
-            (1 to 3).map(_ => time { fn(spark, sfDir).count() }).min
-          } catch {
-            case e: Exception =>
-              spark.stop()
-              throw new RuntimeException(s"bench query $name failed", e)
-          }
-      }
+    headline.foreach { case (name, fn) =>
+      // a failing query fails the run under its name: no stand-in value
+      // that the total would silently drop
+      results(name) =
+        try {
+          time { fn(spark, sfDir).count() } // warm-up run (discarded)
+          // min of 3: bursty external load only ever adds time
+          (1 to 3).map(_ => time { fn(spark, sfDir).count() }).min
+        } catch {
+          case e: Exception =>
+            spark.stop()
+            throw new RuntimeException(s"bench query $name failed", e)
+        }
     }
 
     val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")

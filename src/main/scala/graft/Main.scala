@@ -74,12 +74,12 @@ object Main {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     // local-cluster[N,cores,mem] spawns REAL separate executor JVMs (the
     // closest in-sandbox stand-in for "N executors" in the scaling
-    // criterion); they need our classes + the JDK17 module opens on their
-    // own classpaths.
+    // criterion); they need this checkout's classes + the JDK17 module opens
+    // on their own classpaths.
     val builder0 = SparkSession.builder().master(master).appName("graft-extract")
     val builder =
       if (master.startsWith("local-cluster")) builder0
-        .config("spark.executor.extraClassPath", "/root/repo/target/scala-2.13/classes")
+        .config("spark.executor.extraClassPath", codeSource(Main.getClass))
         .config("spark.executor.memory", sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "6g"))
       else builder0
     val spark = session(builder, cpus.toInt)
@@ -464,6 +464,12 @@ object Main {
       println(f"extracted $total%d docs in $dt%.2f s (${total / dt}%.0f docs/s) -> $outDir")
     } finally spark.stop()
   }
+
+  /** The directory or jar `cls` was loaded from: the running code, wherever
+    * the checkout lives.
+    */
+  private[graft] def codeSource(cls: Class[_]): String =
+    java.nio.file.Paths.get(cls.getProtectionDomain.getCodeSource.getLocation.toURI).toString
 
   /** The tuned session Main and Bench share; each caller picks the master
     * and app name on `builder`.

@@ -36,9 +36,10 @@ object Curate {
   val MIN_ZRATIO_X1000 = 150L
 
   /** Whitespace token count (the non-empty space-separated segments) —
-    * shared by the verdict pass and the near-dedup keeper election so the
-    * two can never diverge on what "quality" means. */
-  private def nTokCol = regexp_count(col("text"), lit("[^ ]+")).cast("long")
+    * shared by the verdict pass, the near-dedup keeper election and
+    * curate-stream's token floor so they can never diverge on what
+    * "quality" means. */
+  private[graft] def nTokCol = regexp_count(col("text"), lit("[^ ]+")).cast("long")
 
   /** The quality gate predicate, over columns (n_tok, dup_line_frac_x1000,
     * top_bigram_frac_x1000, text). One definition, two evaluation sites. */

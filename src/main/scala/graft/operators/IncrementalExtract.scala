@@ -70,13 +70,8 @@ object IncrementalExtract {
     val docs = Extract.extract(delta).toDF()
     docs.write.mode("overwrite").parquet(window)
     val n = spark.read.parquet(window).count()
-    state.getParentFile match { case null => (); case d => d.mkdirs() }
-    // atomic tmp+rename (the Snapshots.record device): a crash mid-write
-    // must never leave a corrupt checkpoint that wedges reruns
-    val tmpState = new java.io.File(state.getParentFile, s".${state.getName}.tmp")
-    java.nio.file.Files.write(tmpState.toPath, latest.toString.getBytes)
-    if (!tmpState.renameTo(state))
-      throw new IllegalStateException(s"checkpoint commit failed: $state")
+    // a crash mid-write must never leave a corrupt checkpoint that wedges reruns
+    graft.sources.Recovery.writeAtomic(state, latest.toString.getBytes("UTF-8"))
     Some(IncrReport(n, last + 1, latest, window, removed.nonEmpty))
   }
 }

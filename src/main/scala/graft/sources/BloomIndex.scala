@@ -69,11 +69,7 @@ object BloomIndex {
       val path = new java.net.URI(uri).getPath
       require(path.startsWith(base + "/"), s"unexpected file uri $uri")
       val relPath = path.stripPrefix(base + "/")
-      val f = sidecar(tableDir, relPath)
-      val tmp = new java.io.File(f.getParentFile, s".${f.getName}.tmp")
-      java.nio.file.Files.write(tmp.toPath, bytes)
-      java.nio.file.Files.move(tmp.toPath, f.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Recovery.writeAtomic(sidecar(tableDir, relPath), bytes)
     }
     perFile.length
   }

@@ -23,13 +23,9 @@ import java.util.Locale
   * the live table all-at-once, and time travel to the pre-publish version
   * still excludes it.
   *
-  * Crash safety is the engine's standard write-ahead-intent device
-  * ([[Snapshots.rollback]], RowLevelCommit): publish first hard-links a
-  * `_publish_pending` intent (atomic, fails loudly if a publish is already
-  * in flight), then moves files; a crash anywhere is rolled FORWARD by
-  * [[replayPublish]] from the catalog's `loadTable` prelude — moves are
-  * skip-if-done idempotent, the snapshot commits once, and the live dir is
-  * never left in a state matching no recorded way out.
+  * Crash safety is the engine's write-ahead-intent device ([[Recovery]]):
+  * publish commits its intent before the first move, and a crash anywhere
+  * is rolled FORWARD by the next table operation.
   *
   * Scale shape: staging cost is the drop's write (one exchange on bucket);
   * audit reads scan only the branch's files (a normal pruned parquet scan);
@@ -58,9 +54,6 @@ object Branches {
 
   private def branchData(tableDir: String, name: String) =
     new java.io.File(branchDir(tableDir, name), "data")
-
-  private def intentFile(tableDir: String) =
-    new java.io.File(tableDir, "_publish_pending")
 
   /** Create an empty branch. Fails loudly if it exists (like tags, a name a
     * pipeline depends on must never be silently reused mid-flight).
@@ -145,87 +138,41 @@ object Branches {
     }
   }
 
-  /** Atomically adopt the branch into the live table: write-ahead intent →
-    * per-file rename into `data/` (same bucket=/day= relative path) → one
-    * snapshot commit → branch dir removed → intent cleared. A crash at ANY
-    * point rolls forward via [[replayPublish]]; a stale intent from a dead
-    * publisher is rolled forward before this publish starts. The hard-link
-    * intent commit is atomic create-or-fail, so a LIVE concurrent publisher
-    * racing between our replay and link fails loudly rather than
-    * interleaving two move sets under one snapshot (the engine is
-    * single-writer, like [[Snapshots.record]]; the link is the backstop).
+  /** Atomically adopt the branch into the live table: a [[Recovery]] intent
+    * (`branch=<name>`, then one `mv\t<path>` per staged file) → per-file
+    * move into `data/` (same bucket=/day= relative path) → one snapshot
+    * commit → branch dir removed → intent cleared. A stale intent from a
+    * dead publisher is rolled forward before this publish starts, and the
+    * intent commit fails loudly if a live publisher raced in meanwhile.
     *
     * @return (committed snapshot version, files adopted)
     */
   def publish(tableDir: String, name: String): (Int, Int) = {
     requireName(name)
-    replayPublish(tableDir) // finish any crashed publish before starting ours
+    Recovery.recover(tableDir)
     require(exists(tableDir, name), s"no branch '$name' at $tableDir")
     val bData = branchData(tableDir, name)
     val base = bData.toPath
     val rel = Snapshots.walkData(bData).map(f => base.relativize(f.toPath).toString).sorted
     require(rel.nonEmpty, s"branch '$name' has no staged files — discard it instead")
-    val intent = intentFile(tableDir)
-    val tmp = new java.io.File(tableDir, "._publish_pending.tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      ((s"branch=$name" +: rel.map(r => s"mv\t$r")).mkString("\n")).getBytes("UTF-8"))
-    try {
-      // hard-link like tag(): atomic create-or-fail — two concurrent
-      // publishes must not interleave move sets under one snapshot
-      try java.nio.file.Files.createLink(intent.toPath, tmp.toPath)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalStateException(
-            s"another publish is in flight at $tableDir (_publish_pending exists)")
-      }
-    } finally java.nio.file.Files.deleteIfExists(tmp.toPath)
-    val moved = applyPublish(tableDir, name, rel)
-    moved
+    Recovery.commit(tableDir, Recovery.PUBLISH, Seq("branch" -> name), rel.map(r => Seq("mv", r)))
+    applyPublish(tableDir, name, rel)
   }
 
-  /** Roll FORWARD a crash-interrupted [[publish]] (no-op without the intent
-    * file). Idempotent: moves skip already-adopted files; the snapshot
-    * commits only if the live set does not already reflect the adoption.
-    */
-  def replayPublish(tableDir: String): Unit = {
-    val intent = intentFile(tableDir)
-    if (!intent.isFile) return
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(intent.toPath), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty)
-    val name = lines.head.stripPrefix("branch=")
-    val moves = lines.tail.collect { case l if l.startsWith("mv\t") => l.drop(3) }
-    applyPublish(tableDir, name, moves)
-    ()
-  }
+  /** Roll FORWARD a crash-interrupted [[publish]] (no-op without its intent). */
+  def replayPublish(tableDir: String): Unit =
+    Recovery.read(tableDir, Recovery.PUBLISH).foreach(i =>
+      applyPublish(tableDir, i("branch"), i.paths("mv")))
 
   private def applyPublish(
       tableDir: String, name: String, rel: Seq[String]): (Int, Int) = {
     val bData = branchData(tableDir, name).toPath
     val live = new java.io.File(tableDir, "data").toPath
-    rel.foreach { r =>
-      val src = bData.resolve(r)
-      val dst = live.resolve(r)
-      if (java.nio.file.Files.isRegularFile(src)) {
-        java.nio.file.Files.createDirectories(dst.getParent)
-        java.nio.file.Files.move(src, dst,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } else if (!java.nio.file.Files.isRegularFile(dst))
-        throw new IllegalStateException(
-          s"publish of branch '$name' lost file $r (neither staged nor adopted)")
-    }
-    // a crash AFTER record but BEFORE intent delete must not commit twice:
-    // only record when the latest snapshot doesn't already list the live set
-    val dataDir = new java.io.File(tableDir, "data")
-    val liveSet = Snapshots.walkData(dataDir)
-      .map(f => dataDir.toPath.relativize(f.toPath).toString).sorted
-    val v = Snapshots.latestVersion(tableDir) match {
-      case Some(l) if Snapshots.files(tableDir, l).exists(_._2 == liveSet) => l
-      case _ => Snapshots.record(tableDir)
-    }
+    rel.foreach(r => Recovery.move(bData.resolve(r), live.resolve(r)))
+    val v = Recovery.recordOnce(tableDir)
     if (branchDir(tableDir, name).isDirectory)
       Snapshots.deleteRecursively(branchDir(tableDir, name))
-    intentFile(tableDir).delete()
+    Recovery.clear(tableDir, Recovery.PUBLISH)
     (v, rel.size)
   }
 

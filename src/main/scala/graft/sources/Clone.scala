@@ -118,16 +118,11 @@ object Clone {
     if (extras.nonEmpty) PageTable.writeSchemaMeta(dstDir, extras)
     // commit: the source manifest IS the clone's file list — re-stamp its
     // header instead of re-walking the linked tree
-    val snapDir = new java.io.File(dstDir, "snapshots")
-    snapDir.mkdirs()
     val srcManifest = new java.io.File(srcDir, s"snapshots/v$v.txt").toPath
     val lines = java.nio.file.Files.readAllLines(srcManifest)
     lines.set(0, s"ts=${System.currentTimeMillis()}")
-    val tmp = new java.io.File(snapDir, ".v1.txt.tmp")
-    java.nio.file.Files.write(tmp.toPath, lines)
-    val dstManifest = new java.io.File(snapDir, "v1.txt")
-    if (!tmp.renameTo(dstManifest))
-      throw new IllegalStateException(s"clone commit failed: $dstManifest")
+    Recovery.writeAtomic(new java.io.File(dstDir, "snapshots/v1.txt"),
+      String.join("\n", lines).getBytes("UTF-8"))
     (v, linked.toInt)
   }
 }

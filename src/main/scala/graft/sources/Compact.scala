@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   *      renamed aside to a hidden `.graft-old-…` sibling (hidden paths are
   *      invisible to scans and to [[Snapshots.walkData]]), the rewritten
   *      leaf renamed in, then the aside removed. A crash in any window
-  *      loses nothing: the next `Compact.run` starts with [[repair]], which
-  *      restores an aside whose live leaf is missing and clears asides whose
-  *      swap had completed;
+  *      loses nothing: [[repair]] restores an aside whose live leaf is
+  *      missing and clears asides whose swap had completed. It is the first
+  *      step of [[Recovery.recover]], which every maintenance entry point
+  *      (this one, `zorder`, `vacuum`) runs before it lists the layout;
   *   4. a snapshot is committed — current reads see the compacted layout;
   *      older snapshots referencing the replaced files fail loudly per the
   *      [[Snapshots]] retention note.
@@ -37,8 +38,7 @@ object Compact {
   /** Heal the layout after a killed maintenance run: every `.graft-old-…`
     * aside either had its swap complete (live leaf exists → drop the aside)
     * or not (live leaf missing → rename the aside back); stale rewrite
-    * output is removed. Idempotent; runs first in every [[run]] and
-    * [[vacuum]].
+    * output is removed. Idempotent; the first step of [[Recovery.recover]].
     */
   def repair(tableDir: String): Unit = {
     val dataDir = new java.io.File(tableDir, "data")
@@ -80,8 +80,7 @@ object Compact {
   def run(spark: SparkSession, tableDir: String): (Int, Int, Int) = {
     val dataDir = new java.io.File(tableDir, "data")
     require(dataDir.isDirectory, s"no pages data under $tableDir")
-    repair(tableDir)
-    Branches.replayPublish(tableDir)
+    Recovery.recover(tableDir)
 
     def dataFiles(d: java.io.File): Array[java.io.File] =
       if (!d.isDirectory) Array.empty
@@ -178,8 +177,7 @@ object Compact {
     import org.apache.spark.sql.types.StringType
     val dataDir = new java.io.File(tableDir, "data")
     require(dataDir.isDirectory, s"no pages data under $tableDir")
-    repair(tableDir)
-    Branches.replayPublish(tableDir)
+    Recovery.recover(tableDir)
 
     val full = spark.read
       .option("basePath", dataDir.toString)
@@ -324,16 +322,15 @@ object Compact {
     vacuumDelete(dataDir, orphans)
   }
 
-  /** Shared preamble: intent replay + live-version resolution. Returns
+  /** Shared preamble: [[Recovery.recover]] + live-version resolution. Returns
     * (latest version, versions whose files are GC-protected = latest plus
     * every tagged snapshot — the Iceberg ref-reachable retention rule).
     */
   private def vacuumPrepare(tableDir: String): (Int, Seq[Int]) = {
-    repair(tableDir)
-    // a half-published branch file (moved, pre-snapshot) must be rolled
-    // FORWARD before the latest version is read, or its commit would land
-    // after the live-set read and vacuum would GC the adopted files
-    Branches.replayPublish(tableDir)
+    // a half-applied commit's files (moved, pre-snapshot) must be rolled
+    // FORWARD before the latest version is read, or its snapshot would land
+    // after the live-set read and vacuum would GC the moved files
+    Recovery.recover(tableDir)
     val latest = Snapshots.latestVersion(tableDir).getOrElse(
       throw new IllegalStateException(
         s"$tableDir has no snapshot log; vacuum needs one to know what is live"))
@@ -346,12 +343,7 @@ object Compact {
   private def vacuumDelete(dataDir: java.io.File,
                            orphans: Seq[(String, Long)]): (Int, Long) = {
     orphans.foreach { case (rel, _) => new java.io.File(dataDir, rel).delete() }
-    // drop leaf/bucket dirs emptied by the cleanup
-    for {
-      bDir <- dataDir.listFiles.toSeq if bDir.isDirectory
-      dDir <- bDir.listFiles.toSeq if dDir.isDirectory && dDir.listFiles.isEmpty
-    } dDir.delete()
-    dataDir.listFiles.filter(f => f.isDirectory && f.listFiles.isEmpty).foreach(_.delete())
+    Recovery.pruneEmpty(dataDir)
     (orphans.size, orphans.map(_._2).sum)
   }
 

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *  - ERROR manifest-hole: a file referenced by the LATEST snapshot (or by
   *    any TAGGED snapshot) is absent on disk — scans of that ref WILL fail.
   *  - ERROR dangling-tag: a tag resolves to a version with no snapshot file.
-  *  - WARN pending-intent: a `_merge/_rebucket/_rollback/_publish_pending`
-  *    write-ahead intent exists — a crash happened mid-commit; the next
-  *    loadTable replays it, but until then raw-path readers see the old
+  *  - WARN pending-intent: a [[Recovery]] write-ahead intent exists — a
+  *    crash happened mid-commit; the next table operation replays it
+  *    ([[Recovery.recover]]), but until then raw-path readers see the old
   *    tree.
   *  - WARN orphan-files: data files referenced by NO snapshot — debris from
   *    crashed writes or pre-snapshot tooling; vacuum's candidates, counted
@@ -104,11 +104,10 @@ object Doctor {
     }
 
     // ---- crashed-commit intents
-    Seq("_merge_pending", "_rebucket_pending", "_rollback_pending",
-      "_publish_pending").foreach { n =>
-      if (new java.io.File(tableDir, n).isFile)
-        out += Finding("WARN", "pending-intent",
-          s"$n present — crashed commit; next loadTable replays it")
+    Recovery.pending(tableDir).foreach { n =>
+      out += Finding("WARN", "pending-intent",
+        s"$n present — crashed commit; the next catalog read or write, " +
+          "rollback, rebucket, compact, zorder, vacuum or branch publish replays it")
     }
 
     // ---- orphans (referenced by NO snapshot and NO tag)

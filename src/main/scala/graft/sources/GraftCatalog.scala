@@ -83,36 +83,26 @@ class GraftCatalog extends TableCatalog {
 
   override def loadTable(ident: Identifier): Table = {
     // metadata tables (S21): `SELECT * FROM cat.`pages$snapshots`` etc.
-    // resolve against the BASE table's dir, after the same crash roll-forward
-    // prelude as a data scan (so `$files` can never show a half-published
-    // branch as debris)
-    MetaTables.parse(ident.name) match {
-      case Some((base, meta)) =>
-        val baseIdent = Identifier.of(ident.namespace, base)
-        if (!tableExists(baseIdent)) throw new NoSuchTableException(ident)
-        val d = tableDir(baseIdent).toString
-        RowLevelCommit.replay(d)
-        Snapshots.replayRollback(d)
-        Branches.replayPublish(d)
-        Rebucket.replay(d)
-        return MetaTables.table(ident.name, meta, d)
-      case None => // fall through to the data-table path below
+    // resolve against the BASE table's dir
+    val meta = MetaTables.parse(ident.name)
+    val baseIdent = meta.fold(ident) { case (base, _) => Identifier.of(ident.namespace, base) }
+    if (!tableExists(baseIdent)) throw new NoSuchTableException(ident)
+    val dir = tableDir(baseIdent).toString
+    // roll FORWARD any commit a crash left half-applied before anyone plans
+    // a scan over the dir (so `$files` can never show a half-published
+    // branch as debris). With nothing pending a read leaves the dir as it
+    // is: a compaction aside may belong to a maintenance run still in
+    // flight. Writes recover unconditionally (PagesTable's write builders).
+    if (Recovery.pending(dir).nonEmpty) Recovery.recover(dir)
+    meta match {
+      case Some((_, m)) => MetaTables.table(ident.name, m, dir)
+      case None =>
+        // the bucket count recorded at write time is authoritative —
+        // deriving bucket with any other modulus on append would silently
+        // break the layout function readers use to locate a url
+        val buckets = PageTable.readBucketMeta(dir).getOrElse(PageTable.DEFAULT_BUCKETS)
+        new PagesTable(ident.name, dir, buckets, extras = PageTable.readSchemaMeta(dir))
     }
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val dir = tableDir(ident).toString
-    // roll FORWARD any merge commit, rollback, or branch publish a crash
-    // left half-applied (all idempotent) before anyone plans a scan over
-    // the dir
-    RowLevelCommit.replay(dir)
-    Snapshots.replayRollback(dir)
-    Branches.replayPublish(dir)
-    Rebucket.replay(dir)
-    // the bucket count recorded at write time is authoritative — deriving
-    // bucket with any other modulus on append would silently break the
-    // layout function readers use to locate a url
-    val buckets = PageTable.readBucketMeta(dir).getOrElse(PageTable.DEFAULT_BUCKETS)
-    new PagesTable(ident.name, dir, buckets,
-      extras = PageTable.readSchemaMeta(dir))
   }
 
   /** Time travel: `SELECT ... FROM cat.t VERSION AS OF n` (also
@@ -284,6 +274,10 @@ object PagesTable {
   * the missing paths — history is append-only-durable, like a format without
   * a file pool. Writes through bare [[PageTable.write]] bypass the catalog
   * and record nothing (such tables report "no snapshot").
+  *
+  * Operations that move files before they record (MERGE, [[rollback]],
+  * branch publish, rebucket) commit through [[Recovery]], which rolls a
+  * crashed one forward before the next operation reads the log.
   */
 object Snapshots {
   private def snapDir(tableDir: String) = new java.io.File(tableDir, "snapshots")
@@ -379,22 +373,11 @@ object Snapshots {
       s"tag name '$name' must match ${REF_NAME.regex}")
     require(files(tableDir, version).isDefined,
       s"$tableDir has no snapshot v$version to tag")
-    val f = refFile(tableDir, name)
-    f.getParentFile.mkdirs()
-    val tmp = new java.io.File(f.getParentFile, s".${f.getName}.tmp")
-    java.nio.file.Files.write(tmp.toPath, version.toString.getBytes("UTF-8"))
-    try {
-      // hard-link onto the final name: atomic AND fails if it exists — a
-      // check-then-rename would let two concurrent tag() calls both pass
-      // the check and the POSIX rename silently replace (last writer wins),
-      // breaking the immutability contract
-      try java.nio.file.Files.createLink(f.toPath, tmp.toPath)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalArgumentException(
-            s"tag '$name' already exists (tags are immutable; untag first to move it)")
-      }
-    } finally java.nio.file.Files.deleteIfExists(tmp.toPath)
+    // create-or-fail: a check-then-rename would let two concurrent tag()
+    // calls both pass the check and the last writer silently win
+    if (!Recovery.createAtomic(refFile(tableDir, name), version.toString.getBytes("UTF-8")))
+      throw new IllegalArgumentException(
+        s"tag '$name' already exists (tags are immutable; untag first to move it)")
   }
 
   /** Remove a tag; the snapshot itself stays. False if absent. */
@@ -433,19 +416,14 @@ object Snapshots {
     * compaction/overwrite). Snapshots BETWEEN the target and the rollback
     * that reference moved files fail at scan time with the missing paths —
     * the same documented retention caveat as INSERT OVERWRITE; the aside
-    * directory preserves the bytes for manual recovery until deleted.
+    * directory preserves the bytes for manual recovery until deleted. The
+    * moves commit through a [[Recovery]] intent (`target=`, `aside=`, then
+    * `mv\t<path>` lines), so a crash mid-move is rolled forward.
     *
     * @return (new committed version, number of files moved aside)
     */
   def rollback(tableDir: String, version: Int): (Int, Int) = {
-    // same crash-recovery preludes as every other maintenance/scan entry:
-    // roll forward a half-applied MERGE and restore compaction asides, so
-    // the file set we diff against is a real committed state — and complete
-    // any rollback a crash left half-moved before starting a new one
-    RowLevelCommit.replay(tableDir)
-    Compact.repair(tableDir)
-    replayRollback(tableDir)
-    Branches.replayPublish(tableDir)
+    Recovery.recover(tableDir)
     val want = files(tableDir, version).getOrElse(
       throw new IllegalArgumentException(s"$tableDir has no snapshot v$version"))._2
     val dataDir = new java.io.File(tableDir, "data")
@@ -458,89 +436,37 @@ object Snapshots {
         s"cannot roll back to v$version: ${missing.size} referenced files no " +
           s"longer exist (vacuumed?), e.g. ${missing.take(3).mkString(", ")}")
     val extra = live.filterNot(wantSet)
-    // write-ahead intent (the RowLevelCommit device): a crash mid-move is
-    // rolled FORWARD by the next rollback/loadTable via replayRollback —
-    // the live dir is never left in a state matching no snapshot without
-    // a recorded way out
     val aside = s"rollback-aside-v${latestVersion(tableDir).getOrElse(0) + 1}"
-    val intent = new java.io.File(tableDir, "_rollback_pending")
-    val tmp = new java.io.File(tableDir, "._rollback_pending.tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      ((s"target=$version" +: s"aside=$aside" +: extra.map(r => s"mv\t$r"))
-        .mkString("\n")).getBytes("UTF-8"))
-    if (!tmp.renameTo(intent))
-      throw new IllegalStateException(s"rollback intent commit failed: $intent")
-    val v = applyRollback(tableDir, version, aside, extra)
-    (v, extra.size)
+    Recovery.commit(tableDir, Recovery.ROLLBACK,
+      Seq("target" -> version.toString, "aside" -> aside), extra.map(r => Seq("mv", r)))
+    (applyRollback(tableDir, aside, extra), extra.size)
   }
 
-  /** Complete a crash-interrupted [[rollback]] (no-op without the intent
-    * file). Idempotent: moves skip already-moved files, the snapshot is
-    * recorded only if the latest does not already equal the target set.
-    * Called by [[rollback]] and by [[GraftCatalog.loadTable]].
-    */
-  def replayRollback(tableDir: String): Unit = {
-    val intent = new java.io.File(tableDir, "_rollback_pending")
-    if (!intent.isFile) return
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(intent.toPath), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty)
-    val target = lines.head.stripPrefix("target=").toInt
-    val aside = lines(1).stripPrefix("aside=")
-    val moves = lines.drop(2).collect { case l if l.startsWith("mv\t") => l.drop(3) }
-    applyRollback(tableDir, target, aside, moves)
-    ()
-  }
+  /** Complete a crash-interrupted [[rollback]] (no-op without its intent). */
+  def replayRollback(tableDir: String): Unit =
+    Recovery.read(tableDir, Recovery.ROLLBACK).foreach(i =>
+      applyRollback(tableDir, i("aside"), i.paths("mv")))
 
-  private def applyRollback(
-      tableDir: String, target: Int, aside: String, extra: Seq[String]): Int = {
+  private def applyRollback(tableDir: String, aside: String, extra: Seq[String]): Int = {
     val dataDir = new java.io.File(tableDir, "data")
-    val base = dataDir.toPath
     val asideRoot = new java.io.File(tableDir, aside).toPath
-    extra.foreach { rel =>
-      val src = base.resolve(rel)
-      if (java.nio.file.Files.isRegularFile(src)) { // skip = already moved
-        val dst = asideRoot.resolve(rel)
-        java.nio.file.Files.createDirectories(dst.getParent)
-        java.nio.file.Files.move(src, dst,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
-    // a crash AFTER record but BEFORE the intent delete must not record a
-    // duplicate snapshot: only record when latest != target's file set
-    val want = files(tableDir, target).get._2
-    val v = latestVersion(tableDir) match {
-      case Some(l) if files(tableDir, l).exists(_._2 == want) => l
-      case _ => record(tableDir)
-    }
-    new java.io.File(tableDir, "_rollback_pending").delete()
-    // prune partition dirs the moves emptied (the vacuum convention —
-    // stale bucket=/day= values must not linger in directory listings)
-    Option(dataDir.listFiles).getOrElse(Array.empty).foreach { b =>
-      if (b.isDirectory) {
-        Option(b.listFiles).getOrElse(Array.empty)
-          .filter(d => d.isDirectory && d.listFiles.isEmpty).foreach(_.delete())
-        if (b.listFiles.isEmpty) b.delete()
-      }
-    }
+    extra.foreach(rel => Recovery.move(dataDir.toPath.resolve(rel), asideRoot.resolve(rel)))
+    val v = Recovery.recordOnce(tableDir)
+    Recovery.clear(tableDir, Recovery.ROLLBACK)
+    Recovery.pruneEmpty(dataDir)
     v
   }
 
-  /** Record the table's current full file list as the next version (atomic
-    * tmp+rename, single-writer like the rest of the engine).
+  /** Record the table's current full file list as the next version
+    * ([[Recovery.writeAtomic]], single-writer like the rest of the engine).
     */
   def record(tableDir: String): Int = {
     val dataDir = new java.io.File(tableDir, "data")
     val base = dataDir.toPath
     val rel = walkData(dataDir).map(f => base.relativize(f.toPath).toString).sorted
     val v = latestVersion(tableDir).getOrElse(0) + 1
-    val d = snapDir(tableDir)
-    d.mkdirs()
-    val tmp = new java.io.File(d, s".v$v.txt.tmp")
-    java.nio.file.Files.write(tmp.toPath,
+    Recovery.writeAtomic(new java.io.File(snapDir(tableDir), s"v$v.txt"),
       (s"ts=${System.currentTimeMillis()}" +: rel).mkString("\n").getBytes("UTF-8"))
-    val dst = new java.io.File(d, s"v$v.txt")
-    if (!tmp.renameTo(dst)) throw new IllegalStateException(s"snapshot commit failed: $dst")
     v
   }
 }
@@ -725,6 +651,7 @@ class PagesTable(tableName: String, dir: String,
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(pinned.isEmpty,
       s"cannot run row-level ${info.command} on time-travel snapshot ${name()}")
+    Recovery.recover(dir)
     () => new GraftRowLevelOperation(this, info.command)
   }
 
@@ -830,6 +757,7 @@ class PagesTable(tableName: String, dir: String,
     pinned.isEmpty && filters.forall(deletable)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
+    Recovery.recover(dir)
     val data = new java.io.File(dataDir)
     if (data.isDirectory) {
       val rm = Snapshots.deleteRecursively _
@@ -840,8 +768,7 @@ class PagesTable(tableName: String, dir: String,
         d = dDir.getName.stripPrefix("day=")
         if filters.forall(evalPart(_, b, d)) // AND semantics, like scans
       } rm(dDir)
-      // drop bucket dirs emptied by the delete (keeps listings clean)
-      data.listFiles.filter(f => f.isDirectory && f.listFiles.isEmpty).foreach(_.delete())
+      Recovery.pruneEmpty(data)
     }
     Snapshots.record(dir)
   }
@@ -850,6 +777,7 @@ class PagesTable(tableName: String, dir: String,
     if (pinned.isDefined)
       throw new UnsupportedOperationException(
         s"cannot write to time-travel snapshot ${name()}")
+    Recovery.recover(dir)
     new WriteBuilder with SupportsTruncate {
       private var overwriteAll = false
       override def truncate(): WriteBuilder = { overwriteAll = true; this }

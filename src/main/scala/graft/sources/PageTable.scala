@@ -81,13 +81,7 @@ object PageTable {
     * Iceberg/Delta RESTORE contract).
     */
   def writeSchemaMeta(dir: String, extras: org.apache.spark.sql.types.StructType): Unit = {
-    val f = new java.io.File(dir, "_schema")
-    f.getParentFile.mkdirs()
-    val tmp = new java.io.File(dir, "._schema.tmp")
-    java.nio.file.Files.write(tmp.toPath, extras.json.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Recovery.writeAtomic(new java.io.File(dir, "_schema"), extras.json.getBytes("UTF-8"))
   }
 
   /** Extra columns added after table creation; empty for unevolved tables. */

@@ -14,12 +14,11 @@ import org.apache.spark.sql.functions._
   * the same trade: old data must be rewritten before bucket joins can
   * assume the new spec.)
   *
-  * Crash safety is the house intent-file device: stage the rewritten tree
-  * under a hidden dir, commit a write-ahead `_rebucket_pending` listing
-  * every aside-move and adoption, then apply. [[replay]] rolls a crashed
-  * apply FORWARD (idempotent: moves skip already-moved files, the snapshot
-  * records only once) and is wired into the catalog's `loadTable` prelude
-  * beside merge/rollback/branch replay.
+  * Crash safety is the house intent device ([[Recovery]]): stage the
+  * rewritten tree under a hidden dir, commit an intent (`newBuckets=`,
+  * `aside=`, then `adopt\t<path>` and `mv\t<path>` lines) listing every
+  * aside-move and adoption, then apply. [[replay]] rolls a crashed apply
+  * FORWARD.
   *
   * Like every physical rewrite, old snapshots and tags over the previous
   * layout stop being readable (their files are in the aside dir); rebucket
@@ -28,15 +27,10 @@ import org.apache.spark.sql.functions._
 object Rebucket {
 
   private val STAGE = "_rebucket_stage"
-  private val INTENT = "_rebucket_pending"
 
   def run(spark: SparkSession, tableDir: String, newBuckets: Int): (Int, Int) = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    RowLevelCommit.replay(tableDir)
-    Compact.repair(tableDir)
-    Snapshots.replayRollback(tableDir)
-    Branches.replayPublish(tableDir)
-    replay(tableDir)
+    Recovery.recover(tableDir)
     val latest = Snapshots.latestVersion(tableDir).getOrElse(
       sys.error(s"rebucket: $tableDir has no snapshots"))
     val (_, oldRel) = Snapshots.files(tableDir, latest).get
@@ -68,81 +62,35 @@ object Rebucket {
     val adopt = Snapshots.walkData(stage)
       .map(f => stageBase.relativize(f.toPath).toString).sorted
     // write-ahead intent: everything after this line is replayable
-    val tmp = new java.io.File(tableDir, s".$INTENT.tmp")
-    val intent = new java.io.File(tableDir, INTENT)
     val aside = s"rebucket-aside-v${latest}"
-    java.nio.file.Files.write(tmp.toPath,
-      ((s"newBuckets=$newBuckets" +: s"aside=$aside" +:
-        (adopt.map(r => s"adopt\t$r") ++ oldRel.map(r => s"mv\t$r")))
-        .mkString("\n")).getBytes("UTF-8"))
-    if (!tmp.renameTo(intent))
-      throw new IllegalStateException(s"rebucket intent commit failed: $intent")
+    Recovery.commit(tableDir, Recovery.REBUCKET,
+      Seq("newBuckets" -> newBuckets.toString, "aside" -> aside),
+      adopt.map(r => Seq("adopt", r)) ++ oldRel.map(r => Seq("mv", r)))
     val v = apply(tableDir, newBuckets, aside, adopt, oldRel)
     (v, adopt.size)
   }
 
   /** Roll a crashed rebucket forward. No-op without the intent file. */
-  def replay(tableDir: String): Unit = {
-    val intent = new java.io.File(tableDir, INTENT)
-    if (!intent.isFile) return
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(intent.toPath), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty)
-    val nb = lines.head.stripPrefix("newBuckets=").toInt
-    val aside = lines(1).stripPrefix("aside=")
-    val adopt = lines.collect { case l if l.startsWith("adopt\t") => l.drop(6) }
-    val moves = lines.collect { case l if l.startsWith("mv\t") => l.drop(3) }
-    apply(tableDir, nb, aside, adopt, moves)
-    ()
-  }
+  def replay(tableDir: String): Unit =
+    Recovery.read(tableDir, Recovery.REBUCKET).foreach(i =>
+      apply(tableDir, i("newBuckets").toInt, i("aside"), i.paths("adopt"), i.paths("mv")))
 
   private def apply(tableDir: String, newBuckets: Int, aside: String,
       adopt: Seq[String], oldRel: Seq[String]): Int = {
     val dataDir = new java.io.File(tableDir, "data")
     val base = dataDir.toPath
     val asideRoot = new java.io.File(tableDir, aside).toPath
-    // 1. old layout moves aside (skip = already moved by a prior attempt)
-    oldRel.foreach { rel =>
-      val src = base.resolve(rel)
-      if (java.nio.file.Files.isRegularFile(src)) {
-        val dst = asideRoot.resolve(rel)
-        java.nio.file.Files.createDirectories(dst.getParent)
-        java.nio.file.Files.move(src, dst,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
-    // 2. staged tree adopts under data/ (skip = already adopted)
     val stageBase = new java.io.File(tableDir, STAGE).toPath
-    adopt.foreach { rel =>
-      val src = stageBase.resolve(rel)
-      val dst = base.resolve(rel)
-      if (java.nio.file.Files.isRegularFile(src)) {
-        java.nio.file.Files.createDirectories(dst.getParent)
-        java.nio.file.Files.move(src, dst,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } else require(java.nio.file.Files.isRegularFile(dst),
-        s"rebucket replay: staged file lost before adoption: $rel")
-    }
-    // 3. new layout function becomes authoritative
+    // 1. old layout moves aside; 2. the staged tree is adopted under data/
+    oldRel.foreach(rel => Recovery.move(base.resolve(rel), asideRoot.resolve(rel)))
+    adopt.foreach(rel => Recovery.move(stageBase.resolve(rel), base.resolve(rel)))
+    // 3. new layout function becomes authoritative; 4. snapshot
     PageTable.writeBucketMeta(tableDir, newBuckets)
-    // 4. snapshot (guard the crash-after-record window)
-    val want = adopt.sorted
-    val v = Snapshots.latestVersion(tableDir) match {
-      case Some(l) if Snapshots.files(tableDir, l).exists(_._2.sorted == want) => l
-      case _ => Snapshots.record(tableDir)
-    }
-    new java.io.File(tableDir, INTENT).delete()
-    val stage = new java.io.File(tableDir, STAGE)
+    val v = Recovery.recordOnce(tableDir)
+    Recovery.clear(tableDir, Recovery.REBUCKET)
+    val stage = stageBase.toFile
     if (stage.exists()) Snapshots.deleteRecursively(stage)
-    // prune emptied partition dirs (vacuum convention)
-    Option(dataDir.listFiles).getOrElse(Array.empty).foreach { b =>
-      if (b.isDirectory) {
-        Option(b.listFiles).getOrElse(Array.empty)
-          .filter(d => d.isDirectory &&
-            Option(d.listFiles).exists(_.isEmpty)).foreach(_.delete())
-        if (Option(b.listFiles).exists(_.isEmpty)) b.delete()
-      }
-    }
+    Recovery.pruneEmpty(dataDir)
     v
   }
 }

@@ -48,10 +48,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    is RECOMPUTED from url (`pmod(xxhash64(url), n)`) — the layout
   *    function is the readers' url locator, so incoming bucket/day values
   *    are never trusted; an UPDATE that changes url correctly moves the row.
-  *  - Commit is write-ahead-intent: `_merge_pending` lists every rename and
-  *    delete before the first one happens; a crash mid-commit is rolled
-  *    FORWARD by the next catalog `loadTable` (idempotent move/delete
-  *    replay), then snapshotted. Single-writer, like the rest of the engine.
+  *  - Commit is write-ahead-intent ([[RowLevelCommit]] through
+  *    [[Recovery]]): a crash mid-commit is rolled FORWARD by the next table
+  *    operation, then snapshotted. Single-writer, like the rest of the
+  *    engine.
   *  - The write declares `RequiresDistributionAndOrdering` clustering on
   *    (bucket, day) so replacement rows of one partition land in one task
   *    (no small-file explosion); Spark plans the one exchange.
@@ -261,60 +261,36 @@ class CowWrite(table: PagesTable, op: GraftRowLevelOperation, writeSchema: Struc
   }
 }
 
-/** The write-ahead-intent commit: `_merge_pending` records every move and
-  * delete BEFORE the first file operation, so a crash anywhere inside the
-  * swap is rolled forward (replayed idempotently) by the next catalog
-  * `loadTable` instead of leaving a half-merged directory.
+/** The MERGE commit: one [[Recovery]] intent whose op lines are the
+  * renames (`mv\t<hidden>\t<final>`) and the replaced files
+  * (`rm\t<path>`), then the replay that applies them and records a
+  * snapshot.
   */
 object RowLevelCommit {
   /** @param moves   dataDir-relative (hiddenName, finalName) pairs
     * @param deletes dataDir-relative paths the merge scan planned (replaced)
     */
   def run(tableDir: String, moves: Seq[(String, String)], deletes: Seq[String]): Unit = {
-    val intent = new java.io.File(tableDir, "_merge_pending")
-    val tmp = new java.io.File(tableDir, "._merge_pending.tmp")
-    val body = (moves.map { case (h, f) => s"mv\t$h\t$f" } ++ deletes.map(d => s"rm\t$d"))
-      .mkString("\n")
-    java.nio.file.Files.write(tmp.toPath, body.getBytes("UTF-8"))
-    if (!tmp.renameTo(intent))
-      throw new IllegalStateException(s"cannot write merge intent $intent")
+    Recovery.commit(tableDir, Recovery.MERGE, Nil,
+      moves.map { case (h, f) => Seq("mv", h, f) } ++ deletes.map(d => Seq("rm", d)))
     replay(tableDir)
   }
 
-  /** Idempotent: mv skips already-renamed pairs, rm skips already-deleted
-    * paths; safe to run any number of times. Called by [[run]] and by
-    * recovery ([[GraftCatalog.loadTable]]) when `_merge_pending` exists.
-    */
-  def replay(tableDir: String): Unit = {
-    val intent = new java.io.File(tableDir, "_merge_pending")
-    if (!intent.isFile) return
-    val dataDir = new java.io.File(tableDir, "data")
-    val lines = new String(java.nio.file.Files.readAllBytes(intent.toPath), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty)
-    lines.foreach { l =>
-      l.split("\t") match {
-        case Array("mv", hidden, fin) =>
-          val h = new java.io.File(dataDir, hidden)
-          if (h.isFile && !h.renameTo(new java.io.File(dataDir, fin)))
-            throw new IllegalStateException(s"merge commit: rename failed for $h")
-        case Array("rm", rel) =>
-          val f = new java.io.File(dataDir, rel)
-          if (f.isFile) f.delete()
-        case other =>
-          throw new IllegalStateException(s"corrupt _merge_pending line: $l")
+  /** Apply a pending MERGE intent (no-op without one); idempotent. */
+  def replay(tableDir: String): Unit =
+    Recovery.read(tableDir, Recovery.MERGE).foreach { intent =>
+      val dataDir = new java.io.File(tableDir, "data")
+      val base = dataDir.toPath
+      intent.ops.foreach {
+        case List("mv", hidden, fin) => Recovery.move(base.resolve(hidden), base.resolve(fin))
+        case List("rm", rel) => java.nio.file.Files.deleteIfExists(base.resolve(rel))
+        case other => throw new IllegalStateException(
+          s"corrupt ${Recovery.MERGE} line: ${other.mkString("\t")}")
       }
+      Recovery.pruneEmpty(dataDir)
+      Snapshots.record(tableDir)
+      Recovery.clear(tableDir, Recovery.MERGE)
     }
-    // prune directories emptied by the replace (keeps listings clean)
-    Option(dataDir.listFiles).getOrElse(Array.empty).foreach { b =>
-      if (b.isDirectory) {
-        b.listFiles.foreach(d => if (d.isDirectory && d.listFiles.isEmpty) d.delete())
-        if (b.listFiles.isEmpty) b.delete()
-      }
-    }
-    Snapshots.record(tableDir)
-    if (!intent.delete())
-      throw new IllegalStateException(s"cannot clear merge intent $intent")
-  }
 }
 
 class CowWriterFactory(owf: OutputWriterFactory, conf: SerializableConf,

@@ -58,8 +58,7 @@ object StreamingCurate {
         import org.apache.spark.sql.expressions.Window
         val gated = Extract.extract(batch).toDF()
           .filter(col("contentKind") =!= "empty" && length(col("text")) > 0)
-          .withColumn("n_tok",
-            size(filter(split(col("text"), " "), t => t =!= lit(""))).cast("long"))
+          .withColumn("n_tok", Curate.nTokCol)
           .filter(col("n_tok") >= Curate.MIN_TOKENS)
           .withColumn("fp", md5(col("text")))
         val w = Window.partitionBy("fp").orderBy("url")
@@ -142,9 +141,10 @@ object StreamingCurate {
   def upToDate(pagesDir: String, checkpointDir: String): Boolean =
     committedListing(checkpointDir).contains(listingFingerprint(pagesDir))
 
-  /** Commit a listing fingerprint after a successful run (atomic tmp+rename
-    * — a crash mid-write must never leave a corrupt marker; a torn marker
-    * or none at all only costs one redundant no-data stream cycle).
+  /** Commit a listing fingerprint after a successful run
+    * ([[graft.sources.Recovery.writeAtomic]] — a crash mid-write must never
+    * leave a corrupt marker; none at all only costs one redundant no-data
+    * stream cycle).
     *
     * IMPORTANT: commit the fingerprint captured BEFORE the stream started,
     * never a fresh one — a file appended mid-run is NOT in the stream's
@@ -155,14 +155,8 @@ object StreamingCurate {
     * the checkpoint keeps that idempotent).
     */
   def commitListing(listingAtStart: String, checkpointDir: String): Unit = {
-    val m = markerFile(checkpointDir)
-    m.getParentFile.mkdirs()
-    val tmp = new java.io.File(m.getParentFile, s".${m.getName}.tmp")
-    java.nio.file.Files.write(tmp.toPath,
+    graft.sources.Recovery.writeAtomic(markerFile(checkpointDir),
       listingAtStart.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, m.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Run to completion and return the curated table so far. */

@@ -30,6 +30,20 @@ class MainArgsSpec extends AnyFunSuite {
     }
   }
 
+  test("the local-cluster executor classpath is the running code source") {
+    val main = new java.io.File(Main.codeSource(Main.getClass))
+    assert(new java.io.File(main, "graft/Main.class").isFile || main.getName.endsWith(".jar"), main)
+    // derived per class, not fixed: this spec is compiled to another root
+    val spec = new java.io.File(Main.codeSource(classOf[MainArgsSpec]))
+    assert(new java.io.File(spec, "graft/MainArgsSpec.class").isFile, spec)
+    assert(spec != main)
+  }
+
+  test("every Bench headline query is registered in SparkEntry.queries") {
+    val missing = Bench.HEADLINE.filterNot(SparkEntry.queries.keySet)
+    assert(missing.isEmpty, missing)
+  }
+
   test("a refused command prints the usage and exits 2 before Spark starts") {
     for (args <- Seq(Seq("run", "a", "b"), Seq("nope", "a", "b", "c"))) {
       val (code, out) = ChildJvm.run(Nil, "graft.Main", args: _*)
