@@ -332,10 +332,8 @@ object Main {
           val seed = if (args.length > 4) args(4).toLong else Corpus.DEFAULT_SEED
           val buckets = graft.sources.PageTable.readBucketMeta(dir)
             .getOrElse(graft.sources.PageTable.DEFAULT_BUCKETS)
-          spark.range(from, to).map(i => Corpus.page(seed, i)).toDF()
-            .withColumn("bucket", graft.sources.PageTable.bucketCol(buckets))
-            .withColumn("day", date_format(col("warc_ts"), "yyyy-MM-dd"))
-            .repartition(col("bucket"))
+          val drop = spark.range(from, to).map(i => Corpus.page(seed, i)).toDF()
+          graft.sources.PageTable.place(drop, buckets)
             .write.mode("append").partitionBy("bucket", "day")
             .parquet(s"$dir/data")
           graft.sources.Snapshots.record(dir)

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.Model
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 import java.util.Locale
 
 /** Write-Audit-Publish branches on the pages table (SURVEY.md §2.20 S20) —
@@ -105,10 +104,7 @@ object Branches {
       s"branch append has columns not in the table schema: ${unknown.mkString(",")}")
     val numBuckets = PageTable.readBucketMeta(tableDir)
       .getOrElse(PageTable.DEFAULT_BUCKETS)
-    drop
-      .withColumn("bucket", PageTable.bucketCol(numBuckets))
-      .withColumn("day", date_format(col("warc_ts"), "yyyy-MM-dd"))
-      .repartition(col("bucket"))
+    PageTable.place(drop, numBuckets)
       .write
       .mode(SaveMode.Append)
       .partitionBy("bucket", "day")

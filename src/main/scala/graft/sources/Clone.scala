@@ -24,56 +24,19 @@ object Clone {
 
   /** Clone `srcDir` at `version` / tag `ref` (default: latest snapshot)
     * into `dstDir`. Returns (source version cloned, files linked).
-    */
-  def run(srcDir: String, dstDir: String,
-          version: Option[Int] = None, ref: Option[String] = None): (Int, Int) = {
-    val v = ref
-      .map(r => Snapshots.resolveRef(srcDir, r).getOrElse(
-        sys.error(s"clone: no tag '$r' on $srcDir")))
-      .orElse(version)
-      .orElse(Snapshots.latestVersion(srcDir))
-      .getOrElse(sys.error(s"clone: $srcDir has no snapshots"))
-    val (_, rel) = Snapshots.files(srcDir, v).getOrElse(
-      sys.error(s"clone: $srcDir has no snapshot v$v"))
-    val dst = new java.io.File(dstDir)
-    val dstData = new java.io.File(dst, "data")
-    require(Snapshots.latestVersion(dstDir).isEmpty &&
-      Snapshots.walkData(dstData).isEmpty,
-      s"clone: target $dstDir is already a table (refusing to mix histories)")
-    val srcData = new java.io.File(srcDir, "data")
-    val missing = rel.filterNot(p => new java.io.File(srcData, p).isFile)
-    require(missing.isEmpty,
-      s"clone: snapshot v$v references ${missing.size} files no longer " +
-        s"present (rollback/vacuum aside?): ${missing.take(5).mkString(", ")}")
-    rel.foreach { p =>
-      val s = new java.io.File(srcData, p)
-      val d = new java.io.File(dstData, p)
-      d.getParentFile.mkdirs()
-      java.nio.file.Files.createLink(d.toPath, s.toPath)
-    }
-    PageTable.readBucketMeta(srcDir)
-      .foreach(b => PageTable.writeBucketMeta(dstDir, b))
-    val extras = PageTable.readSchemaMeta(srcDir)
-    if (extras.nonEmpty) PageTable.writeSchemaMeta(dstDir, extras)
-    val cv = Snapshots.record(dstDir)
-    assert(cv == 1, s"clone target unexpectedly had history (v$cv)")
-    (v, rel.size)
-  }
-
-  /** Distributed clone (the 10^5-file shape): the stat pass and the link
-    * pass each run as one executor job over the snapshot manifest AS a
-    * table ([[Manifests.manifestDf]] — byte-range-split text scan), and the
-    * clone's v1 manifest is the SOURCE manifest re-stamped (identical file
-    * list by construction) — no driver walk at any file count. Semantics
-    * match the driver overload: refuse-before-any-link (the stat pass runs
-    * first), same isolation, same metadata copy. A crash mid-link leaves a
-    * snapshot-less link tree exactly like the driver loop would; the
+    *
+    * The stat pass and the link pass each run as one executor job over the
+    * snapshot manifest AS a table ([[Manifests.manifestDf]] — byte-range-
+    * split text scan), and the clone's v1 manifest is the SOURCE manifest
+    * re-stamped (identical file list by construction) — no driver walk at
+    * any file count. Every referenced file is checked before the first
+    * link. A crash mid-link leaves a snapshot-less link tree; the
     * target-not-a-table require refuses to build on it — delete and
     * re-clone.
     */
   def run(spark: org.apache.spark.sql.SparkSession,
           srcDir: String, dstDir: String,
-          version: Option[Int], ref: Option[String]): (Int, Int) = {
+          version: Option[Int] = None, ref: Option[String] = None): (Int, Int) = {
     import spark.implicits._
     val v = ref
       .map(r => Snapshots.resolveRef(srcDir, r).getOrElse(

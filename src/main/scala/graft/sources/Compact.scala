@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import java.io.File
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Small-file compaction for the pages layout (the OPTIMIZE maintenance op):
@@ -41,19 +42,19 @@ object Compact {
     * output is removed. Idempotent; the first step of [[Recovery.recover]].
     */
   def repair(tableDir: String): Unit = {
-    val dataDir = new java.io.File(tableDir, "data")
+    val dataDir = new File(tableDir, "data")
     if (dataDir.isDirectory) {
       for {
         bDir <- dataDir.listFiles.toSeq if bDir.isDirectory
         aside <- bDir.listFiles.toSeq if aside.getName.startsWith(ASIDE_PREFIX)
       } {
-        val live = new java.io.File(bDir, aside.getName.stripPrefix(ASIDE_PREFIX))
+        val live = new File(bDir, aside.getName.stripPrefix(ASIDE_PREFIX))
         if (live.exists()) Snapshots.deleteRecursively(aside)
         else if (!aside.renameTo(live))
           throw new IllegalStateException(s"repair failed restoring $aside")
       }
     }
-    val tmp = new java.io.File(tableDir, TMP_NAME)
+    val tmp = new File(tableDir, TMP_NAME)
     if (tmp.exists()) Snapshots.deleteRecursively(tmp)
   }
 
@@ -78,68 +79,20 @@ object Compact {
   }
 
   def run(spark: SparkSession, tableDir: String): (Int, Int, Int) = {
-    val dataDir = new java.io.File(tableDir, "data")
+    val dataDir = new File(tableDir, "data")
     require(dataDir.isDirectory, s"no pages data under $tableDir")
     Recovery.recover(tableDir)
 
-    def dataFiles(d: java.io.File): Array[java.io.File] =
-      if (!d.isDirectory) Array.empty
-      else d.listFiles.filter(f => f.isFile && f.getName.endsWith(".parquet"))
-
-    val fragmented =
-      for {
-        bDir <- dataDir.listFiles.toSeq if bDir.getName.startsWith("bucket=")
-        dDir <- bDir.listFiles.toSeq if dDir.getName.startsWith("day=")
-        n = dataFiles(dDir).length if n > 1
-      } yield (dDir, n)
-
+    val fragmented = leaves(dataDir).filter(_._2.length > 1)
     if (fragmented.isEmpty) return (0, 0, 0)
-    val filesBefore = fragmented.map(_._2).sum
-    warnTaggedRewrite(tableDir, "compact", {
-      val base = dataDir.toPath
-      fragmented.flatMap { case (leaf, _) =>
-        dataFiles(leaf).map(f => base.relativize(f.toPath).toString)
-      }.toSet
-    })
-
     // one job over just the fragmented leaves; basePath restores bucket/day
-    val tmpOut = new java.io.File(tableDir, TMP_NAME)
-    val paths = fragmented.map(_._1.toString)
-    spark.read
+    val rows = spark.read
       .option("basePath", dataDir.toString)
       .schema(PagesTable.fullFor(tableDir))
-      .parquet(paths: _*)
+      .parquet(fragmented.map(_._1.toString): _*)
       .repartition(col("bucket"), col("day"))
-      .write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("bucket", "day")
-      .parquet(tmpOut.toString)
-
-    for ((oldLeaf, _) <- fragmented) {
-      val rel = dataDir.toPath.relativize(oldLeaf.toPath).toString
-      val newLeaf = new java.io.File(tmpOut, rel)
-      if (!newLeaf.isDirectory || dataFiles(newLeaf).isEmpty) {
-        // every input file of this leaf held zero rows (aborted-batch
-        // debris): the rewrite produced no partition — dropping the leaf IS
-        // the compaction (no rows exist to lose)
-        Snapshots.deleteRecursively(oldLeaf)
-      } else {
-        val aside = new java.io.File(oldLeaf.getParentFile,
-          ASIDE_PREFIX + oldLeaf.getName)
-        if (!oldLeaf.renameTo(aside))
-          throw new IllegalStateException(s"compaction aside failed for $rel")
-        if (!newLeaf.renameTo(oldLeaf)) {
-          aside.renameTo(oldLeaf) // restore; nothing lost
-          throw new IllegalStateException(s"compaction swap failed for $rel")
-        }
-        Snapshots.deleteRecursively(aside)
-      }
-    }
-    Snapshots.deleteRecursively(tmpOut)
-
-    val filesAfter = fragmented.map { case (leaf, _) => dataFiles(leaf).length }.sum
-    Snapshots.record(tableDir)
-    (fragmented.size, filesBefore, filesAfter)
+    val filesAfter = rewrite(tableDir, "compact", fragmented, rows, Map.empty)
+    (fragmented.size, fragmented.map(_._2.length).sum, filesAfter)
   }
 
   /** `OPTIMIZE ZORDER BY (d1, d2)` — rewrite every leaf with rows sorted
@@ -159,8 +112,8 @@ object Compact {
     * interleave into a 16-bit z key. The rewrite itself is ONE job: hash-
     * repartition by (bucket, day) — each leaf lands in one task — sort
     * within task by (bucket, day, z), write with `maxRecordsPerFile`
-    * splitting each leaf into z-contiguous files. Leaves swap with the
-    * same crash-safe aside dance as [[run]]; a snapshot is committed.
+    * splitting each leaf into z-contiguous files. Leaves swap through the
+    * same crash-safe aside swap as [[run]]; a snapshot is committed.
     *
     * At 100 TB: sampling is one cheap scan-and-discard pass, the rewrite
     * shuffles each row once, and every leaf is rewritten independently —
@@ -175,7 +128,7 @@ object Compact {
              maxRecordsPerFile: Long = 0L): (Int, Int) = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.types.StringType
-    val dataDir = new java.io.File(tableDir, "data")
+    val dataDir = new File(tableDir, "data")
     require(dataDir.isDirectory, s"no pages data under $tableDir")
     Recovery.recover(tableDir)
 
@@ -219,52 +172,72 @@ object Compact {
         " + shiftleft((__zx div shiftleft(1L, i)) % 2, 2*i)" +
         " + shiftleft((__zy div shiftleft(1L, i)) % 2, 2*i+1))")
 
-    val tmpOut = new java.io.File(tableDir, TMP_NAME)
-    full
+    val all = leaves(dataDir)
+    val rows = full
       .withColumn("__zx", bx).withColumn("__zy", by)
       .withColumn("__z", z)
       .repartition(col("bucket"), col("day"))
       .sortWithinPartitions(col("bucket"), col("day"), col("__z"))
       .drop("__zx", "__zy", "__z")
-      .write
+    val filesAfter = rewrite(tableDir, "zorder", all, rows,
+      Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
+    (all.size, filesAfter)
+  }
+
+  private def dataFiles(d: File): Array[File] =
+    if (!d.isDirectory) Array.empty
+    else d.listFiles.filter(f => f.isFile && f.getName.endsWith(".parquet"))
+
+  /** Every `bucket=<b>/day=<d>` leaf holding data files, with those files. */
+  private def leaves(dataDir: File): Seq[(File, Array[File])] =
+    for {
+      bDir <- dataDir.listFiles.toSeq if bDir.getName.startsWith("bucket=")
+      dDir <- bDir.listFiles.toSeq if dDir.getName.startsWith("day=")
+      files = dataFiles(dDir) if files.nonEmpty
+    } yield (dDir, files)
+
+  /** Write `rows` (the rewritten content of exactly `targets`) partitioned
+    * by bucket/day, swap each rewritten leaf in for its old one, commit a
+    * snapshot and return the data-file count of the swapped leaves. Every
+    * leaf is checked before the first swap: a leaf the rewrite produced no
+    * output for is dropped only when the footers of its old files count
+    * zero rows (aborted-batch debris); any other missing leaf means the
+    * rewrite lost rows, and the run fails with the table untouched.
+    */
+  private def rewrite(tableDir: String, what: String, targets: Seq[(File, Array[File])],
+                      rows: DataFrame, options: Map[String, String]): Int = {
+    val dataDir = new File(tableDir, "data")
+    def rel(f: File) = dataDir.toPath.relativize(f.toPath).toString
+    warnTaggedRewrite(tableDir, what, targets.flatMap(_._2.map(rel)).toSet)
+    val tmpOut = new File(tableDir, TMP_NAME)
+    rows.write
       .mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .options(options)
       .partitionBy("bucket", "day")
       .parquet(tmpOut.toString)
 
-    def dataFiles(d: java.io.File): Array[java.io.File] =
-      if (!d.isDirectory) Array.empty
-      else d.listFiles.filter(f => f.isFile && f.getName.endsWith(".parquet"))
-
-    val leaves =
-      for {
-        bDir <- dataDir.listFiles.toSeq if bDir.getName.startsWith("bucket=")
-        dDir <- bDir.listFiles.toSeq if dDir.getName.startsWith("day=")
-        if dataFiles(dDir).nonEmpty
-      } yield dDir
-    warnTaggedRewrite(tableDir, "zorder", {
-      val base = dataDir.toPath
-      leaves.flatMap(l =>
-        dataFiles(l).map(f => base.relativize(f.toPath).toString)).toSet
-    })
-    for (oldLeaf <- leaves) {
-      val rel = dataDir.toPath.relativize(oldLeaf.toPath).toString
-      val newLeaf = new java.io.File(tmpOut, rel)
-      require(newLeaf.isDirectory && dataFiles(newLeaf).nonEmpty,
-        s"zorder rewrite lost leaf $rel")
-      val aside = new java.io.File(oldLeaf.getParentFile, ASIDE_PREFIX + oldLeaf.getName)
-      if (!oldLeaf.renameTo(aside))
-        throw new IllegalStateException(s"zorder aside failed for $rel")
-      if (!newLeaf.renameTo(oldLeaf)) {
-        aside.renameTo(oldLeaf)
-        throw new IllegalStateException(s"zorder swap failed for $rel")
-      }
-      Snapshots.deleteRecursively(aside)
+    val swaps = targets.map { case (oldLeaf, oldFiles) =>
+      val newLeaf = new File(tmpOut, rel(oldLeaf))
+      val empty = dataFiles(newLeaf).isEmpty
+      if (empty && !TableStats.rowCount(oldFiles.toSeq.map(_.toPath)).contains(0L))
+        throw new IllegalStateException(s"$what rewrite lost leaf ${rel(oldLeaf)}")
+      (oldLeaf, if (empty) None else Some(newLeaf))
+    }
+    for ((oldLeaf, newLeaf) <- swaps) newLeaf match {
+      case None => Snapshots.deleteRecursively(oldLeaf)
+      case Some(nl) =>
+        val aside = new File(oldLeaf.getParentFile, ASIDE_PREFIX + oldLeaf.getName)
+        if (!oldLeaf.renameTo(aside))
+          throw new IllegalStateException(s"$what aside failed for ${rel(oldLeaf)}")
+        if (!nl.renameTo(oldLeaf)) {
+          aside.renameTo(oldLeaf) // restore; nothing lost
+          throw new IllegalStateException(s"$what swap failed for ${rel(oldLeaf)}")
+        }
+        Snapshots.deleteRecursively(aside)
     }
     Snapshots.deleteRecursively(tmpOut)
-    val filesAfter = leaves.map(l => dataFiles(l).length).sum
     Snapshots.record(tableDir)
-    (leaves.size, filesAfter)
+    targets.map { case (leaf, _) => dataFiles(leaf).length }.sum
   }
 
   /** Age floor for [[vacuum]]: files younger than this are NEVER deleted
@@ -278,55 +251,20 @@ object Compact {
     */
   val DEFAULT_VACUUM_MIN_AGE_MS: Long = 24L * 3600 * 1000
 
-  /** VACUUM: delete data files NOT referenced by the latest snapshot and
-    * older than `minAgeMs` — the cleanup op for debris from failed/killed
-    * writes. Snapshot-less tables (pre-log layouts) are refused rather than
-    * guessed at. Returns (files removed, bytes removed).
+  /** VACUUM: delete data files NOT referenced by the latest snapshot or
+    * any tag (the Iceberg ref-reachable retention rule) and older than
+    * `minAgeMs` — the cleanup op for debris from failed/killed writes.
+    * Snapshot-less tables (pre-log layouts) are refused rather than
+    * guessed at. The live-set diff runs ON EXECUTORS: the on-disk listing
+    * is one walk task per top-level partition dir ([[Manifests.listingDf]]),
+    * the live set (latest ∪ every tag) is a manifest text scan, and
+    * candidates = listing ANTI-JOIN live with the age floor applied
+    * executor-side. Only the debris-sized delete list is collected; the
+    * deletes themselves stay driver-side (single mutator, like every commit
+    * in this table layer). Returns (files removed, bytes removed).
     */
-  def vacuum(tableDir: String,
+  def vacuum(spark: SparkSession, tableDir: String,
              minAgeMs: Long = DEFAULT_VACUUM_MIN_AGE_MS): (Int, Long) = {
-    val (latest @ _, liveVersions) = vacuumPrepare(tableDir)
-    val liveSet: Set[String] = liveVersions
-      .flatMap(v => Snapshots.files(tableDir, v).toSeq.flatMap(_._2)).toSet
-    val dataDir = new java.io.File(tableDir, "data")
-    val base = dataDir.toPath
-    val horizon = System.currentTimeMillis() - minAgeMs
-    val orphans = Snapshots.walkData(dataDir)
-      .filterNot(f => liveSet.contains(base.relativize(f.toPath).toString))
-      .filter(_.lastModified() <= horizon)
-    vacuumDelete(dataDir, orphans.map(f => (base.relativize(f.toPath).toString, f.length())))
-  }
-
-  /** Distributed VACUUM: the live-set diff runs ON EXECUTORS — the on-disk
-    * listing is one walk task per top-level partition dir
-    * ([[Manifests.listingDf]]), the live set (latest ∪ every tag) is a
-    * manifest text scan, and candidates = listing ANTI-JOIN live with the
-    * age floor applied executor-side. Only the debris-sized delete list is
-    * collected; the deletes themselves stay driver-side (single mutator,
-    * like every commit in this table layer). Same findings/returns as the
-    * driver-walk overload — DoctorSpec-style parity is pinned in
-    * MetaDistSpec.
-    */
-  def vacuum(spark: org.apache.spark.sql.SparkSession, tableDir: String,
-             minAgeMs: Long): (Int, Long) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val (_, liveVersions) = vacuumPrepare(tableDir)
-    val dataDir = new java.io.File(tableDir, "data")
-    val horizon = System.currentTimeMillis() - minAgeMs
-    val live = Manifests.manifestsDf(spark, tableDir, liveVersions)
-    val orphans = Manifests.listingDf(spark, dataDir)
-      .filter(col("mtime_ms") <= lit(horizon))
-      .join(live, Seq("path"), "left_anti")
-      .select("path", "size_bytes")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    vacuumDelete(dataDir, orphans)
-  }
-
-  /** Shared preamble: [[Recovery.recover]] + live-version resolution. Returns
-    * (latest version, versions whose files are GC-protected = latest plus
-    * every tagged snapshot — the Iceberg ref-reachable retention rule).
-    */
-  private def vacuumPrepare(tableDir: String): (Int, Seq[Int]) = {
     // a half-applied commit's files (moved, pre-snapshot) must be rolled
     // FORWARD before the latest version is read, or its snapshot would land
     // after the live-set read and vacuum would GC the moved files
@@ -334,15 +272,15 @@ object Compact {
     val latest = Snapshots.latestVersion(tableDir).getOrElse(
       throw new IllegalStateException(
         s"$tableDir has no snapshot log; vacuum needs one to know what is live"))
-    (latest, (latest +: Snapshots.tags(tableDir).map(_._2)).distinct)
-  }
-
-  /** Shared deletion tail: remove the (relative path, size) debris list and
-    * drop emptied partition dirs. Returns (files removed, bytes removed).
-    */
-  private def vacuumDelete(dataDir: java.io.File,
-                           orphans: Seq[(String, Long)]): (Int, Long) = {
-    orphans.foreach { case (rel, _) => new java.io.File(dataDir, rel).delete() }
+    val liveVersions = (latest +: Snapshots.tags(tableDir).map(_._2)).distinct
+    val dataDir = new File(tableDir, "data")
+    val horizon = System.currentTimeMillis() - minAgeMs
+    val orphans = Manifests.listingDf(spark, dataDir)
+      .filter(col("mtime_ms") <= lit(horizon))
+      .join(Manifests.manifestsDf(spark, tableDir, liveVersions), Seq("path"), "left_anti")
+      .select("path", "size_bytes")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    orphans.foreach { case (rel, _) => new File(dataDir, rel).delete() }
     Recovery.pruneEmpty(dataDir)
     (orphans.size, orphans.map(_._2).sum)
   }

@@ -12,7 +12,6 @@ import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -34,8 +33,9 @@ import java.util.Locale
   * metadata; the read data plane delegates to Spark's built-in v2 Parquet
   * source (vectorized reader, filter pushdown, bucket/day directory pruning
   * — pinned in PageTableSpec), and the write plane is a `V1Write` that
-  * derives the bucket/day partition columns when absent and routes through
-  * the dynamic-partition Parquet writer the rest of the engine already uses.
+  * derives the bucket/day partition columns ([[PageTable.place]]) and
+  * routes through the dynamic-partition Parquet writer the rest of the
+  * engine already uses.
   */
 class GraftCatalog extends TableCatalog {
 
@@ -272,8 +272,8 @@ object PagesTable {
   * keep history valid forever, but `INSERT OVERWRITE`/`TRUNCATE` delete data
   * files, so older snapshots referencing them fail loudly at scan time with
   * the missing paths — history is append-only-durable, like a format without
-  * a file pool. Writes through bare [[PageTable.write]] bypass the catalog
-  * and record nothing (such tables report "no snapshot").
+  * a file pool. Writes outside the catalog ([[PageTable.write]],
+  * `Main append-pages`) record a snapshot the same way.
   *
   * Operations that move files before they record (MERGE, [[rollback]],
   * branch publish, rebucket) commit through [[Recovery]], which rolls a
@@ -787,20 +787,10 @@ class PagesTable(tableName: String, dir: String,
             override def insert(data: DataFrame, overwrite: Boolean): Unit = {
               val missing = Model.PAGES.fieldNames.filterNot(data.columns.contains)
               require(missing.isEmpty, s"pages insert missing columns: ${missing.mkString(",")}")
-              // partition columns are DERIVED whenever absent or null (the
-              // NULL column default pads narrow appends; hidden partitioning)
-              val withBucket =
-                if (data.columns.contains("bucket"))
-                  data.withColumn("bucket",
-                    coalesce(col("bucket"), PageTable.bucketCol(numBuckets)))
-                else data.withColumn("bucket", PageTable.bucketCol(numBuckets))
-              val withDay =
-                if (withBucket.columns.contains("day"))
-                  withBucket.withColumn("day",
-                    coalesce(col("day"), date_format(col("warc_ts"), "yyyy-MM-dd")))
-                else withBucket.withColumn("day", date_format(col("warc_ts"), "yyyy-MM-dd"))
-              withDay
-                .repartition(col("bucket"))
+              // partition columns are always DERIVED (hidden partitioning):
+              // a supplied bucket/day — NULL padding for narrow appends, or
+              // another table's layout — is replaced, like the MERGE writer
+              PageTable.place(data, numBuckets)
                 .write
                 .mode(if (overwriteAll || overwrite) SaveMode.Overwrite else SaveMode.Append)
                 .partitionBy("bucket", "day")

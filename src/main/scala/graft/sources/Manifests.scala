@@ -2,10 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Executor-side views of the table-layer metadata — the distributed path
-  * the maintenance ops (`$files`/`$partitions` meta tables, doctor's
-  * manifest-hole/orphan audit, vacuum's live-set diff) consume instead of
-  * driver-side walks.
+/** Executor-side views of the table-layer metadata — the one path the
+  * metadata tables (`$files`, `$partitions`, `$snapshots`), doctor's
+  * distributed manifest-hole/orphan audit, vacuum's live-set diff and
+  * clone's stat and link passes read it through.
   *
   * Two primitives:
   *

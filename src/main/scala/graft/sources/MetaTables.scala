@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -31,7 +32,8 @@ import java.util
   *                     file count (S19).
   *
   * Scale shape: `$snapshots`/`$refs` are log-bounded (one row per version /
-  * tag) and materialize driver-side via [[LocalScan]]. `$files` and
+  * tag) and materialize driver-side via [[LocalScan]]; `$snapshots` takes
+  * its file sizes from the distributed [[Manifests.listingDf]]. `$files` and
   * `$partitions` are FILE-COUNT-bounded, so they plan a real DISTRIBUTED
   * batch scan: one [[InputPartition]] per top-level partition directory,
   * carrying that directory's shard of the latest manifest; executors walk
@@ -95,21 +97,13 @@ object MetaTables {
   }
 
   private def snapshotRows(tableDir: String): Array[InternalRow] = {
-    val dataDir = new java.io.File(tableDir, "data")
     // ONE on-disk size map for every version's bytes/missing columns: the
-    // stat syscalls (the 10^5-file wall) run in the distributed listing
-    // when a session is active; the per-version work is then hash lookups.
-    // Driver walk kept for session-less use. Result rows stay log-bounded.
+    // stat syscalls (the 10^5-file wall) run in the distributed listing of
+    // the session planning the scan; the per-version work is then hash
+    // lookups. Result rows stay log-bounded.
     val sizes: Map[String, Long] =
-      org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(s) =>
-          Manifests.listingDf(s, dataDir).collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-        case None =>
-          val base = dataDir.toPath
-          Snapshots.walkData(dataDir)
-            .map(f => base.relativize(f.toPath).toString -> f.length()).toMap
-      }
+      Manifests.listingDf(SparkSession.active, new java.io.File(tableDir, "data")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
     Snapshots.allVersions(tableDir).map { v =>
       val (ts, files) = Snapshots.files(tableDir, v).get
       new GenericInternalRow(Array[Any](
@@ -143,7 +137,7 @@ object MetaTables {
       // $files lists what is ON DISK (debris included) — shard by the real
       // directory tree; $partitions rolls up the LATEST SNAPSHOT — shard by
       // the manifest's own top-level components (a referenced-but-deleted
-      // dir must still produce its group, sized 0, like the driver walk did)
+      // dir must still produce its group, sized 0)
       case "files" =>
         if (!dataDir.isDirectory) Seq.empty
         else dataDir.listFiles.toSeq.map(_.getName)

@@ -33,12 +33,23 @@ object PageTable {
   def bucketCol(numBuckets: Int) =
     pmod(xxhash64(col("url")), lit(numBuckets.toLong)).cast("int")
 
-  def write(pages: Dataset[Page], dir: String,
-            numBuckets: Int = DEFAULT_BUCKETS): Unit = {
-    pages
+  /** Place NEW pages rows in the layout: `bucket` from the layout function
+    * and `day` from `warc_ts`, each replacing any value the caller supplied
+    * (readers locate a url by the layout function alone), clustered by
+    * bucket so a bucket's rows land in one write task. Every writer of new
+    * rows uses it: [[write]], catalog inserts, branch appends and
+    * `Main append-pages`; the MERGE writer ([[CowDataWriter]]) applies the
+    * same function per row.
+    */
+  def place(rows: DataFrame, numBuckets: Int): DataFrame =
+    rows
       .withColumn("bucket", bucketCol(numBuckets))
       .withColumn("day", date_format(col("warc_ts"), "yyyy-MM-dd"))
       .repartition(col("bucket"))
+
+  def write(pages: Dataset[Page], dir: String,
+            numBuckets: Int = DEFAULT_BUCKETS): Unit = {
+    place(pages.toDF(), numBuckets)
       .write
       .mode(SaveMode.Overwrite)
       .partitionBy("bucket", "day")

@@ -26,7 +26,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOptio
   *   3. rollback ([[Snapshots.replayRollback]]);
   *   4. branch publish ([[Branches.replayPublish]]);
   *   5. rebucket ([[Rebucket.replay]]).
-  * Rollback, rebucket, compaction, z-order, both vacuums, publish and every
+  * Rollback, rebucket, compaction, z-order, vacuum, publish and every
   * catalog write (append/overwrite, MERGE/UPDATE/DELETE, metadata DELETE)
   * run it before they read the live file set. A catalog read (`loadTable`)
   * runs it only when an intent is pending ([[pending]]); otherwise it

@@ -261,22 +261,30 @@ class CowWrite(table: PagesTable, op: GraftRowLevelOperation, writeSchema: Struc
   }
 }
 
-/** The MERGE commit: one [[Recovery]] intent whose op lines are the
-  * renames (`mv\t<hidden>\t<final>`) and the replaced files
-  * (`rm\t<path>`), then the replay that applies them and records a
-  * snapshot.
+/** The MERGE commit: one [[Recovery]] intent whose header `base=<v>` is
+  * the latest version at commit time and whose op lines are the renames
+  * (`mv\t<hidden>\t<final>`) and the replaced files (`rm\t<path>`), then
+  * the replay that applies them and records a snapshot.
   */
 object RowLevelCommit {
   /** @param moves   dataDir-relative (hiddenName, finalName) pairs
     * @param deletes dataDir-relative paths the merge scan planned (replaced)
     */
   def run(tableDir: String, moves: Seq[(String, String)], deletes: Seq[String]): Unit = {
-    Recovery.commit(tableDir, Recovery.MERGE, Nil,
+    val base = Snapshots.latestVersion(tableDir).getOrElse(0)
+    Recovery.commit(tableDir, Recovery.MERGE, Seq("base" -> base.toString),
       moves.map { case (h, f) => Seq("mv", h, f) } ++ deletes.map(d => Seq("rm", d)))
     replay(tableDir)
   }
 
-  /** Apply a pending MERGE intent (no-op without one); idempotent. */
+  /** Apply a pending MERGE intent (no-op without one); idempotent. The
+    * snapshot is recorded only while the latest version is still `base`:
+    * a MERGE that crashed after its record and before clearing its intent
+    * already committed, and records nothing on replay. An intent without a
+    * `base=` header (written before the header existed) always records.
+    * The rule is by version, not by file set, so a MERGE that changed no
+    * file still commits its own version.
+    */
   def replay(tableDir: String): Unit =
     Recovery.read(tableDir, Recovery.MERGE).foreach { intent =>
       val dataDir = new java.io.File(tableDir, "data")
@@ -288,7 +296,8 @@ object RowLevelCommit {
           s"corrupt ${Recovery.MERGE} line: ${other.mkString("\t")}")
       }
       Recovery.pruneEmpty(dataDir)
-      Snapshots.record(tableDir)
+      val latest = Snapshots.latestVersion(tableDir).getOrElse(0)
+      if (intent.header.get("base").forall(_.toInt == latest)) Snapshots.record(tableDir)
       Recovery.clear(tableDir, Recovery.MERGE)
     }
 }

@@ -130,7 +130,7 @@ class BranchSpec extends AnyFunSuite {
 
     // vacuum with a zero age floor runs the replay prelude FIRST, so the
     // half-adopted (snapshot-less) files are committed, not collected
-    val (gc, _) = Compact.vacuum(dir, minAgeMs = 0L)
+    val (gc, _) = Compact.vacuum(spark, dir, minAgeMs = 0L)
     assert(gc == 0, s"vacuum collected $gc half-published files")
     assert(Snapshots.latestVersion(dir).contains(v1 + 1))
     assert(PageTable.read(spark, dir).count() == N + 25)

@@ -21,7 +21,7 @@ class CloneSpec extends AnyFunSuite {
     val src = s"$tmp/src"
     PageTable.write(Corpus.pages(spark, 120L), src, numBuckets = 4) // v1
     val before = urls(src)
-    val (v, n) = Clone.run(src, s"$tmp/c1")
+    val (v, n) = Clone.run(spark, src, s"$tmp/c1")
     assert(v == 1 && n > 0)
     assert(urls(s"$tmp/c1") == before)
     // hard links: same inode -> zero copied bytes. Pin via Files.isSameFile
@@ -50,13 +50,13 @@ class CloneSpec extends AnyFunSuite {
     val v1Urls = Corpus.pages(spark, 100L).select("url")
       .as[String].collect().sorted.toSeq
     // by tag: the v1 corpus exactly
-    Clone.run(src, s"$tmp/c2", ref = Some("drop1"))
+    Clone.run(spark, src, s"$tmp/c2", ref = Some("drop1"))
     assert(urls(s"$tmp/c2") == v1Urls)
     // compact + vacuum the SOURCE: its old small files are rewritten and
     // GC'd, but the clone holds hard links — shared inodes survive
     Snapshots.untag(src, "drop1") // release the pin so vacuum may collect
     Compact.run(spark, src)
-    Compact.vacuum(src, minAgeMs = 0L)
+    Compact.vacuum(spark, src, minAgeMs = 0L)
     assert(urls(s"$tmp/c2") == v1Urls, "clone must survive source GC")
     // and the source still reads its full content
     assert(urls(src).size == 140)
@@ -66,13 +66,13 @@ class CloneSpec extends AnyFunSuite {
     "files were moved aside") {
     val src = s"$tmp/src3"
     PageTable.write(Corpus.pages(spark, 50L), src, numBuckets = 2) // v1
-    Clone.run(src, s"$tmp/c3")
-    intercept[IllegalArgumentException](Clone.run(src, s"$tmp/c3"))
+    Clone.run(spark, src, s"$tmp/c3")
+    intercept[IllegalArgumentException](Clone.run(spark, src, s"$tmp/c3"))
     // rollback moves post-v1 files aside; a clone of the SUPERSEDED v2 must
     // fail loudly, never link a partial corpus
     PageTable.register(spark, "gclone3", tmp)
     Corpus.pages(spark, 20L, seed = 3L).toDF().writeTo("gclone3.src3").append() // v2
     Snapshots.rollback(src, 1) // v3 = v1 state; v2-only files moved aside
-    intercept[IllegalArgumentException](Clone.run(src, s"$tmp/c3b", version = Some(2)))
+    intercept[IllegalArgumentException](Clone.run(spark, src, s"$tmp/c3b", version = Some(2)))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Compact, Corpus, PageTable, Rebucket, RowLevelCommit, Snapshots}
+import graft.sources.{Compact, Corpus, PageTable, Rebucket, Recovery, RowLevelCommit, Snapshots}
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.File
 import java.nio.file.Files
@@ -10,8 +10,9 @@ import java.nio.file.Files
   * forward before it reads the live file set; otherwise vacuum collects the
   * moved files as orphans and compaction folds replaced rows into the new
   * layout. A replay that records a snapshot must first put back a leaf a
-  * crashed compaction left aside. The first two cases are plain files and
-  * a snapshot log.
+  * crashed compaction left aside, and a replay of a commit that already
+  * recorded must not record it again. The vacuum cases and the MERGE
+  * replay case are plain files and a snapshot log.
   */
 class CrashRecoverySpec extends AnyFunSuite {
 
@@ -43,11 +44,37 @@ class CrashRecoverySpec extends AnyFunSuite {
         s"rm\t$leaf/a.parquet").getBytes("UTF-8"))
     put(new File(s"$dir/data/$leaf/merge-x.parquet")) // the rename that ran
 
-    Compact.vacuum(dir, 0L)
+    Compact.vacuum(SparkFixture.spark, dir, 0L)
     RowLevelCommit.replay(dir)
     assert(new File(s"$dir/data/$leaf/merge-x.parquet").isFile, "merged file was vacuumed")
     assert(latestFiles(dir).sorted == Seq(s"$leaf/b.parquet", s"$leaf/merge-x.parquet"))
     assert(!new File(dir, "_merge_pending").exists())
+  }
+
+  test("a MERGE replayed after its snapshot was recorded commits no second version") {
+    val dir = table("merge-once", s"$leaf/a.parquet", s"$leaf/b.parquet") // v1
+    val ops = Seq(Seq("mv", s"$leaf/.merge-x.parquet", s"$leaf/merge-x.parquet"),
+      Seq("rm", s"$leaf/a.parquet"))
+    put(new File(s"$dir/data/$leaf/merge-x.parquet")) // every step ran
+    new File(s"$dir/data/$leaf/a.parquet").delete()
+    val merged = Seq(s"$leaf/b.parquet", s"$leaf/merge-x.parquet")
+
+    // crashed before its record: the replay records v2
+    Recovery.commit(dir, Recovery.MERGE, Seq("base" -> "1"), ops)
+    Recovery.recover(dir)
+    assert(Snapshots.latestVersion(dir).contains(2) && latestFiles(dir).sorted == merged)
+    // crashed after its record, before clearing the intent: nothing to record
+    Recovery.commit(dir, Recovery.MERGE, Seq("base" -> "1"), ops)
+    Recovery.recover(dir)
+    assert(Snapshots.latestVersion(dir).contains(2), "the replay recorded the MERGE twice")
+    assert(!new File(dir, "_merge_pending").exists())
+    // an intent without the header (older writer) records, as it always did
+    Recovery.commit(dir, Recovery.MERGE, Nil, ops)
+    Recovery.recover(dir)
+    assert(Snapshots.latestVersion(dir).contains(3) && latestFiles(dir).sorted == merged)
+    // a MERGE that changed no file still commits its own version
+    RowLevelCommit.run(dir, Nil, Nil)
+    assert(Snapshots.latestVersion(dir).contains(4))
   }
 
   test("vacuum after a rebucket crashed mid-adoption keeps the adopted file; replay adopts both") {
@@ -65,7 +92,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     put(new File(s"$dir/data/${adopt(0)}"))
     put(new File(s"$dir/_rebucket_stage/${adopt(1)}"))
 
-    Compact.vacuum(dir, 0L)
+    Compact.vacuum(SparkFixture.spark, dir, 0L)
     Rebucket.replay(dir)
     adopt.foreach(r => assert(new File(s"$dir/data/$r").isFile, s"$r not adopted"))
     assert(latestFiles(dir).sorted == adopt)
@@ -139,7 +166,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(parked.renameTo(new File(parked.getParentFile, s".graft-old-${parked.getName}")))
 
     drop.writeTo("pcrash3.pages").append()
-    Compact.vacuum(dir, 0L)
+    Compact.vacuum(spark, dir, 0L)
     val after = spark.read.table("pcrash3.pages").select("url").as[String].collect().sorted.toSeq
     assert(after == urls)
     spark.sql("DROP TABLE pcrash3.pages")

@@ -4,7 +4,8 @@ import graft.operators.{ResumableExtract, ScalarExtract}
 import graft.sources.{Corpus, Manifest, PageTable}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** PageTable façade + manifest lineage + kill-and-resume (SURVEY.md M4). */
 class PageTableSpec extends AnyFunSuite {
@@ -575,7 +576,7 @@ class PageTableSpec extends AnyFunSuite {
       if (f.isDirectory) f.listFiles.foreach(rmAll); f.delete()
     }
     rmAll(new java.io.File(s"$wh/pages/snapshots"))
-    intercept[IllegalStateException](graft.sources.Compact.vacuum(s"$wh/pages"))
+    intercept[IllegalStateException](graft.sources.Compact.vacuum(spark, s"$wh/pages"))
     Corpus.pages(spark, 30L, seed = 3L).writeTo("pcat8.pages").append() // v1
     Corpus.pages(spark, 30L, seed = 4L).writeTo("pcat8.pages").append() // v2
     val n = spark.read.table("pcat8.pages").count()
@@ -592,14 +593,14 @@ class PageTableSpec extends AnyFunSuite {
     assert(graft.sources.Snapshots.latestVersion(s"$wh/pages").contains(2))
     // the DEFAULT age floor protects young unreferenced files — a run killed
     // between its data swap and its snapshot record must not lose data
-    assert(graft.sources.Compact.vacuum(s"$wh/pages") == ((0, 0L)))
+    assert(graft.sources.Compact.vacuum(spark, s"$wh/pages") == ((0, 0L)))
     assert(orphan.exists())
     // floor 0 (operator knows no maintenance is in flight): debris removed
-    val (removed, bytes) = graft.sources.Compact.vacuum(s"$wh/pages", 0L)
+    val (removed, bytes) = graft.sources.Compact.vacuum(spark, s"$wh/pages", 0L)
     assert(removed == 1 && bytes == 3L && !orphan.exists())
     assert(spark.read.table("pcat8.pages").count() == n) // live data untouched
     // rerun is a no-op
-    assert(graft.sources.Compact.vacuum(s"$wh/pages", 0L) == ((0, 0L)))
+    assert(graft.sources.Compact.vacuum(spark, s"$wh/pages", 0L) == ((0, 0L)))
     val hist = graft.sources.Compact.history(s"$wh/pages")
     assert(hist.map(_._1) == Seq(1, 2))
     assert(hist.last._3 > hist.head._3) // append grew the file count
@@ -866,5 +867,124 @@ class PageTableSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** Rows of `dir` whose file sits under a leaf other than
+    * `bucket=<pmod(xxhash64(url), n)>/day=<date_format(warc_ts)>`, as
+    * (file, url) — bucket and day are read from the file's own directory.
+    */
+  private def misplaced(dir: String, n: Int): Seq[(String, String)] =
+    spark.read.schema(graft.sources.PagesTable.FULL).parquet(s"$dir/data")
+      .filter(col("bucket") =!= pmod(xxhash64(col("url")), lit(n.toLong)) ||
+        col("day") =!= date_format(col("warc_ts"), "yyyy-MM-dd"))
+      .select(input_file_name(), col("url")).as[(String, String)].collect().toSeq
+
+  test("a catalog append re-derives bucket and day: a 32-bucket table's rows land in an 8-bucket layout") {
+    val wh = s"$tmp/whplace"
+    PageTable.write(Corpus.pages(spark, N), s"$wh/wide", numBuckets = 32)
+    PageTable.write(Corpus.pages(spark, 20L, seed = 5L), s"$wh/narrow", numBuckets = 8)
+    PageTable.register(spark, "pcatpl", wh)
+    val wide = spark.read.table("pcatpl.wide")
+    assert(wide.columns.length == 7 && wide.filter(col("bucket") > 7).count() > 0)
+
+    wide.writeTo("pcatpl.narrow").append()
+    val back = spark.read.table("pcatpl.narrow")
+    assert(back.count() == N + 20)
+    assert(back.filter(col("bucket") =!= pmod(xxhash64(col("url")), lit(8L))).count() == 0)
+    assert(misplaced(s"$wh/narrow", 8).isEmpty)
+    assert(graft.sources.Doctor.audit(s"$wh/narrow", Some(spark), deep = true)
+      .map(_.code) == Seq("clean"))
+    spark.sql("DROP TABLE pcatpl.narrow")
+    spark.sql("DROP TABLE pcatpl.wide")
+  }
+
+  test("every writer of new rows places them by the layout function: write, branch publish, " +
+    "catalog append and MERGE INSERT") {
+    val wh = s"$tmp/whplace2"
+    val dir = s"$wh/pages"
+    def fresh(prefix: String, n: Long, seed: Long) =
+      Corpus.pages(spark, n, seed = seed).toDF()
+        .withColumn("url", concat(lit(s"https://$prefix.example/"), col("url")))
+    PageTable.write(Corpus.pages(spark, 60L), dir, numBuckets = 8)
+    graft.sources.Branches.create(dir, "drop")
+    graft.sources.Branches.append(spark, dir, "drop", fresh("branch", 30L, 2L))
+    graft.sources.Branches.publish(dir, "drop")
+    PageTable.register(spark, "pcatpl2", wh)
+    // a 7-column append whose bucket/day belong to some other layout
+    fresh("append", 30L, 3L)
+      .withColumn("bucket", lit(7)).withColumn("day", lit("1999-01-01"))
+      .writeTo("pcatpl2.pages").append()
+    // MERGE INSERT rows pass through CowDataWriter's per-row placement;
+    // timestamps either side of a day boundary pin its day to date_format's
+    fresh("merge", 30L, 4L).union(spark.sql(
+      """SELECT 'https://merge-edge.example/a' AS url, TIMESTAMP'2025-07-01 23:59:59' AS warc_ts,
+        |       CAST(NULL AS BINARY) AS html, 'edge a' AS text, 'en' AS lang
+        |UNION ALL
+        |SELECT 'https://merge-edge.example/b', TIMESTAMP'2025-07-02 00:00:00',
+        |       CAST(NULL AS BINARY), 'edge b', 'en'""".stripMargin))
+      .localCheckpoint().createOrReplaceTempView("place_src")
+    spark.sql(
+      """MERGE INTO pcatpl2.pages t USING place_src s ON t.url = s.url
+        |WHEN NOT MATCHED THEN INSERT (url, warc_ts, html, text, lang)
+        |  VALUES (s.url, s.warc_ts, s.html, s.text, s.lang)""".stripMargin)
+
+    assert(spark.read.table("pcatpl2.pages").count() == 60L + 30 + 30 + 32)
+    val bad = misplaced(dir, 8)
+    assert(bad.size == 0, bad.take(5).mkString("misplaced rows: ", ", ", ""))
+    spark.sql("DROP TABLE pcatpl2.pages")
+  }
+
+  test("compaction and zorder share one leaf rule: a leaf of zero-row files is dropped, " +
+    "a leaf the rewrite returns no rows for fails with the table untouched") {
+    val dir = s"$tmp/leafrule"
+    PageTable.write(Corpus.pages(spark, 60L), dir, numBuckets = 2)
+    val data = new java.io.File(dir, "data")
+    def count = PageTable.read(spark, dir).count()
+    def plant(leaf: String, files: Seq[java.io.File]): java.io.File = {
+      val d = new java.io.File(data, leaf)
+      d.mkdirs()
+      files.zipWithIndex.foreach { case (f, i) =>
+        Files.copy(f.toPath, new java.io.File(d, s"part-planted-$i.parquet").toPath)
+      }
+      graft.sources.Snapshots.record(dir)
+      d
+    }
+    // `bucket=01` reads back as bucket 1, so the rewrite writes its rows
+    // under `bucket=1`: the planted leaf itself gets no output
+    val real = graft.sources.Snapshots.walkData(data).filter(_.getParentFile.getParentFile.getName == "bucket=1")
+    val day = real.head.getParentFile.getName
+    val odd = plant(s"bucket=01/$day", real.take(1) ++ real.take(1))
+    val n = count
+    val e = intercept[IllegalStateException](graft.sources.Compact.run(spark, dir))
+    assert(e.getMessage.contains(s"lost leaf bucket=01/$day"), e.getMessage)
+    assert(odd.listFiles.length == 2 && count == n, "a failed rewrite changed the table")
+    graft.sources.Snapshots.deleteRecursively(odd.getParentFile)
+    graft.sources.Snapshots.record(dir)
+
+    val emptyDir = s"$tmp/leafrule-empty"
+    Corpus.pages(spark, 1L).limit(0).coalesce(1).write.parquet(emptyDir)
+    val empty = graft.sources.Snapshots.walkData(new java.io.File(emptyDir)).take(1)
+    val before = count
+    val debris = plant("bucket=0/day=1999-01-01", empty ++ empty)
+    graft.sources.Compact.run(spark, dir)
+    assert(!debris.exists() && count == before)
+    val debris2 = plant("bucket=1/day=1999-01-01", empty)
+    graft.sources.Compact.zorder(spark, dir)
+    assert(!debris2.exists() && count == before)
+  }
+
+  test("new rows get their day in one place: date_format(col(\"warc_ts\") only in PageTable.place") {
+    val dayOf = """date_format\(\s*col\(\s*"warc_ts"\s*\)""".r
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"only ${files.size} sources under src/main")
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if dayOf.findFirstIn(line).isDefined
+    } yield (f.getFileName.toString, s"$f:${i + 1}: ${line.trim}")
+    val (home, elsewhere) = hits.partition(_._1 == "PageTable.scala")
+    assert(elsewhere.isEmpty, elsewhere.map(_._2).mkString("\n", "\n", ""))
+    assert(home.size == 1, home.map(_._2).mkString("\n", "\n", ""))
   }
 }
