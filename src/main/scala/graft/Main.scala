@@ -50,7 +50,7 @@ object Main {
     "branch <tableDir> publish <name>",
     "branch <tableDir> discard <name>",
     "branch <tableDir> list",
-    "explain <query> [sfDir]"
+    "explain <query> <sfDir>"
   )
 
   private[graft] val Usage: String = Commands.mkString("usage: graft.Main\n  ", "\n  ", "")
@@ -256,7 +256,7 @@ object Main {
           // doctor <tableDir> [--deep] — integrity audit: layout meta,
           // manifest holes (latest + every tag), crashed-commit intents,
           // orphan files, bloom staleness; --deep adds the one-scan
-          // layout-function placement check. Exit 1 on any ERROR finding.
+          // bucket/day placement check. Exit 1 on any ERROR finding.
           val deep = args.length > 2 && args(2) == "--deep"
           val findings = graft.sources.Doctor.audit(
             args(1), Some(spark), deep = deep)
@@ -305,12 +305,10 @@ object Main {
           byDay.foreach(r => println(s"  ${r.getString(0)}  ${r.getLong(1)}"))
           return
         case "explain" =>
-          // formatted physical plan of a SparkEntry query (plan-audit tool;
-          // PLANS.md sections are captured with this)
-          val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
+          // formatted physical plan of a SparkEntry query (plan-audit tool)
           val q = SparkEntry.queries.getOrElse(args(1),
             sys.error(s"unknown query '${args(1)}'"))
-          println(q(spark, sfDir).queryExecution.explainString(
+          println(q(spark, args(2)).queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
           return
         case "run" =>

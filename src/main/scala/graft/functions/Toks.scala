@@ -47,19 +47,6 @@ object Toks {
   def dotQ(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
-  /** 16-bit sign-LSH bucket of an embedding: bit k-1 set iff element k >= 0.
-    * The scale path for similarity search — candidates only meet within a
-    * bucket, so the pairwise join never goes quadratic in the corpus.
-    */
-  def signBucket16(emb: Column): Column =
-    aggregate(
-      sequence(lit(1), lit(16)),
-      lit(0L),
-      (acc, k) =>
-        acc + when(element_at(emb, k) >= 0, pow(lit(2.0), k - 1).cast("long"))
-          .otherwise(lit(0L))
-    )
-
   // ---- SQL mirror snippets (DuckDB) ----
 
   val SQL_TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"

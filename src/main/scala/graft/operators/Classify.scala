@@ -25,7 +25,7 @@ import scala.collection.mutable.ArrayBuffer
   *   best         := argmax_p score(p), ties -> smaller p    (undef if no dense)
   *   boost(b)     := !dense && parentSeq == best && ld < 33 && textLen >= 10
   *   base(b)      := dense || boost
-  *   kept(b)      := base || (ld < 33 && textLen < 120
+  *   kept(b)      := base || (ld < 33
   *                            && base(prev candidate) && base(next candidate))
   *
   * Line formation:
@@ -45,7 +45,6 @@ object Classify {
   val LINK_DENSITY_MAX = 33
   val HEADING_MIN_LEN = 8
   val BOOST_MIN_LEN = 10
-  val SMOOTH_MAX_LEN = 120
   val PDF_LINE_GAP = 3
 
   def linkDensityPct(textLen: Int, linkChars: Int): Int =
@@ -86,8 +85,7 @@ object Classify {
       base(i) || {
         val b = cand(i)
         i > 0 && i < cand.length - 1 && base(i - 1) && base(i + 1) &&
-        linkDensityPct(b.textLen, b.linkChars) < LINK_DENSITY_MAX &&
-        b.textLen < SMOOTH_MAX_LEN
+        linkDensityPct(b.textLen, b.linkChars) < LINK_DENSITY_MAX
       }
     }
     cand.indices.collect { case i if kept(i) => cand(i) }.toVector

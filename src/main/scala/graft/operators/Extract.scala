@@ -170,8 +170,7 @@ object Extract {
         isPdf || col("base") || (
           coalesce(lag(col("base"), 1).over(wSeq), lit(false)) &&
             coalesce(lead(col("base"), 1).over(wSeq), lit(false)) &&
-            col("ld") < Classify.LINK_DENSITY_MAX &&
-            col("textLen") < Classify.SMOOTH_MAX_LEN
+            col("ld") < Classify.LINK_DENSITY_MAX
         )
       )
   }

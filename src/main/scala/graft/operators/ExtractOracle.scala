@@ -52,7 +52,7 @@ object ExtractOracle {
        |         (kind = 'pdf' OR base OR (
        |            coalesce(lag(base)  OVER (PARTITION BY url ORDER BY seq), false)
        |            AND coalesce(lead(base) OVER (PARTITION BY url ORDER BY seq), false)
-       |            AND ld < 33 AND textLen < 120)) AS kept
+       |            AND ld < 33)) AS kept
        |  FROM d4)""".stripMargin
 
   private val SQL_LINES_CTES =

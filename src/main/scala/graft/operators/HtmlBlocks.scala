@@ -490,15 +490,4 @@ object HtmlBlocks {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
   private def isNameChar(c: Char): Boolean =
     isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
-
-  private[operators] def indexOfIgnoreCase(s: String, sub: String, from: Int): Int = {
-    val n = s.length
-    val m = sub.length
-    var i = math.max(from, 0)
-    while (i + m <= n) {
-      if (s.regionMatches(true, i, sub, 0, m)) return i
-      i += 1
-    }
-    -1
-  }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Entities
+import HtmlLex.{findClose, isNameStart, nameEnd, parseAttrs}
 import scala.collection.mutable.ArrayBuffer
 import java.util.Locale
 
@@ -9,11 +10,14 @@ import java.util.Locale
   * A reduced single-pass scanner over the DECODED page markup, honoring the
   * same lexical rules as the block tokenizer ([[HtmlBlocks.blocks]]):
   * comments / CDATA / doctype / PI skipped, rawtext elements (script, style,
-  * …) skipped wholesale, entities decoded in anchor text, attribute values
-  * quoted or bare. It deliberately does NOT segment blocks or track
-  * boilerplate — nav/footer/ad links are exactly the edges a crawler wants.
+  * …) skipped wholesale, entities decoded in anchor text. Tag names and
+  * attributes are read by the shared lexer ([[HtmlLex.parseAttrs]]: quoted
+  * or bare values, names lowercased). It deliberately does NOT segment
+  * blocks or track boilerplate — nav/footer/ad links are exactly the edges
+  * a crawler wants.
   *
-  * Semantics: one Link per `<a>` start tag carrying a non-empty `href`;
+  * Semantics: one Link per `<a>` start tag carrying a non-empty `href` (the
+  * last `href` when the tag repeats it);
   * anchor text = entity-decoded, whitespace-collapsed, trimmed text up to
   * the matching `</a>` (a new `<a>` implies closing the previous one, per
   * WHATWG; EOF flushes). `href` is the raw attribute value. `seq` numbers
@@ -79,79 +83,25 @@ object Links {
           val e = s.indexOf('>', i + 2)
           i = if (e < 0) n else e + 1
         } else if (c1 == '/') {
-          var j = i + 2
-          val start = j
-          while (j < n && isNameChar(s.charAt(j))) j += 1
-          if (j == start) { appendChar(c); i += 1 }
+          var j = nameEnd(s, i + 2)
+          if (j == i + 2) { appendChar(c); i += 1 }
           else {
-            val tag = s.substring(start, j).toLowerCase(Locale.ROOT)
+            val tag = s.substring(i + 2, j).toLowerCase(Locale.ROOT)
             while (j < n && s.charAt(j) != '>') j += 1
             i = if (j < n) j + 1 else n
             if (tag == "a") flush()
           }
         } else if (isNameStart(c1)) {
-          var j = i + 1
-          val start = j
-          while (j < n && isNameChar(s.charAt(j))) j += 1
-          val tag = s.substring(start, j).toLowerCase(Locale.ROOT)
-          var hrefAttr = ""
-          var done = false
-          while (!done && j < n) {
-            while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-            if (j >= n) done = true
-            else {
-              val ch = s.charAt(j)
-              if (ch == '>') { j += 1; done = true }
-              else if (ch == '/') j += 1
-              else {
-                val as = j
-                while (
-                  j < n && {
-                    val a = s.charAt(j)
-                    a != '=' && a != '>' && a != '/' && !Character.isWhitespace(a)
-                  }
-                ) j += 1
-                val aname = s.substring(as, j).toLowerCase(Locale.ROOT)
-                while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-                var avalue = ""
-                if (j < n && s.charAt(j) == '=') {
-                  j += 1
-                  while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-                  if (j < n && (s.charAt(j) == '"' || s.charAt(j) == '\'')) {
-                    val q = s.charAt(j)
-                    val vs = j + 1
-                    var k = vs
-                    while (k < n && s.charAt(k) != q) k += 1
-                    avalue = s.substring(vs, math.min(k, n))
-                    j = if (k < n) k + 1 else n
-                  } else {
-                    val vs = j
-                    while (
-                      j < n && {
-                        val a = s.charAt(j)
-                        a != '>' && !Character.isWhitespace(a)
-                      }
-                    ) j += 1
-                    avalue = s.substring(vs, j)
-                  }
-                }
-                if (aname == "href") hrefAttr = avalue
-              }
-            }
-          }
+          val ne = nameEnd(s, i + 1)
+          val tag = s.substring(i + 1, ne).toLowerCase(Locale.ROOT)
+          val (attrs, j) = parseAttrs(s, ne)
           i = j
           if (tag == "a") {
             flush() // implied close of a previous open anchor
-            if (hrefAttr.nonEmpty) { inAnchor = true; href = hrefAttr }
-          } else if (HtmlBlocks.RAWTEXT.contains(tag)) {
-            val closeAt = HtmlBlocks.indexOfIgnoreCase(s, "</" + tag, i)
-            if (closeAt < 0) i = n
-            else {
-              var k = closeAt + 2 + tag.length
-              while (k < n && s.charAt(k) != '>') k += 1
-              i = if (k < n) k + 1 else n
-            }
-          }
+            // the last href wins
+            val h = attrs.foldLeft("") { case (h, (k, v)) => if (k == "href") v else h }
+            if (h.nonEmpty) { inAnchor = true; href = h }
+          } else if (HtmlBlocks.RAWTEXT.contains(tag)) i = findClose(s, i, tag)._2
         } else {
           appendChar(c)
           i += 1
@@ -169,9 +119,4 @@ object Links {
     flush()
     out.toVector
   }
-
-  private def isNameStart(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-  private def isNameChar(c: Char): Boolean =
-    isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{Charset, Entities}
+import HtmlLex.{findClose, isNameStart, nameEnd, parseAttrs}
 import java.util.Locale
 
 /** Page-metadata extraction — the head-section fields every crawl index
@@ -11,8 +12,11 @@ import java.util.Locale
   * legacy `http-equiv content-type; charset=`).
   *
   * First occurrence wins for each field (mirrors the regexp oracle's
-  * first-match semantics). Attribute parsing reuses the tokenizer's rules
-  * (quoted or bare values); whitespace in the title collapses.
+  * first-match semantics); within one tag the first `lang` wins, and on a
+  * `<meta>` the last duplicate of an attribute wins. Tag names and
+  * attributes are read by the shared lexer ([[HtmlLex.parseAttrs]]: quoted
+  * or bare values, names lowercased); comments, doctype, end tags and
+  * processing instructions are skipped; whitespace in the title collapses.
   *
   * Scale shape: per-row scan bounded by the head (title/meta sit in the
   * first KB of real pages); zero exchanges.
@@ -45,64 +49,17 @@ object Meta {
         } else if (c1 == '/' || c1 == '?') {
           val e = s.indexOf('>', i + 2); i = if (e < 0) n else e + 1
         } else if (isNameStart(c1)) {
-          var j = i + 1
-          val start = j
-          while (j < n && isNameChar(s.charAt(j))) j += 1
-          val tag = s.substring(start, j).toLowerCase(Locale.ROOT)
-          // parse attributes into a small list
-          var attrs = List.empty[(String, String)]
-          var done = false
-          while (!done && j < n) {
-            while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-            if (j >= n) done = true
-            else {
-              val ch = s.charAt(j)
-              if (ch == '>') { j += 1; done = true }
-              else if (ch == '/') j += 1
-              else {
-                val as = j
-                while (
-                  j < n && {
-                    val a = s.charAt(j)
-                    a != '=' && a != '>' && a != '/' && !Character.isWhitespace(a)
-                  }
-                ) j += 1
-                val aname = s.substring(as, j).toLowerCase(Locale.ROOT)
-                while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-                var avalue = ""
-                if (j < n && s.charAt(j) == '=') {
-                  j += 1
-                  while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-                  if (j < n && (s.charAt(j) == '"' || s.charAt(j) == '\'')) {
-                    val q = s.charAt(j)
-                    val vs = j + 1
-                    var k = vs
-                    while (k < n && s.charAt(k) != q) k += 1
-                    avalue = s.substring(vs, math.min(k, n))
-                    j = if (k < n) k + 1 else n
-                  } else {
-                    val vs = j
-                    while (
-                      j < n && {
-                        val a = s.charAt(j)
-                        a != '>' && !Character.isWhitespace(a)
-                      }
-                    ) j += 1
-                    avalue = s.substring(vs, j)
-                  }
-                }
-                attrs = (aname, avalue) :: attrs
-              }
-            }
-          }
+          val ne = nameEnd(s, i + 1)
+          val tag = s.substring(i + 1, ne).toLowerCase(Locale.ROOT)
+          val (attrs, j) = parseAttrs(s, ne)
           i = j
           tag match {
             case "html" if !langDone =>
-              attrs.reverse.find(_._1 == "lang").foreach { case (_, v) =>
+              attrs.find(_._1 == "lang").foreach { case (_, v) =>
                 lang = v; langDone = true
               }
             case "meta" if !csDone =>
-              val m = attrs.reverse.toMap
+              val m = attrs.toMap
               m.get("charset") match {
                 case Some(v) if v.nonEmpty => cs = v.toLowerCase(Locale.ROOT); csDone = true
                 case _ =>
@@ -126,14 +83,11 @@ object Meta {
             case "title" if !titleDone =>
               // RCDATA: capture raw text to the matching close tag, decode
               // entities, collapse whitespace; no close tag -> no title
-              val closeAt = HtmlBlocks.indexOfIgnoreCase(s, "</title", i)
-              if (closeAt >= 0) {
-                val raw = s.substring(i, closeAt)
-                title = Charset.normalizeWs(Entities.decodeAll(raw))
+              val (closeAt, past) = findClose(s, i, "title")
+              if (closeAt < n) {
+                title = Charset.normalizeWs(Entities.decodeAll(s.substring(i, closeAt)))
                 titleDone = true
-                var k = closeAt + 7
-                while (k < n && s.charAt(k) != '>') k += 1
-                i = if (k < n) k + 1 else n
+                i = past
               }
             case _ => ()
           }
@@ -142,9 +96,4 @@ object Meta {
     }
     PageMeta(title, lang, cs)
   }
-
-  private def isNameStart(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-  private def isNameChar(c: Char): Boolean =
-    isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
 }

@@ -2,26 +2,30 @@ package graft.operators
 
 import graft.functions.Entities
 import graft.sources.StructuredCorpus
+import HtmlLex.{STOP, Tag, text, walk}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
 import java.util.Locale
 
-/** Structured-data extraction — the two page-embedded data surfaces a
-  * web-extraction pipeline harvests beyond running text:
+/** Structured-data extraction — the page-embedded data surfaces a
+  * web-extraction pipeline harvests beyond running text: schema.org JSON-LD
+  * blocks, data tables, head declarations (canonical, OpenGraph, hreflang,
+  * robots, refresh, AMP, rel=next), images, code blocks, lists, quotes,
+  * definition lists, licenses, and the markdown serialization of the whole
+  * page.
   *
-  *   - schema.org JSON-LD blocks (`<script type="application/ld+json">`):
-  *     article metadata (headline, date, author) that news/article curation
-  *     keys on;
-  *   - data tables (`<table class=…>` grids): relational facts flattened to
-  *     (table, row, col, cell) — the table-to-rows pass a training pipeline
-  *     runs before table-aware serialization.
-  *
-  * Both scanners follow the house lexical rules (Links/Meta): single pass,
-  * comments skipped, attributes quoted or bare in any order, entity decode +
-  * whitespace collapse on cell text. Script bodies are RAWTEXT — no entity
-  * decode, verbatim up to the case-insensitive `</script>`.
+  * Every scanner here is one [[HtmlLex.walk]] over the page with one
+  * lexical rule: `<!-- -->` comments are skipped, tag names (an ASCII
+  * letter, then letters, digits, `-`, `_` or `:`) are compared lowercased,
+  * attributes are quoted or bare in any order, and the bodies of rawtext
+  * elements (script, style, textarea, title) are never scanned — a markup
+  * lookalike in a JS string never emits. Element text is markup-stripped,
+  * entity-decoded and whitespace-collapsed ([[HtmlLex.text]]); script
+  * bodies are verbatim up to the case-insensitive `</script>`. List items,
+  * dt/dd pairs, table rows and the code of a `<pre>` are each parsed by one
+  * body parser, shared by the harvest scanners and [[mdBlocks]].
   *
   * Scale shape: per-row procedural scans (flatMap) — embarrassingly
   * parallel, zero exchanges before the caller's own ordering; JSON parsing
@@ -29,118 +33,81 @@ import java.util.Locale
   */
 object Structured {
 
-  // ---- shared lexical helpers ---------------------------------------------
+  // ---- shared scan helpers ---------------------------------------------------
 
-  /** Parse attributes starting at `j0` (just past the tag name); returns
-    * (attrs, index-just-past-'>'). Mirrors Meta's rules: quoted or bare
-    * values, names lowercased, self-closing slash ignored.
+  /** The first value `pick` gives for a tag, in document order. */
+  private def first[A](html: String)(pick: PartialFunction[Tag, A]): Option[A] = {
+    var out: Option[A] = None
+    walk(html)(pick.andThen { a => out = Some(a); STOP })
+    out
+  }
+
+  /** Whether the tag's `rel` token list carries `token`. */
+  private def relHas(t: Tag, token: String): Boolean =
+    t.attr("rel").toLowerCase(Locale.ROOT).split("\\s+").contains(token)
+
+  /** A `<table>` whose class attribute carries the `data` token. */
+  private def isDataTable(t: Tag): Boolean = t.attr("class").split("\\s+").contains("data")
+
+  // ---- element-body parsers (shared by the harvests and mdBlocks) -------------
+
+  /** Texts of the `<li>` items of a list body. */
+  private def listItemTexts(body: String): Vector[String] = {
+    val out = ArrayBuffer.empty[String]
+    walk(body) { case li if li.name == "li" => out += text(li.body); li.past }
+    out.toVector
+  }
+
+  /** (term, definition) per `<dd>` of a definition-list body: each dd pairs
+    * with the most recent `<dt>` ("" before any).
     */
-  private def parseAttrs(s: String, j0: Int): (List[(String, String)], Int) = {
-    val n = s.length
-    var j = j0
-    var attrs = List.empty[(String, String)]
-    var done = false
-    while (!done && j < n) {
-      while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-      if (j >= n) done = true
-      else {
-        val ch = s.charAt(j)
-        if (ch == '>') { j += 1; done = true }
-        else if (ch == '/') j += 1
-        else {
-          val as = j
-          while (
-            j < n && {
-              val a = s.charAt(j)
-              a != '=' && a != '>' && a != '/' && !Character.isWhitespace(a)
-            }
-          ) j += 1
-          val aname = s.substring(as, j).toLowerCase(Locale.ROOT)
-          while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-          var avalue = ""
-          if (j < n && s.charAt(j) == '=') {
-            j += 1
-            while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-            if (j < n && (s.charAt(j) == '"' || s.charAt(j) == '\'')) {
-              val q = s.charAt(j)
-              val vs = j + 1
-              var k = vs
-              while (k < n && s.charAt(k) != q) k += 1
-              avalue = s.substring(vs, math.min(k, n))
-              j = math.min(k + 1, n)
-            } else {
-              val vs = j
-              while (j < n && !Character.isWhitespace(s.charAt(j)) && s.charAt(j) != '>') j += 1
-              avalue = s.substring(vs, j)
-            }
-          }
-          if (aname.nonEmpty) attrs = (aname -> avalue) :: attrs
-        }
-      }
+  private def dlPairs(body: String): Vector[(String, String)] = {
+    val out = ArrayBuffer.empty[(String, String)]
+    var term = ""
+    walk(body) {
+      case t if t.name == "dt" => term = text(t.body); t.past
+      case t if t.name == "dd" => out += ((term, text(t.body))); t.past
     }
-    (attrs.reverse, j)
+    out.toVector
   }
 
-  /** Index just past a case-insensitive close tag `</name ...>` at or after
-    * `from`; also returns the tag's start. n if absent.
+  /** Cell texts (th/td) of each `<tr>` of a table body, rows in order. */
+  private def tableRows(body: String): Vector[Vector[String]] = {
+    val rows = ArrayBuffer.empty[Vector[String]]
+    walk(body) {
+      case tr if tr.name == "tr" =>
+        val cells = ArrayBuffer.empty[String]
+        walk(tr.body) { case c if c.name == "th" || c.name == "td" => cells += text(c.body); c.past }
+        rows += cells.toVector
+        tr.past
+    }
+    rows.toVector
+  }
+
+  /** The first `<code>` child of a `<pre>` body as (lang, code): lang from
+    * the `language-*` class token ("" when untagged), code entity-decoded
+    * with whitespace preserved. None for a bare pre (preformatted text).
     */
-  private def findClose(s: String, from: Int, name: String): (Int, Int) = {
-    val n = s.length
-    var i = from
-    while (i < n) {
-      i = s.indexOf("</", i)
-      if (i < 0) return (n, n)
-      val j = i + 2
-      if (j + name.length <= n && s.regionMatches(true, j, name, 0, name.length)) {
-        var k = j + name.length
-        while (k < n && s.charAt(k) != '>') k += 1
-        return (i, math.min(k + 1, n))
-      }
-      i = j
+  private def preCode(body: String): Option[(String, String)] =
+    first(body) {
+      case c if c.name == "code" =>
+        val lang = c.attr("class").split("\\s+")
+          .collectFirst { case t if t.startsWith("language-") => t.substring(9) }
+          .getOrElse("")
+        (lang, Entities.decodeAll(c.body))
     }
-    (n, n)
-  }
-
-  private def collapseWs(s: String): String = {
-    val sb = new java.lang.StringBuilder
-    var pending = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c) || c == ' ') { if (sb.length > 0) pending = true }
-      else {
-        if (pending) { sb.append(' '); pending = false }
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
 
   // ---- JSON-LD scripts -----------------------------------------------------
 
   /** Raw bodies of `<script type="application/ld+json">` blocks in document
-    * order. Comments skipped; other script types skipped wholesale (rawtext
-    * — their content can contain markup-lookalikes).
+    * order; other script types are rawtext like any script.
     */
   def jsonLdBodies(html: String): Vector[String] = {
-    val s = html
-    val n = s.length
     val out = ArrayBuffer.empty[String]
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return out.toVector
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "script", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        val (attrs, bodyStart) = parseAttrs(s, lt + 7)
-        val (bodyEnd, past) = findClose(s, bodyStart, "script")
-        val typ = attrs.collectFirst { case ("type", v) => v.trim.toLowerCase(Locale.ROOT) }.getOrElse("")
-        if (typ == "application/ld+json") out += s.substring(bodyStart, bodyEnd)
-        i = past
-      } else i = lt + 1
+    walk(html) {
+      case t if t.name == "script" =>
+        if (t.attr("type").trim.toLowerCase(Locale.ROOT) == "application/ld+json") out += t.body
+        t.past
     }
     out.toVector
   }
@@ -148,60 +115,20 @@ object Structured {
   /** (table, row, col, cell) grid of every `<table>` whose class attribute
     * carries the `data` token. Cells are th/td in row order, entity-decoded,
     * whitespace-collapsed; nested markup inside a cell contributes its text.
-    * Data tables are assumed non-nested (the generator guarantees it; a
-    * nested `<table` inside a data cell would end the cell's table at the
-    * first close tag).
+    * A table's body runs to its first `</table>`, so a table nested inside
+    * another is read as part of the outer body, never as a table of its own.
     */
   def dataTableCells(html: String): Vector[(Int, Int, Int, String)] = {
-    val s = html
-    val n = s.length
     val out = ArrayBuffer.empty[(Int, Int, Int, String)]
     var tbl = 0
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf("<table", i)
-      if (lt < 0) return out.toVector
-      if (lt + 6 < n && !Character.isLetterOrDigit(s.charAt(lt + 6))) {
-        val (attrs, inner) = parseAttrs(s, lt + 6)
-        val classes = attrs.collectFirst { case ("class", v) => v }.getOrElse("")
-          .split("\\s+").toSet
-        val (tEnd, past) = findClose(s, inner, "table")
-        if (classes.contains("data")) {
-          val body = s.substring(inner, tEnd)
-          var r = 0
-          var j = 0
-          while (j < body.length) {
-            val tr = body.indexOf("<tr", j)
-            if (tr < 0) j = body.length
-            else {
-              val (_, rowStart) = parseAttrs(body, tr + 3)
-              val (rowEnd, rowPast) = findClose(body, rowStart, "tr")
-              val row = body.substring(rowStart, rowEnd)
-              var c = 0
-              var k = 0
-              while (k < row.length) {
-                val th = row.indexOf("<th", k)
-                val td = row.indexOf("<td", k)
-                val cell = if (th < 0) td else if (td < 0) th else math.min(th, td)
-                if (cell < 0) k = row.length
-                else {
-                  val name = if (cell == th) "th" else "td"
-                  val (_, cs) = parseAttrs(row, cell + 3)
-                  val (ce, cPast) = findClose(row, cs, name)
-                  val raw = row.substring(cs, ce).replaceAll("<[^>]*>", " ")
-                  out += ((tbl, r, c, collapseWs(Entities.decodeAll(raw))))
-                  c += 1
-                  k = cPast
-                }
-              }
-              r += 1
-              j = rowPast
-            }
-          }
+    walk(html) {
+      case t if t.name == "table" =>
+        if (isDataTable(t)) {
+          for ((row, r) <- tableRows(t.body).zipWithIndex; (cell, c) <- row.zipWithIndex)
+            out += ((tbl, r, c, cell))
           tbl += 1
         }
-        i = past
-      } else i = lt + 6
+        t.past
     }
     out.toVector
   }
@@ -296,33 +223,14 @@ object Structured {
 
   // ---- rel=canonical clustering ----------------------------------------------
 
-  /** First `<link rel="canonical" href=…>` target in the page, or "" when
-    * none is declared. General lexical scan (attrs any order/quoting, rel is
-    * a token list, comments skipped).
+  /** First head `<link rel="canonical" href=…>` target, or "" when none is
+    * declared (rel is a token list).
     */
-  def canonicalHref(html: String): String = {
-    val s = html
-    val n = s.length
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return ""
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 5 <= n && s.regionMatches(true, lt + 1, "link", 0, 4) &&
-        (lt + 5 == n || !Character.isLetterOrDigit(s.charAt(lt + 5)))) {
-        val (attrs, past) = parseAttrs(s, lt + 5)
-        val rel = attrs.collectFirst { case ("rel", v) => v }.getOrElse("")
-        val href = attrs.collectFirst { case ("href", v) => v }.getOrElse("")
-        if (rel.toLowerCase(Locale.ROOT).split("\\s+").contains("canonical") && href.nonEmpty)
-          return href
-        i = past
-      } else if (lt + 8 <= n && s.regionMatches(true, lt + 1, "/head", 0, 5)) {
-        return "" // canonical is a head element; stop at </head>
-      } else i = lt + 1
-    }
-    ""
-  }
+  def canonicalHref(html: String): String =
+    headElems(html).collectFirst {
+      case t if t.name == "link" && relHas(t, "canonical") && t.attr("href").nonEmpty =>
+        t.attr("href")
+    }.getOrElse("")
 
   /** Canonical-URL clustering — the duplicate-group signal the site itself
     * declares (tracking-param / mobile / recrawl variants all point at one
@@ -410,44 +318,19 @@ object Structured {
 
   // ---- head-element scan (shared by the og / hreflang / pubdate scanners) -----
 
-  /** Elements inside `<head>…</head>` in document order as (tag, attrs).
-    * Comments skipped; rawtext elements (title/script/style) contribute their
-    * start tag and their content is skipped wholesale; the scan STOPS at
+  /** Start tags inside `<head>…</head>` in document order; the scan STOPS at
     * `</head>` — og/twitter metas, hreflang alternates and
     * article:published_time are head surfaces per spec, so body lookalikes
     * (ad-injected meta clones) never leak in.
     */
-  private def headElems(html: String): Vector[(String, List[(String, String)])] = {
-    val s = html
-    val n = s.length
-    val out = ArrayBuffer.empty[(String, List[(String, String)])]
-    var i = 0
-    var stop = false
-    while (i < n && !stop) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) stop = true
-      else if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 1 < n && s.charAt(lt + 1) == '/') {
-        if (s.regionMatches(true, lt + 2, "head", 0, 4)) stop = true
-        else { val e = s.indexOf('>', lt + 2); i = if (e < 0) n else e + 1 }
-      } else if (lt + 1 < n && Character.isLetter(s.charAt(lt + 1))) {
-        var j = lt + 1
-        val ts = j
-        while (j < n && (Character.isLetterOrDigit(s.charAt(j)) || s.charAt(j) == '-')) j += 1
-        val tag = s.substring(ts, j).toLowerCase(Locale.ROOT)
-        val (attrs, past) = parseAttrs(s, j)
-        out += ((tag, attrs))
-        i = if (tag == "title" || tag == "script" || tag == "style")
-          findClose(s, past, tag)._2
-        else past
-      } else i = lt + 1
+  private def headElems(html: String): Vector[Tag] = {
+    val out = ArrayBuffer.empty[Tag]
+    walk(html) {
+      case t if t.name == "/head" => STOP
+      case t if !t.name.startsWith("/") => out += t; t.end
     }
     out.toVector
   }
-
-  private def attr(attrs: List[(String, String)], name: String): String =
-    attrs.collectFirst { case (`name`, v) => v }.getOrElse("")
 
   // ---- OpenGraph / Twitter card metas ------------------------------------------
 
@@ -460,11 +343,11 @@ object Structured {
     */
   def ogCard(html: String): (String, String, String, String, String) = {
     var ogTitle = ""; var ogType = ""; var ogImage = ""; var ogUrl = ""; var tw = ""
-    headElems(html).foreach { case (tag, attrs) =>
-      if (tag == "meta") {
-        val prop = attr(attrs, "property").toLowerCase(Locale.ROOT)
-        val nm = attr(attrs, "name").toLowerCase(Locale.ROOT)
-        val c = attr(attrs, "content")
+    headElems(html).foreach { t =>
+      if (t.name == "meta") {
+        val prop = t.attr("property").toLowerCase(Locale.ROOT)
+        val nm = t.attr("name").toLowerCase(Locale.ROOT)
+        val c = t.attr("content")
         prop match {
           case "og:title" => if (ogTitle.isEmpty) ogTitle = c
           case "og:type" => if (ogType.isEmpty) ogType = c
@@ -516,10 +399,8 @@ object Structured {
     */
   def hreflangAlts(html: String): Vector[(String, String)] =
     headElems(html).collect {
-      case ("link", attrs)
-        if attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("alternate") &&
-          attr(attrs, "hreflang").nonEmpty =>
-        (attr(attrs, "hreflang"), attr(attrs, "href"))
+      case t if t.name == "link" && relHas(t, "alternate") && t.attr("hreflang").nonEmpty =>
+        (t.attr("hreflang"), t.attr("href"))
     }
 
   def exHreflang(spark: SparkSession, sfDir: String): DataFrame = {
@@ -553,33 +434,16 @@ object Structured {
   /** First `article:published_time` meta content in head ("" when absent). */
   def publishedTimeMeta(html: String): String =
     headElems(html).collectFirst {
-      case ("meta", attrs)
-        if attr(attrs, "property").equalsIgnoreCase("article:published_time") =>
-        attr(attrs, "content")
+      case t if t.name == "meta" && t.attr("property").equalsIgnoreCase("article:published_time") =>
+        t.attr("content")
     }.getOrElse("")
 
   /** First `<time datetime=…>` anywhere in the page ("" when absent) —
-    * the visible-timestamp fallback. General scan, comments skipped.
+    * the visible-timestamp fallback.
     */
-  def timeDatetime(html: String): String = {
-    val s = html
-    val n = s.length
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return ""
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 5 <= n && s.regionMatches(true, lt + 1, "time", 0, 4) &&
-        (lt + 5 == n || !Character.isLetterOrDigit(s.charAt(lt + 5)))) {
-        val (attrs, past) = parseAttrs(s, lt + 5)
-        val dt = attr(attrs, "datetime")
-        if (dt.nonEmpty) return dt
-        i = past
-      } else i = lt + 1
-    }
-    ""
-  }
+  def timeDatetime(html: String): String =
+    first(html) { case t if t.name == "time" && t.attr("datetime").nonEmpty => t.attr("datetime") }
+      .getOrElse("")
 
   /** Publication-date inference with the precedence a news-curation pass
     * uses (trafilatura-style): `article:published_time` head meta (authored
@@ -761,62 +625,28 @@ object Structured {
     * nullable dims for the resolution gate a curation pass applies.
     */
   def imageHarvest(html: String): Vector[(String, String, String, Option[Long], Option[Long])] = {
-    val s = html
-    val n = s.length
     val out = ArrayBuffer.empty[(String, String, String, Option[Long], Option[Long])]
 
-    def dim(attrs: List[(String, String)], name: String): Option[Long] = {
-      val v = attr(attrs, name)
+    def dim(t: Tag, name: String): Option[Long] = {
+      val v = t.attr(name)
       if (v.nonEmpty && v.forall(_.isDigit)) Some(v.toLong) else None
     }
-    def imgOf(attrs: List[(String, String)], figcap: String): Unit =
-      out += ((attr(attrs, "src"), Entities.decodeAll(attr(attrs, "alt")), figcap,
-        dim(attrs, "width"), dim(attrs, "height")))
+    def imgOf(t: Tag, figcap: String): Unit =
+      out += ((t.attr("src"), Entities.decodeAll(t.attr("alt")), figcap,
+        dim(t, "width"), dim(t, "height")))
 
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return out.toVector
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "script", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        i = findClose(s, lt + 7, "script")._2
-      } else if (lt + 6 <= n && s.regionMatches(true, lt + 1, "style", 0, 5) &&
-        (lt + 6 == n || !Character.isLetterOrDigit(s.charAt(lt + 6)))) {
-        i = findClose(s, lt + 6, "style")._2
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "figure", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        val (_, inner) = parseAttrs(s, lt + 7)
-        val (fEnd, past) = findClose(s, inner, "figure")
-        val body = s.substring(inner, fEnd)
-        // caption first (applies to every img in this figure)
-        var figcap = ""
-        val fc = body.toLowerCase(Locale.ROOT).indexOf("<figcaption")
-        if (fc >= 0) {
-          val (_, capStart) = parseAttrs(body, fc + 11)
-          val (capEnd, _) = findClose(body, capStart, "figcaption")
-          val raw = body.substring(capStart, capEnd).replaceAll("<[^>]*>", " ")
-          figcap = collapseWs(Entities.decodeAll(raw))
+    walk(html) {
+      case t if t.name == "figure" =>
+        // the first caption applies to every img in the figure, before or after it
+        var figcap: Option[String] = None
+        val imgs = ArrayBuffer.empty[Tag]
+        walk(t.body) {
+          case c if c.name == "figcaption" && figcap.isEmpty => figcap = Some(text(c.body)); c.end
+          case im if im.name == "img" => imgs += im; im.end
         }
-        var j = 0
-        while (j < body.length) {
-          val im = body.toLowerCase(Locale.ROOT).indexOf("<img", j)
-          if (im < 0 || im + 4 < body.length && Character.isLetterOrDigit(body.charAt(im + 4)))
-            j = if (im < 0) body.length else im + 4
-          else {
-            val (attrs, p) = parseAttrs(body, im + 4)
-            imgOf(attrs, figcap)
-            j = p
-          }
-        }
-        i = past
-      } else if (lt + 4 <= n && s.regionMatches(true, lt + 1, "img", 0, 3) &&
-        (lt + 4 == n || !Character.isLetterOrDigit(s.charAt(lt + 4)))) {
-        val (attrs, past) = parseAttrs(s, lt + 4)
-        imgOf(attrs, "")
-        i = past
-      } else i = lt + 1
+        imgs.foreach(imgOf(_, figcap.getOrElse("")))
+        t.past
+      case t if t.name == "img" => imgOf(t, ""); t.end
     }
     out.toVector
   }
@@ -866,8 +696,8 @@ object Structured {
     */
   def robotsMeta(html: String): (String, Set[String]) =
     headElems(html).collectFirst {
-      case ("meta", attrs) if attr(attrs, "name").equalsIgnoreCase("robots") =>
-        val c = attr(attrs, "content")
+      case t if t.name == "meta" && t.attr("name").equalsIgnoreCase("robots") =>
+        val c = t.attr("content")
         (c, c.split(',').map(_.trim.toLowerCase(Locale.ROOT)).filter(_.nonEmpty).toSet)
     }.getOrElse(("", Set.empty))
 
@@ -909,8 +739,8 @@ object Structured {
     */
   def metaRefresh(html: String): Option[(Long, String)] =
     headElems(html).collectFirst {
-      case ("meta", attrs) if attr(attrs, "http-equiv").equalsIgnoreCase("refresh") =>
-        attr(attrs, "content")
+      case t if t.name == "meta" && t.attr("http-equiv").equalsIgnoreCase("refresh") =>
+        t.attr("content")
     }.flatMap { c =>
       val semi = c.indexOf(';')
       if (semi < 0) None
@@ -955,10 +785,7 @@ object Structured {
     */
   def ampHref(html: String): String =
     headElems(html).collectFirst {
-      case ("link", attrs)
-        if attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("amphtml") &&
-          attr(attrs, "href").nonEmpty =>
-        attr(attrs, "href")
+      case t if t.name == "link" && relHas(t, "amphtml") && t.attr("href").nonEmpty => t.attr("href")
     }.getOrElse("")
 
   def exAmp(spark: SparkSession, sfDir: String): DataFrame = {
@@ -997,45 +824,8 @@ object Structured {
     * JS-string lookalikes never emit.
     */
   def codeBlocks(html: String): Vector[(String, String)] = {
-    val s = html
-    val n = s.length
     val out = ArrayBuffer.empty[(String, String)]
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return out.toVector
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "script", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        i = findClose(s, lt + 7, "script")._2
-      } else if (lt + 6 <= n && s.regionMatches(true, lt + 1, "style", 0, 5) &&
-        (lt + 6 == n || !Character.isLetterOrDigit(s.charAt(lt + 6)))) {
-        i = findClose(s, lt + 6, "style")._2
-      } else if (lt + 4 <= n && s.regionMatches(true, lt + 1, "pre", 0, 3) &&
-        (lt + 4 == n || !Character.isLetterOrDigit(s.charAt(lt + 4)))) {
-        val (_, inner) = parseAttrs(s, lt + 4)
-        val (pEnd, past) = findClose(s, inner, "pre")
-        val body = s.substring(inner, pEnd)
-        // first <code …> child; a pre without one is preformatted text, not code
-        var k = 0
-        var found = false
-        while (!found && k < body.length) {
-          val c = body.indexOf("<code", k)
-          if (c < 0) k = body.length
-          else if (c + 5 < body.length && !Character.isLetterOrDigit(body.charAt(c + 5))) {
-            val (attrs, cs) = parseAttrs(body, c + 5)
-            val (ce, _) = findClose(body, cs, "code")
-            val lang = attr(attrs, "class").split("\\s+")
-              .collectFirst { case t if t.startsWith("language-") => t.substring(9) }
-              .getOrElse("")
-            out += ((lang, Entities.decodeAll(body.substring(cs, ce))))
-            found = true
-          } else k = c + 5
-        }
-        i = past
-      } else i = lt + 1
-    }
+    walk(html) { case t if t.name == "pre" => out ++= preCode(t.body); t.past }
     out.toVector
   }
 
@@ -1089,46 +879,13 @@ object Structured {
     * script/style rawtext skipped.
     */
   def listItems(html: String): Vector[(Int, String, Int, String)] = {
-    val s = html
-    val n = s.length
     val out = ArrayBuffer.empty[(Int, String, Int, String)]
     var lst = 0
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return out.toVector
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "script", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        i = findClose(s, lt + 7, "script")._2
-      } else if (lt + 6 <= n && s.regionMatches(true, lt + 1, "style", 0, 5) &&
-        (lt + 6 == n || !Character.isLetterOrDigit(s.charAt(lt + 6)))) {
-        i = findClose(s, lt + 6, "style")._2
-      } else if (lt + 3 <= n &&
-        (s.regionMatches(true, lt + 1, "ul", 0, 2) || s.regionMatches(true, lt + 1, "ol", 0, 2)) &&
-        (lt + 3 == n || !Character.isLetterOrDigit(s.charAt(lt + 3)))) {
-        val kind = s.substring(lt + 1, lt + 3).toLowerCase(Locale.ROOT)
-        val (_, inner) = parseAttrs(s, lt + 3)
-        val (lEnd, past) = findClose(s, inner, kind)
-        val body = s.substring(inner, lEnd)
-        var ord = 0
-        var k = 0
-        while (k < body.length) {
-          val li = body.indexOf("<li", k)
-          if (li < 0) k = body.length
-          else if (li + 3 < body.length && !Character.isLetterOrDigit(body.charAt(li + 3))) {
-            val (_, is) = parseAttrs(body, li + 3)
-            val (ie, iPast) = findClose(body, is, "li")
-            val raw = body.substring(is, ie).replaceAll("<[^>]*>", " ")
-            out += ((lst, kind, ord, collapseWs(Entities.decodeAll(raw))))
-            ord += 1
-            k = iPast
-          } else k = li + 3
-        }
+    walk(html) {
+      case t if t.name == "ul" || t.name == "ol" =>
+        listItemTexts(t.body).zipWithIndex.foreach { case (item, ord) => out += ((lst, t.name, ord, item)) }
         lst += 1
-        i = past
-      } else i = lt + 1
+        t.past
     }
     out.toVector
   }
@@ -1174,36 +931,11 @@ object Structured {
     * token LIST — `rel="licenses"` is not a match, pinned). Returns
     * (src, href) where src ∈ {"link", "a", ""}.
     */
-  def licenseOf(html: String): (String, String) = {
-    val s = html
-    val n = s.length
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return ("", "")
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "script", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        i = findClose(s, lt + 7, "script")._2
-      } else if (lt + 5 <= n && s.regionMatches(true, lt + 1, "link", 0, 4) &&
-        (lt + 5 == n || !Character.isLetterOrDigit(s.charAt(lt + 5)))) {
-        val (attrs, past) = parseAttrs(s, lt + 5)
-        if (attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("license") &&
-          attr(attrs, "href").nonEmpty)
-          return ("link", attr(attrs, "href"))
-        i = past
-      } else if (lt + 2 <= n && s.regionMatches(true, lt + 1, "a", 0, 1) &&
-        (lt + 2 == n || !Character.isLetterOrDigit(s.charAt(lt + 2)))) {
-        val (attrs, past) = parseAttrs(s, lt + 2)
-        if (attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("license") &&
-          attr(attrs, "href").nonEmpty)
-          return ("a", attr(attrs, "href"))
-        i = past
-      } else i = lt + 1
-    }
-    ("", "")
-  }
+  def licenseOf(html: String): (String, String) =
+    first(html) {
+      case t if (t.name == "link" || t.name == "a") && relHas(t, "license") && t.attr("href").nonEmpty =>
+        (t.name, t.attr("href"))
+    }.getOrElse(("", ""))
 
   /** Normalized license id from a declared href: the Creative Commons
     * `licenses/<code>/` path segment, `cc0` for public-domain marks,
@@ -1266,10 +998,7 @@ object Structured {
     */
   def nextHref(html: String): Option[String] =
     headElems(html).collectFirst {
-      case ("link", attrs)
-        if attr(attrs, "rel").toLowerCase(Locale.ROOT).split("\\s+").contains("next") &&
-          attr(attrs, "href").nonEmpty =>
-        attr(attrs, "href")
+      case t if t.name == "link" && relHas(t, "next") && t.attr("href").nonEmpty => t.attr("href")
     }
 
   /** Pagination-chain assembly — (head, part, url): chains are built from
@@ -1413,30 +1142,8 @@ object Structured {
     * JS-string lookalikes never emit.
     */
   def blockquotes(html: String): Vector[(String, String)] = {
-    val s = html
-    val n = s.length
     val out = ArrayBuffer.empty[(String, String)]
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return out.toVector
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "script", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        i = findClose(s, lt + 7, "script")._2
-      } else if (lt + 6 <= n && s.regionMatches(true, lt + 1, "style", 0, 5) &&
-        (lt + 6 == n || !Character.isLetterOrDigit(s.charAt(lt + 6)))) {
-        i = findClose(s, lt + 6, "style")._2
-      } else if (lt + 11 <= n && s.regionMatches(true, lt + 1, "blockquote", 0, 10) &&
-        (lt + 11 == n || !Character.isLetterOrDigit(s.charAt(lt + 11)))) {
-        val (attrs, inner) = parseAttrs(s, lt + 11)
-        val (bEnd, past) = findClose(s, inner, "blockquote")
-        val raw = s.substring(inner, bEnd).replaceAll("<[^>]*>", " ")
-        out += ((attr(attrs, "cite"), collapseWs(Entities.decodeAll(raw))))
-        i = past
-      } else i = lt + 1
-    }
+    walk(html) { case t if t.name == "blockquote" => out += ((t.attr("cite"), text(t.body))); t.past }
     out.toVector
   }
 
@@ -1483,49 +1190,13 @@ object Structured {
     * pairs; comments and script/style rawtext skipped.
     */
   def dlItems(html: String): Vector[(Int, Int, String, String)] = {
-    val s = html
-    val n = s.length
     val out = ArrayBuffer.empty[(Int, Int, String, String)]
     var dl = 0
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return out.toVector
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "script", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        i = findClose(s, lt + 7, "script")._2
-      } else if (lt + 6 <= n && s.regionMatches(true, lt + 1, "style", 0, 5) &&
-        (lt + 6 == n || !Character.isLetterOrDigit(s.charAt(lt + 6)))) {
-        i = findClose(s, lt + 6, "style")._2
-      } else if (lt + 3 <= n && s.regionMatches(true, lt + 1, "dl", 0, 2) &&
-        (lt + 3 == n || !Character.isLetterOrDigit(s.charAt(lt + 3)))) {
-        val (_, inner) = parseAttrs(s, lt + 3)
-        val (dEnd, past) = findClose(s, inner, "dl")
-        val body = s.substring(inner, dEnd)
-        var term = ""
-        var ord = 0
-        var k = 0
-        while (k < body.length) {
-          val dt = body.indexOf("<dt", k)
-          val dd = body.indexOf("<dd", k)
-          val nxt = if (dt < 0) dd else if (dd < 0) dt else math.min(dt, dd)
-          if (nxt < 0) k = body.length
-          else if (nxt + 3 < body.length && !Character.isLetterOrDigit(body.charAt(nxt + 3))) {
-            val name = if (nxt == dt) "dt" else "dd"
-            val (_, cs) = parseAttrs(body, nxt + 3)
-            val (ce, cPast) = findClose(body, cs, name)
-            val txt = collapseWs(Entities.decodeAll(
-              body.substring(cs, ce).replaceAll("<[^>]*>", " ")))
-            if (name == "dt") term = txt
-            else { out += ((dl, ord, term, txt)); ord += 1 }
-            k = cPast
-          } else k = nxt + 3
-        }
+    walk(html) {
+      case t if t.name == "dl" =>
+        dlPairs(t.body).zipWithIndex.foreach { case ((term, defn), ord) => out += ((dl, ord, term, defn)) }
         dl += 1
-        i = past
-      } else i = lt + 1
+        t.past
     }
     out.toVector
   }
@@ -1584,151 +1255,40 @@ object Structured {
     * instead of flat text — structure survives tokenization.
     */
   def mdBlocks(html: String): Vector[String] = {
-    val s = html
-    val n = s.length
     val out = ArrayBuffer.empty[String]
-    def txt(raw: String): String =
-      collapseWs(Entities.decodeAll(raw.replaceAll("<[^>]*>", " ")))
-    var i = 0
-    while (i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) return out.toVector
-      if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt + 4); i = if (e < 0) n else e + 3
-      } else if (lt + 7 <= n && s.regionMatches(true, lt + 1, "script", 0, 6) &&
-        (lt + 7 == n || !Character.isLetterOrDigit(s.charAt(lt + 7)))) {
-        i = findClose(s, lt + 7, "script")._2
-      } else if (lt + 6 <= n && s.regionMatches(true, lt + 1, "style", 0, 5) &&
-        (lt + 6 == n || !Character.isLetterOrDigit(s.charAt(lt + 6)))) {
-        i = findClose(s, lt + 6, "style")._2
-      } else if (lt + 4 <= n && s.regionMatches(true, lt + 1, "pre", 0, 3) &&
-        (lt + 4 == n || !Character.isLetterOrDigit(s.charAt(lt + 4)))) {
-        val (_, inner) = parseAttrs(s, lt + 4)
-        val (pEnd, past) = findClose(s, inner, "pre")
-        val body = s.substring(inner, pEnd)
-        var k = 0
-        var found = false
-        while (!found && k < body.length) {
-          val c = body.indexOf("<code", k)
-          if (c < 0) k = body.length
-          else if (c + 5 < body.length && !Character.isLetterOrDigit(body.charAt(c + 5))) {
-            val (attrs, cs) = parseAttrs(body, c + 5)
-            val (ce, _) = findClose(body, cs, "code")
-            val lang = attr(attrs, "class").split("\\s+")
-              .collectFirst { case t if t.startsWith("language-") => t.substring(9) }
-              .getOrElse("")
-            out += s"```$lang\n${Entities.decodeAll(body.substring(cs, ce))}\n```"
-            found = true
-          } else k = c + 5
+    walk(html) {
+      case t if t.name == "pre" =>
+        preCode(t.body).foreach { case (lang, code) => out += s"```$lang\n$code\n```" }
+        t.past
+      case t if t.name == "p" =>
+        val x = text(t.body)
+        if (x.nonEmpty) out += x
+        t.past
+      case t if t.name == "ul" || t.name == "ol" =>
+        val items = listItemTexts(t.body).zipWithIndex.map { case (item, k) =>
+          if (t.name == "ul") s"- $item" else s"${k + 1}. $item"
         }
-        i = past
-      } else if (lt + 2 <= n && s.regionMatches(true, lt + 1, "p", 0, 1) &&
-        (lt + 2 == n || !Character.isLetterOrDigit(s.charAt(lt + 2)))) {
-        val (_, inner) = parseAttrs(s, lt + 2)
-        val (pEnd, past) = findClose(s, inner, "p")
-        val t = txt(s.substring(inner, pEnd))
-        if (t.nonEmpty) out += t
-        i = past
-      } else if (lt + 3 <= n &&
-        (s.regionMatches(true, lt + 1, "ul", 0, 2) || s.regionMatches(true, lt + 1, "ol", 0, 2)) &&
-        (lt + 3 == n || !Character.isLetterOrDigit(s.charAt(lt + 3)))) {
-        val kind = s.substring(lt + 1, lt + 3).toLowerCase(Locale.ROOT)
-        val (_, inner) = parseAttrs(s, lt + 3)
-        val (lEnd, past) = findClose(s, inner, kind)
-        val body = s.substring(inner, lEnd)
-        val lines = ArrayBuffer.empty[String]
-        var k = 0
-        while (k < body.length) {
-          val li = body.indexOf("<li", k)
-          if (li < 0) k = body.length
-          else if (li + 3 < body.length && !Character.isLetterOrDigit(body.charAt(li + 3))) {
-            val (_, is) = parseAttrs(body, li + 3)
-            val (ie, iPast) = findClose(body, is, "li")
-            val item = txt(body.substring(is, ie))
-            lines += (if (kind == "ul") s"- $item" else s"${lines.length + 1}. $item")
-            k = iPast
-          } else k = li + 3
-        }
-        if (lines.nonEmpty) out += lines.mkString("\n")
-        i = past
-      } else if (lt + 11 <= n && s.regionMatches(true, lt + 1, "blockquote", 0, 10) &&
-        (lt + 11 == n || !Character.isLetterOrDigit(s.charAt(lt + 11)))) {
-        val (_, inner) = parseAttrs(s, lt + 11)
-        val (bEnd, past) = findClose(s, inner, "blockquote")
-        out += ("> " + txt(s.substring(inner, bEnd)))
-        i = past
-      } else if (lt + 3 <= n && s.regionMatches(true, lt + 1, "dl", 0, 2) &&
-        (lt + 3 == n || !Character.isLetterOrDigit(s.charAt(lt + 3)))) {
-        val (_, inner) = parseAttrs(s, lt + 3)
-        val (dEnd, past) = findClose(s, inner, "dl")
-        val body = s.substring(inner, dEnd)
-        val lines = ArrayBuffer.empty[String]
-        var term = ""
-        var k = 0
-        while (k < body.length) {
-          val dt = body.indexOf("<dt", k)
-          val dd = body.indexOf("<dd", k)
-          val nxt = if (dt < 0) dd else if (dd < 0) dt else math.min(dt, dd)
-          if (nxt < 0) k = body.length
-          else if (nxt + 3 < body.length && !Character.isLetterOrDigit(body.charAt(nxt + 3))) {
-            val name = if (nxt == dt) "dt" else "dd"
-            val (_, cs) = parseAttrs(body, nxt + 3)
-            val (ce, cPast) = findClose(body, cs, name)
-            val t = txt(body.substring(cs, ce))
-            if (name == "dt") term = t else lines += s"$term\n: $t"
-            k = cPast
-          } else k = nxt + 3
-        }
-        if (lines.nonEmpty) out += lines.mkString("\n")
-        i = past
-      } else if (lt + 4 <= n && s.regionMatches(true, lt + 1, "img", 0, 3) &&
-        (lt + 4 == n || !Character.isLetterOrDigit(s.charAt(lt + 4)))) {
-        val (attrs, past) = parseAttrs(s, lt + 4)
-        out += s"![${Entities.decodeAll(attr(attrs, "alt"))}](${attr(attrs, "src")})"
-        i = past
-      } else if (lt + 6 <= n && s.regionMatches(true, lt + 1, "table", 0, 5) &&
-        (lt + 6 == n || !Character.isLetterOrDigit(s.charAt(lt + 6)))) {
-        val (attrs, inner) = parseAttrs(s, lt + 6)
-        val (tEnd, past) = findClose(s, inner, "table")
-        val classes = attr(attrs, "class").split("\\s+").toSet
-        if (classes.contains("data")) {
-          val body = s.substring(inner, tEnd)
-          val rows = ArrayBuffer.empty[String]
-          var nCols = 0
-          var j = 0
-          while (j < body.length) {
-            val tr = body.indexOf("<tr", j)
-            if (tr < 0) j = body.length
-            else {
-              val (_, rowStart) = parseAttrs(body, tr + 3)
-              val (rowEnd, rowPast) = findClose(body, rowStart, "tr")
-              val row = body.substring(rowStart, rowEnd)
-              val cells = ArrayBuffer.empty[String]
-              var k = 0
-              while (k < row.length) {
-                val th = row.indexOf("<th", k)
-                val td = row.indexOf("<td", k)
-                val cell = if (th < 0) td else if (td < 0) th else math.min(th, td)
-                if (cell < 0) k = row.length
-                else {
-                  val name = if (cell == th) "th" else "td"
-                  val (_, cs) = parseAttrs(row, cell + 3)
-                  val (ce, cPast) = findClose(row, cs, name)
-                  cells += txt(row.substring(cs, ce))
-                  k = cPast
-                }
-              }
-              if (rows.isEmpty) nCols = cells.length
-              rows += cells.mkString("| ", " | ", " |")
-              if (rows.length == 1)
-                rows += Seq.fill(nCols)("---").mkString("| ", " | ", " |")
-              j = rowPast
-            }
+        if (items.nonEmpty) out += items.mkString("\n")
+        t.past
+      case t if t.name == "blockquote" =>
+        out += ("> " + text(t.body))
+        t.past
+      case t if t.name == "dl" =>
+        val pairs = dlPairs(t.body)
+        if (pairs.nonEmpty) out += pairs.map { case (term, defn) => s"$term\n: $defn" }.mkString("\n")
+        t.past
+      case t if t.name == "img" =>
+        out += s"![${Entities.decodeAll(t.attr("alt"))}](${t.attr("src")})"
+        t.end
+      case t if t.name == "table" =>
+        if (isDataTable(t)) {
+          val rows = tableRows(t.body)
+          if (rows.nonEmpty) {
+            val rule = Vector.fill(rows.head.length)("---")
+            out += (rows.head +: rule +: rows.tail).map(_.mkString("| ", " | ", " |")).mkString("\n")
           }
-          if (rows.nonEmpty) out += rows.mkString("\n")
         }
-        i = past
-      } else i = lt + 1
+        t.past
     }
     out.toVector
   }

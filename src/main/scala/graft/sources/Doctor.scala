@@ -24,9 +24,11 @@ import org.apache.spark.sql.functions._
   *  - INFO stale-bloom: `_bloom` sidecars exist but newer data files lack
   *    one — point lookups on those files degrade to scans (correct, slower).
   *  - DEEP misplaced-rows (`--deep`): every row's url re-hashed against the
-  *    layout function and compared to its file's bucket= directory — zero
-  *    is the invariant bucket pruning and `lookup` rely on. Distributed;
-  *    returns ONE count per bucket, never rows.
+  *    layout function and compared to its file's bucket= directory, and its
+  *    warc_ts compared to its file's day= directory ([[PageTable.place]]'s
+  *    two expressions) — zero is the invariant bucket and day pruning and
+  *    `lookup` rely on. Distributed; returns ONE count per misplaced
+  *    (bucket, day) leaf, never rows.
   */
 object Doctor {
 
@@ -38,8 +40,8 @@ object Doctor {
     * ([[Manifests.listingDf]]), the manifests are text scans, and the
     * hole/orphan diffs are anti-joins; only findings-sized results reach
     * the driver. Without a session (no-cluster triage) the same checks run
-    * as a driver walk. `deep` additionally re-hashes every ROW's url
-    * against the layout function (one data scan; requires the session).
+    * as a driver walk. `deep` additionally re-derives every ROW's bucket and
+    * day (one data scan; requires the session).
     */
   def audit(tableDir: String,
             spark: Option[SparkSession] = None,
@@ -166,18 +168,18 @@ object Doctor {
     (spark, buckets) match {
       case (Some(s), Some(nb)) if deep =>
         // a diagnosis tool must REPORT an unreadable table, never crash on
-        // it; the expected-bucket expression is PageTable's own layout
-        // function, so the two can never silently drift apart
+        // it; the expected bucket and day are PageTable's own placement
+        // expressions, so the two can never silently drift apart
         try {
+          val day = col("day").cast("string")
           val misplaced = s.read.parquet(s"$tableDir/data")
-            .select(col("url"), col("bucket"))
-            .withColumn("want", PageTable.bucketCol(nb))
-            .filter(col("bucket") =!= col("want"))
-            .groupBy("bucket").count().collect()
+            .filter(col("bucket") =!= PageTable.bucketCol(nb) || !(day <=> PageTable.dayCol))
+            .groupBy(col("bucket"), day.as("day")).count().collect()
           misplaced.foreach { r =>
             out += Finding("ERROR", "misplaced-rows",
-              s"bucket ${r.getAs[Int]("bucket")}: ${r.getAs[Long]("count")} row(s) " +
-                "hash elsewhere — bucket pruning/lookup would miss them")
+              s"bucket=${r.getAs[Int]("bucket")}/day=${r.getAs[String]("day")}: " +
+                s"${r.getAs[Long]("count")} row(s) belong in another leaf — " +
+                "bucket/day pruning and lookup would miss them")
           }
         } catch {
           case e: Exception =>

@@ -33,6 +33,9 @@ object PageTable {
   def bucketCol(numBuckets: Int) =
     pmod(xxhash64(col("url")), lit(numBuckets.toLong)).cast("int")
 
+  /** The `day` partition value of a row, from its `warc_ts`. */
+  def dayCol = date_format(col("warc_ts"), "yyyy-MM-dd")
+
   /** Place NEW pages rows in the layout: `bucket` from the layout function
     * and `day` from `warc_ts`, each replacing any value the caller supplied
     * (readers locate a url by the layout function alone), clustered by
@@ -44,7 +47,7 @@ object PageTable {
   def place(rows: DataFrame, numBuckets: Int): DataFrame =
     rows
       .withColumn("bucket", bucketCol(numBuckets))
-      .withColumn("day", date_format(col("warc_ts"), "yyyy-MM-dd"))
+      .withColumn("day", dayCol)
       .repartition(col("bucket"))
 
   def write(pages: Dataset[Page], dir: String,

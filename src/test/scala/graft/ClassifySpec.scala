@@ -22,7 +22,7 @@ class ClassifySpec extends AnyFunSuite {
   private val cases: Seq[(String, Vector[RawBlock], Seq[Int])] = Seq(
     // a short clean block between two base blocks is smoothed in, from the
     // second candidate on; 24 chars is the longest it can be, as a clean
-    // block of DENSE_MIN_LEN chars is dense (so SMOOTH_MAX_LEN never binds)
+    // block of DENSE_MIN_LEN chars is dense (so smoothing needs no length cap)
     ("smooth-second", Vector(b(0, 1, D), b(1, 2, 15), b(2, 1, D)), Seq(0, 1, 2)),
     ("smooth-run", Vector(b(0, 1, D), b(1, 2, 15), b(2, 1, D), b(3, 2, 24), b(4, 1, D)),
       Seq(0, 1, 2, 3, 4)),

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins for the integrity audit (`Main doctor`): a healthy table is clean;
   * each planted fault surfaces as exactly its finding code; the deep check
-  * catches rows whose file lies about their bucket.
+  * catches rows whose file lies about their bucket or their day.
   */
 class DoctorSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -87,5 +87,18 @@ class DoctorSpec extends AnyFunSuite {
     val c = codes(dir, deep = true)
     assert(c.contains("misplaced-rows"))
     assert(c.contains("orphan-files"))
+  }
+
+  test("doctor --deep: a file moved under a wrong day leaf surfaces as misplaced rows") {
+    val dir = freshTable()
+    val src = Snapshots.walkData(new java.io.File(dir, "data")).head
+    // same bucket, a day no row has; the move also leaves a manifest hole
+    val dstDir = new java.io.File(src.getParentFile.getParentFile, "day=1999-01-01")
+    dstDir.mkdirs()
+    java.nio.file.Files.move(src.toPath, new java.io.File(dstDir, src.getName).toPath)
+    val findings = Doctor.audit(dir, Some(spark), deep = true)
+    val misplaced = findings.filter(_.code == "misplaced-rows")
+    assert(misplaced.nonEmpty && misplaced.forall(_.detail.contains("/day=1999-01-01:")), findings)
+    assert(findings.exists(_.code == "manifest-hole"), findings)
   }
 }

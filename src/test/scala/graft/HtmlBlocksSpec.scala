@@ -232,4 +232,25 @@ class HtmlBlocksSpec extends AnyFunSuite {
     assert(m("""<meta name="description" content="d"><meta charset="gbk">""")
       == Meta.PageMeta("", "", "gbk"))
   }
+  test("one HTML lexer: no attribute loop or comment skip under operators outside HtmlLex, HtmlBlocks, Meta and Links") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val rules = Seq(
+      "an attribute-name scan" -> "a != '=' && a != '>' && a != '/'",
+      "a comment skip" -> "startsWith(\"<!--\"")
+    val lexers = Set("HtmlLex.scala", "HtmlBlocks.scala", "Meta.scala", "Links.scala")
+    val (home, files) = Files.walk(Paths.get("src/main/scala/graft/operators")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .partition(_.getFileName.toString == "HtmlLex.scala")
+    assert(files.size > 10, s"only ${files.size} sources under operators")
+    // the lexer itself carries both, so the rules cannot go stale
+    val lexer = new String(Files.readAllBytes(home.head), "UTF-8")
+    rules.foreach { case (what, code) => assert(lexer.contains(code), s"HtmlLex has no $what") }
+    val hits = for {
+      f <- files if !lexers(f.getFileName.toString)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      (what, code) <- rules if line.contains(code)
+    } yield s"$f:${i + 1}: $what: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 }

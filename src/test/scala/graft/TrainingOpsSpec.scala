@@ -120,12 +120,24 @@ class TrainingOpsSpec extends AnyFunSuite {
     val cells = Structured.dataTableCells(html)
     // only the class-token 'data' table; entity + markup-stripped cells
     assert(cells == Vector((0, 0, 0, "H & 1"), (0, 1, 0, "bold text")), cells)
+    // a commented-out data table is skipped and an upper-case one is read:
+    // the cell harvest sees exactly the tables the markdown serializer renders
+    val cased =
+      """<!-- <table class="data"><tr><td>gone</td></tr></table> -->
+        |<TABLE CLASS="data"><TR><TH>Up</TH></TR><TR><TD>v</TD></TR></TABLE>""".stripMargin
+    assert(Structured.dataTableCells(cased) == Vector((0, 0, 0, "Up"), (0, 1, 0, "v")),
+      Structured.dataTableCells(cased))
+    assert(Structured.mdBlocks(cased) == Vector("| Up |\n| --- |\n| v |"), Structured.mdBlocks(cased))
     // canonical: rel token list, attr order swap, head-scoped, first wins
     assert(Structured.canonicalHref(
       """<head><link href="/a" rel="alternate canonical"><link rel="canonical" href="/b"></head>""") == "/a")
     assert(Structured.canonicalHref(
       """<head><title>x</title></head><body><link rel="canonical" href="/late"></body>""") == "")
     assert(Structured.canonicalHref("<p>none</p>") == "")
+    // a canonical lookalike in a script string is not a declaration
+    assert(Structured.canonicalHref(
+      """<head><script>var c = '<link rel="canonical" href="/js">';</script>""" +
+        """<link rel="canonical" href="/real"></head>""") == "/real")
   }
 
   test("body-surface scanners: code blocks, lists, license, rel=next — general rules") {
@@ -301,6 +313,10 @@ class TrainingOpsSpec extends AnyFunSuite {
       """<!-- <time datetime="1999-01-01"> --><body><time>no attr</time>
         |<time class=x datetime='2024-05-06'>May 6</time></body>""".stripMargin)
       == "2024-05-06")
+    // a time lookalike in a script string is not a visible timestamp
+    assert(Structured.timeDatetime(
+      """<script>var t = '<time datetime="1999-01-01">';</script>""" +
+        """<time datetime="2024-05-06">May 6</time>""") == "2024-05-06")
 
     // corpus-level: every precedence class has witnesses and the winner is
     // the highest-priority source present
