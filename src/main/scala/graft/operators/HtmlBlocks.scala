@@ -143,6 +143,20 @@ object HtmlBlocks {
     -1
   }
 
+  private def slotOf(name: String): Int = slotOf(name.toCharArray, 0, name.length)
+
+  // the slots of the names the implied-end rules look up
+  private val S_LI = slotOf("li")
+  private val S_UL = slotOf("ul")
+  private val S_OL = slotOf("ol")
+  private val S_TD = slotOf("td")
+  private val S_TH = slotOf("th")
+  private val S_TR = slotOf("tr")
+  private val S_TABLE = slotOf("table")
+  private val S_DD = slotOf("dd")
+  private val S_DT = slotOf("dt")
+  private val S_DL = slotOf("dl")
+
   /** `a[from, from + len)` equals lowercase ASCII `lit` under ASCII folding. */
   private def eqFolded(a: Array[Char], from: Int, len: Int, lit: String): Boolean =
     len == lit.length && {
@@ -182,8 +196,14 @@ object HtmlBlocks {
     false
   }
 
-  /** One page's tokenizer state. The open-element stack is two parallel
-    * arrays (tag, flags); `cIds` holds the nodeIds of the open containers.
+  /** One page's tokenizer state. The open-element stack is parallel
+    * arrays; `cIds` holds the nodeIds of the open containers. Each stack
+    * entry also links to the next open element of its name below it and to
+    * the nearest open block element at or below it, and the topmost open
+    * element of each name is kept by its slot. So an end tag, an implied end
+    * and a block's tag cost O(1) plus the pops they make, whatever the
+    * depth of the stack: a page of unmatched end tags, or of blocks under
+    * thousands of open inline elements, tokenizes in linear time.
     */
   private final class Tokenizer(s: String) {
     private val a = s.toCharArray
@@ -199,7 +219,17 @@ object HtmlBlocks {
 
     private var stTag = new Array[String](16)
     private var stFlags = new Array[Int](16)
+    // slot of the entry's name (see `slotFor`)
+    private var stSlot = new Array[Int](16)
+    // 1 + index of the next open element of the same name below, 0 if none
+    private var stSame = new Array[Int](16)
+    // index of the nearest open block element at or below, -1 if none
+    private var stBlock = new Array[Int](16)
     private var sp = 0
+    // 1 + index of the topmost open element of each name, 0 if none, by slot
+    private var topBySlot = new Array[Int](TAB_MASK + 1)
+    // the page-local slots of the names outside the table
+    private var localSlots: java.util.HashMap[String, Integer] = null
     private var cIds = new Array[Int](16)
     private var cp = 0
     private var dropDepth = 0
@@ -238,14 +268,25 @@ object HtmlBlocks {
         }
       }
 
-    private def currentBlockTag(): String = {
-      var i = sp - 1
-      while (i >= 0) {
-        if ((stFlags(i) & F_BLOCK) != 0) return stTag(i)
-        i -= 1
+    private def currentBlockTag(): String =
+      if (sp > 0 && stBlock(sp - 1) >= 0) stTag(stBlock(sp - 1)) else "body"
+
+    /** The slot of the name `tag`: its table slot `slot` when it has one,
+      * else a page-local slot after the table's, given on first sight.
+      */
+    private def slotFor(tag: String, slot: Int): Int =
+      if (slot >= 0) slot
+      else {
+        if (localSlots == null) localSlots = new java.util.HashMap[String, Integer]
+        val known = localSlots.get(tag)
+        if (known != null) known
+        else {
+          val fresh = TAB_MASK + 1 + localSlots.size
+          localSlots.put(tag, fresh)
+          if (fresh == topBySlot.length) topBySlot = java.util.Arrays.copyOf(topBySlot, fresh * 2)
+          fresh
+        }
       }
-      "body"
-    }
 
     private def emitBlock(): Unit = {
       if (blen > 0) {
@@ -268,14 +309,21 @@ object HtmlBlocks {
       pendingSpace = false
     }
 
-    private def push(tag: String, flags: Int): Unit = {
+    private def push(tag: String, slot: Int, flags: Int): Unit = {
       if (sp == stTag.length) {
         stTag = java.util.Arrays.copyOf(stTag, sp * 2)
         stFlags = java.util.Arrays.copyOf(stFlags, sp * 2)
+        stSlot = java.util.Arrays.copyOf(stSlot, sp * 2)
+        stSame = java.util.Arrays.copyOf(stSame, sp * 2)
+        stBlock = java.util.Arrays.copyOf(stBlock, sp * 2)
       }
       nodeCounter += 1
       stTag(sp) = tag
       stFlags(sp) = flags
+      stSlot(sp) = slot
+      stSame(sp) = topBySlot(slot)
+      stBlock(sp) = if ((flags & F_BLOCK) != 0) sp else if (sp > 0) stBlock(sp - 1) else -1
+      topBySlot(slot) = sp + 1
       sp += 1
       if ((flags & F_DROP) != 0) dropDepth += 1
       if ((flags & F_BOILER) != 0) boilerDepth += 1
@@ -291,6 +339,7 @@ object HtmlBlocks {
       if (sp > 0) {
         sp -= 1
         val f = stFlags(sp)
+        topBySlot(stSlot(sp)) = stSame(sp)
         stTag(sp) = null
         if ((f & F_DROP) != 0) dropDepth -= 1
         if ((f & F_BOILER) != 0) boilerDepth -= 1
@@ -298,20 +347,18 @@ object HtmlBlocks {
         if ((f & F_CONTAINER) != 0 && cp > 0) cp -= 1
       }
 
-    /** Pop until tag found (inclusive); no-op if absent. */
-    private def popTo(tag: String): Unit = {
-      var i = sp - 1
-      while (i >= 0 && stTag(i) != tag) i -= 1
+    /** Pop until the name of slot `slot` is found (inclusive); no-op if absent. */
+    private def popTo(slot: Int): Unit = {
+      val i = topBySlot(slot) - 1
       if (i >= 0) while (sp > i) pop()
     }
 
-    /** Pop down to the nearest open `t1`/`t2` above the nearest `stop1`/`stop2`. */
-    private def closeAbove(t1: String, t2: String, stop1: String, stop2: String): Unit = {
-      var i = sp - 1
-      while (i >= 0 && stTag(i) != stop1 && stTag(i) != stop2) {
-        if (stTag(i) == t1 || stTag(i) == t2) { while (sp > i) pop(); i = -1 }
-        else i -= 1
-      }
+    /** Pop down to the nearest open `t1`/`t2` above the nearest `stop1`/`stop2`
+      * (all four are table slots).
+      */
+    private def closeAbove(t1: Int, t2: Int, stop1: Int, stop2: Int): Unit = {
+      val top = math.max(topBySlot(t1), topBySlot(t2))
+      if (top > math.max(topBySlot(stop1), topBySlot(stop2))) while (sp >= top) pop()
     }
 
     /** Implied end tags before opening `tag`. */
@@ -319,10 +366,10 @@ object HtmlBlocks {
       if ((flags & F_BLOCK) != 0) while (sp > 0 && stTag(sp - 1) == "p") pop()
       tag match {
         // close an open li above the nearest list boundary
-        case "li" => closeAbove("li", "li", "ul", "ol")
-        case "td" | "th" => closeAbove("td", "th", "tr", "table")
-        case "tr" => closeAbove("tr", "tr", "table", "table")
-        case "dd" | "dt" => closeAbove("dd", "dt", "dl", "dl")
+        case "li" => closeAbove(S_LI, S_LI, S_UL, S_OL)
+        case "td" | "th" => closeAbove(S_TD, S_TH, S_TR, S_TABLE)
+        case "tr" => closeAbove(S_TR, S_TR, S_TABLE, S_TABLE)
+        case "dd" | "dt" => closeAbove(S_DD, S_DT, S_DL, S_DL)
         case _ => ()
       }
     }
@@ -383,7 +430,7 @@ object HtmlBlocks {
               while (j < n && a(j) != '>') j += 1
               i = if (j < n) j + 1 else n
               if (slot >= 0 && (TAB_FLAGS(slot) & F_BLOCK) != 0) emitBlock()
-              popTo(tag)
+              popTo(slotFor(tag, slot))
             }
           } else if (isNameStart(c1)) {
             i = startTag(i)
@@ -469,7 +516,7 @@ object HtmlBlocks {
         impliedEnds(tag, tagFlags)
         val stop =
           (idAttr.nonEmpty && isStopToken(idAttr)) || (classAttr.nonEmpty && stopClassed(classAttr))
-        push(tag, if (stop) tagFlags | F_BOILER else tagFlags)
+        push(tag, slotFor(tag, slot), if (stop) tagFlags | F_BOILER else tagFlags)
         if ((tagFlags & F_RAWTEXT) != 0) {
           // skip to matching close tag, content dropped entirely
           val closeAt = closeTagAt(tag, next)

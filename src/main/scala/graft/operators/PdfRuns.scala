@@ -197,10 +197,14 @@ object PdfRuns {
   private val PagesDictRe = "/Type\\s*/Pages".r
   private val PageDictRe = "/Type\\s*/Page(?![a-zA-Z])".r
   private val KidsRe = "/Kids\\s*\\[([^\\]]*)\\]".r
-  private val RefRe = "(\\d+)\\s+\\d+\\s+R".r
+  // a reference or an object header starts only where a digit run starts:
+  // a match from inside a run sees the run's own suffix, so it fails exactly
+  // when the match from the run's start does, and a long run of digits is
+  // scanned once, not once per digit
+  private val RefRe = "(?<![0-9])(\\d+)\\s+\\d+\\s+R".r
   private val ContentsArrRe = "/Contents\\s*\\[([^\\]]*)\\]".r
   private val ContentsRefRe = "/Contents\\s+(\\d+)\\s+\\d+\\s+R".r
-  private val ObjHeaderRe = "(\\d+)\\s+\\d+\\s+obj".r
+  private val ObjHeaderRe = "(?<![0-9])(\\d+)\\s+\\d+\\s+obj".r
 
   /** Map of content-stream object number -> 0-based page ordinal, by walking
     * the page tree (`/Kids` DFS, page order = Kids order). Empty map when no

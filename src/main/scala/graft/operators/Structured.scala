@@ -46,6 +46,22 @@ object Structured {
   private def relHas(t: Tag, token: String): Boolean =
     t.attr("rel").toLowerCase(Locale.ROOT).split("\\s+").contains(token)
 
+  /** A non-empty run of ASCII digits as a Long; None for any other string
+    * (a sign, a space, a non-ASCII digit) and for a value past
+    * `Long.MaxValue`. The oracles read these numbers as `[0-9]+`.
+    */
+  private def digitsLong(s: String): Option[Long] = {
+    var v = 0L
+    var k = 0
+    while (k < s.length) {
+      val d = s.charAt(k) - '0'
+      if (d < 0 || d > 9 || v > (Long.MaxValue - d) / 10) return None
+      v = v * 10 + d
+      k += 1
+    }
+    if (s.isEmpty) None else Some(v)
+  }
+
   /** A `<table>` whose class attribute carries the `data` token. */
   private def isDataTable(t: Tag): Boolean = t.attr("class").split("\\s+").contains("data")
 
@@ -226,8 +242,10 @@ object Structured {
   /** First head `<link rel="canonical" href=…>` target, or "" when none is
     * declared (rel is a token list).
     */
-  def canonicalHref(html: String): String =
-    headElems(html).collectFirst {
+  def canonicalHref(html: String): String = canonicalOf(headElems(html))
+
+  private def canonicalOf(head: Vector[Tag]): String =
+    head.collectFirst {
       case t if t.name == "link" && relHas(t, "canonical") && t.attr("href").nonEmpty =>
         t.attr("href")
     }.getOrElse("")
@@ -627,13 +645,9 @@ object Structured {
   def imageHarvest(html: String): Vector[(String, String, String, Option[Long], Option[Long])] = {
     val out = ArrayBuffer.empty[(String, String, String, Option[Long], Option[Long])]
 
-    def dim(t: Tag, name: String): Option[Long] = {
-      val v = t.attr(name)
-      if (v.nonEmpty && v.forall(_.isDigit)) Some(v.toLong) else None
-    }
     def imgOf(t: Tag, figcap: String): Unit =
       out += ((t.attr("src"), Entities.decodeAll(t.attr("alt")), figcap,
-        dim(t, "width"), dim(t, "height")))
+        digitsLong(t.attr("width")), digitsLong(t.attr("height"))))
 
     walk(html) {
       case t if t.name == "figure" =>
@@ -737,20 +751,20 @@ object Structured {
     * Soft redirects are crawl-side duplicate edges: the refreshing page's
     * content is chrome, the target carries the real document.
     */
-  def metaRefresh(html: String): Option[(Long, String)] =
-    headElems(html).collectFirst {
+  def metaRefresh(html: String): Option[(Long, String)] = refreshOf(headElems(html))
+
+  private def refreshOf(head: Vector[Tag]): Option[(Long, String)] =
+    head.collectFirst {
       case t if t.name == "meta" && t.attr("http-equiv").equalsIgnoreCase("refresh") =>
         t.attr("content")
     }.flatMap { c =>
       val semi = c.indexOf(';')
       if (semi < 0) None
       else {
-        val d = c.substring(0, semi).trim
         val rest = c.substring(semi + 1).trim
         val eq = rest.toLowerCase(Locale.ROOT).indexOf("url=")
-        if (d.nonEmpty && d.forall(_.isDigit) && eq >= 0)
-          Some((d.toLong, rest.substring(eq + 4).trim))
-        else None
+        if (eq < 0) None
+        else digitsLong(c.substring(0, semi).trim).map((_, rest.substring(eq + 4).trim))
       }
     }
 
@@ -783,8 +797,10 @@ object Structured {
     * form site-declared duplicate pairs with their canonical exactly like
     * rel=canonical variants, so the dedup frontier folds them first.
     */
-  def ampHref(html: String): String =
-    headElems(html).collectFirst {
+  def ampHref(html: String): String = ampOf(headElems(html))
+
+  private def ampOf(head: Vector[Tag]): String =
+    head.collectFirst {
       case t if t.name == "link" && relHas(t, "amphtml") && t.attr("href").nonEmpty => t.attr("href")
     }.getOrElse("")
 
@@ -1465,18 +1481,20 @@ object Structured {
     * alias of its declared target — self-canonical is NOT an edge),
     * rel=amphtml (the declared AMP mirror is the alias of THIS page — note
     * the flipped direction), and meta-refresh (the refreshing page is
-    * chrome; its target carries the document).
+    * chrome; its target carries the document). The head is walked once
+    * and all three channels are picked from it.
     */
   def aliasEdges(url: String, html: String): Seq[(String, String, String)] = {
-    val c = canonicalHref(html) match {
+    val head = headElems(html)
+    val c = canonicalOf(head) match {
       case t if t.nonEmpty && t != url => Seq((url, t, "canonical"))
       case _ => Seq()
     }
-    val a = ampHref(html) match {
+    val a = ampOf(head) match {
       case "" => Seq()
       case t => Seq((t, url, "amp"))
     }
-    val r = metaRefresh(html) match {
+    val r = refreshOf(head) match {
       case Some((_, t)) if t != url => Seq((url, t, "refresh"))
       case _ => Seq()
     }

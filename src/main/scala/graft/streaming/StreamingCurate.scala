@@ -23,7 +23,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     half-written batch cannot anti-join itself away on retry;
   *   - the quality gate (length floor) is per-row map-side; within-batch
   *     dedup is one fp-keyed window; the history anti-join shares that
-  *     fp partitioning.
+  *     fp partitioning;
+  *   - both sinks write [[graft.operators.Curate.CODEC]] (zstd), as the
+  *     batch pipeline does: the corpus is the bytes a run leaves behind and
+  *     every later batch reads the fingerprint history back.
   */
 object StreamingCurate {
 
@@ -85,9 +88,11 @@ object StreamingCurate {
           .select("batch_id", "url", "warc_ts", "lang", "contentKind",
             "n_tok", "fp", "text")
           .localCheckpoint() // one computation feeds both sinks
-        out.write.mode("overwrite").partitionBy("batch_id").parquet(outDir)
+        out.write.mode("overwrite").option("compression", Curate.CODEC)
+          .partitionBy("batch_id").parquet(outDir)
         out.select("batch_id", "fp")
-          .write.mode("overwrite").partitionBy("batch_id").parquet(fpDir)
+          .write.mode("overwrite").option("compression", Curate.CODEC)
+          .partitionBy("batch_id").parquet(fpDir)
         ()
       }
       .start()

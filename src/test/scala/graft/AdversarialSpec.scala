@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Extract, ScalarExtract}
+import graft.operators.{Extract, HtmlBlocks, ScalarExtract}
 import graft.sources.Corpus
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
@@ -203,5 +203,23 @@ class AdversarialSpec extends AnyFunSuite {
     assert(soup.contains("�"))
     assert(soup.contains("¬arealentityname;"))
     assert(soup.contains("café ²"))
+  }
+
+  test("hostile HTML shapes tokenize within a multiple of a benign page of the same size") {
+    // a tokenizer that walks the open-element stack per tag takes seconds
+    // on these shapes at 384 KB and hours at 5 MB
+    val shapes = Seq(
+      "unmatched end tags" -> Hostile.unmatchedEnds _,
+      "list items with no list open" -> Hostile.orphanItems _,
+      "blocks under a deep inline stack" -> Hostile.blocksUnderInline _)
+    for (size <- Seq(384 * 1024, 5 * 1024 * 1024)) {
+      val benignMs = Hostile.bestMs(5)(HtmlBlocks.blocks(Hostile.article(size)))
+      val boundMs = Hostile.MULTIPLE * math.max(benignMs, 1.0)
+      val slow = shapes.collect {
+        case (name, shape) if !Hostile.finishesWithin(boundMs)(HtmlBlocks.blocks(shape(size))) => name
+      }
+      assert(slow.isEmpty, f"${slow.mkString(", ")} at $size chars: over $boundMs%.0f ms " +
+        f"(${Hostile.MULTIPLE}× a benign page's $benignMs%.1f ms)")
+    }
   }
 }

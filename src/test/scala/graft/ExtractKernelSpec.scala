@@ -85,6 +85,23 @@ class ExtractKernelSpec extends AnyFunSuite {
     assertSameBlocks("<div class='" + "nav-x " * 5000 + "'>kept?</div>", "long class")
   }
 
+  test("tokenizer: the hostile shapes, and tag soup biased to them, equal the reference") {
+    Seq("unmatched ends" -> Hostile.unmatchedEnds _, "orphan items" -> Hostile.orphanItems _,
+      "blocks under inline" -> Hostile.blocksUnderInline _)
+      .foreach { case (name, shape) => assertSameBlocks(shape(20000), name) }
+    // deep inline stacks over list, table and definition-list boundaries,
+    // with end tags that match nothing, or something far below the top
+    val biased: Gen[String] = Gen.listOf(Gen.frequency(
+      4 -> Gen.oneOf("<b>", "<i>", "<span>", "<a href=x>", "<custom>"),
+      2 -> Gen.oneOf("</b>", "</i>", "</span>", "</a>", "</custom>", "</x>"),
+      3 -> Gen.oneOf("<li>", "</li>", "<ul>", "</ul>", "<ol>", "</ol>", "<td>", "<th>",
+        "</td>", "<tr>", "</tr>", "<table>", "</table>", "<dd>", "<dt>", "<dl>", "</dl>"),
+      2 -> Gen.oneOf("<p>", "</p>", "<div>", "</div>", "<br>", "<nav>", "</nav>"),
+      3 -> Gen.oneOf("t", "x y", " ")
+    )).map(_.mkString)
+    samples(biased, 1500).zipWithIndex.foreach { case (s, i) => assertSameBlocks(s, s"biased $i") }
+  }
+
   test("tokenizer output does not depend on the JVM default locale") {
     val html = "<DIV CLASS=\"SIDEBAR\"><P>Menu links here</P></DIV><LI>item one</LI>" +
       "<DIV ID=\"COMMENTS\"><P>Say something</P></DIV><TITLE>t</TITLE><P>Body text</P>"

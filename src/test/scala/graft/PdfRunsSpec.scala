@@ -171,6 +171,19 @@ class PdfRunsSpec extends AnyFunSuite {
     }
   }
 
+  test("a long digit run in a multi-stream PDF parses within a multiple of a letter run") {
+    // an object-header scan that retries a run from every digit in it takes
+    // a minute at 80,000 digits and about 25 at 384 KB
+    val size = 384 * 1024
+    val letters = Hostile.pdfPadded(size, 'x')
+    val digits = Hostile.pdfPadded(size, '7')
+    val benignMs = Hostile.bestMs(5)(PdfRuns.parse(letters))
+    val boundMs = Hostile.MULTIPLE * math.max(benignMs, 1.0)
+    assert(Hostile.finishesWithin(boundMs)(PdfRuns.parse(digits)),
+      f"${digits.length} bytes: over $boundMs%.0f ms (${Hostile.MULTIPLE}× the letter run's $benignMs%.1f ms)")
+    assert(PdfRuns.parse(digits) == PdfRuns.parse(letters))
+  }
+
   test("corpus PDFs round-trip through the parser deterministically") {
     val c = Corpus.pdfContent(42L, 7L, "en")
     val a = PdfRuns.parse(pdf(c)).get

@@ -14,6 +14,26 @@ class TrainingOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   private val SF = "/root/testdata/sf0.001"
 
+  /** The codec of every column chunk of every parquet part file under
+    * `dir`, read from the footers with parquet-hadoop.
+    */
+  private def chunkCodecs(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val files =
+      try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toVector
+      finally walk.close()
+    assert(files.nonEmpty, s"no parquet files under $dir")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    files.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(f.toString), conf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+      finally r.close()
+    }.toSet
+  }
+
   test("exact dedup finds every injected duplicate") {
     val r = Dedup.exact(spark, SF).filter(col("n_copies") >= 2).collect()
     // every 10th doc_id is duplicated with +1000000
@@ -275,6 +295,10 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(Structured.aliasEdges(u,
       """<head><meta http-equiv="refresh" content="3;url=https://s.example.org/moved"></head>""")
       == Seq((u, "https://s.example.org/moved", "refresh")))
+    // an unparsable refresh delay is no edge, and the other channels stand
+    assert(Structured.aliasEdges(u,
+      """<head><link rel="canonical" href="/c"><meta http-equiv="refresh" content="99999999999999999999;url=/t"></head>""")
+      == Seq((u, "/c", "canonical")))
     // all three channels stack
     assert(Structured.aliasEdges(u,
       """<head><link rel="canonical" href="/c"><link rel="amphtml" href="/m"><meta http-equiv="refresh" content="0;url=/t"></head>""")
@@ -355,6 +379,15 @@ class TrainingOpsSpec extends AnyFunSuite {
       """<head><meta http-equiv="refresh" content="30"></head>""").isEmpty)
     assert(Structured.metaRefresh(
       """<head><meta http-equiv="refresh" content="x;url=/y"></head>""").isEmpty)
+    // a delay past Long.MaxValue, or in non-ASCII digits (which the
+    // oracle's [0-9]+ never matches), is malformed too
+    assert(Structured.metaRefresh(
+      """<head><meta http-equiv="refresh" content="99999999999999999999;url=/y"></head>""").isEmpty)
+    assert(Structured.metaRefresh(
+      """<head><meta http-equiv="refresh" content="٣;url=/y"></head>""").isEmpty)
+    assert(Structured.metaRefresh(
+      """<head><meta http-equiv="refresh" content="9223372036854775807;url=/y"></head>""")
+      .contains((Long.MaxValue, "/y")))
 
     // amphtml: rel token list; body decoy out of scope
     assert(Structured.ampHref(
@@ -371,12 +404,17 @@ class TrainingOpsSpec extends AnyFunSuite {
         |<figcaption>Cap <b>one</b>  here</figcaption></figure>
         |<img src='/b.png' alt="">
         |<img src=/c.gif>
-        |<figure><img src="/d.jpg" alt="d"></figure>""".stripMargin)
+        |<figure><img src="/d.jpg" alt="d"></figure>
+        |<img src="/e.jpg" width="99999999999999999999" height="٣٠">
+        |<img src="/f.jpg" width="+5" height="9223372036854775807">""".stripMargin)
+    // a dim past Long.MaxValue, in non-ASCII digits or signed is null
     assert(rows == Vector(
       ("/a.jpg", "A & B", "Cap one here", Some(320L), Some(180L)),
       ("/b.png", "", "", None, None),
       ("/c.gif", "", "", None, None),
-      ("/d.jpg", "d", "", None, None)
+      ("/d.jpg", "d", "", None, None),
+      ("/e.jpg", "", "", None, None),
+      ("/f.jpg", "", "", None, Some(Long.MaxValue))
     ), rows)
   }
 
@@ -1189,6 +1227,10 @@ class TrainingOpsSpec extends AnyFunSuite {
     val kept = spark.read.parquet(out).select("url").collect().map(_.getString(0))
     assert(kept.length == kept.distinct.length, "a repeated url survived exact dedup twice")
     assert(kept.exists(urls), "no repeated url reached the corpus")
+    // every output, artifacts and corpus, is zstd whatever the session codec
+    Seq(out, s"$out-extracted", s"$out-linededup", s"$out-cut").foreach { d =>
+      assert(chunkCodecs(d) == Set("ZSTD"), d)
+    }
   }
 
   test("substring cut passes the other columns through; a repeated doc keeps one copy's spans") {
@@ -1752,5 +1794,8 @@ class TrainingOpsSpec extends AnyFunSuite {
     // in the history anti-join, so at most the 50 new pages' docs landed
     val added = r2.count() - r1.count()
     assert(added > 0 && added <= 50, s"drop-2 added $added docs")
+    // both sinks are zstd, as the batch pipeline's outputs are
+    assert(chunkCodecs(outDir) == Set("ZSTD"))
+    assert(chunkCodecs(fpDir) == Set("ZSTD"))
   }
 }
